@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line.
   *
@@ -21,15 +19,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local(32)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up: parquet footers + whole-stage codegen + shuffle machinery.
@@ -370,10 +363,8 @@ object Bench {
         hotTried.mkString("[", ",", "]")},"hot_rows":${finalHot.size},""" +
       s""""hot_row_names":${
         finalHot.sorted.take(24).map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    // effective index parameters (ADVICE r19): the graded ANN queries'
-    // semantics move with these — record what this sweep actually ran
-    // with, so a leaked SPARK_GRAFT_LSH_*/IVF_* env override is visible
-    // in the artifact instead of silently re-shaping timings
+    // index parameters: the graded ANN queries' semantics move with
+    // these constants, so the artifact records the set this sweep ran
     val annParams = {
       import graft.operators.SimilarityQueries._
       s""""ann_params":{"lsh_tables":$LshTables,"lsh_planes":$LshPlanes,""" +

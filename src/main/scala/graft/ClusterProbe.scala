@@ -63,11 +63,8 @@ object ClusterProbe {
   ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
   private def session(master: String): SparkSession = {
-    val b = SparkSession.builder().master(master)
+    val b = GraftSession.builder(master)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     val withExec =
       if (master.startsWith("local-cluster"))
         b.config("spark.executor.extraJavaOptions", addOpens)

@@ -3,7 +3,6 @@ import graft.operators.MultimodalQueries
 import graft.streaming.MediaDedupStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Per-stage profile of [[MediaDedupStream]] (r20/r21 verdict item,
@@ -25,14 +24,7 @@ object MediaStreamProbe {
     val outJson = args.lift(1).getOrElse("MEDIASTREAM_PROBE.json")
     val batchSize = args.lift(2).map(_.toInt).getOrElse(250)
     val maxRows = args.lift(3).map(_.toInt).getOrElse(2000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -85,12 +85,10 @@ object SkewProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
+    val spark = GraftSession.builder(
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
       .appName("graft-skew-probe")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

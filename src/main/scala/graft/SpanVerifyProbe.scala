@@ -89,14 +89,7 @@ object SpanVerifyProbe {
     val sfDir = args.lift(0).getOrElse("target/sf3")
     val outJson = args.lift(1).getOrElse("SPANVERIFY.json")
     val k = args.lift(2).map(_.toInt).getOrElse(400)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val corpus = DedupQueries.variantCorpus(spark, sfDir)

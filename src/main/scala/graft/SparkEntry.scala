@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * label rounds). Those blocks are NOT dropped by
   * `spark.catalog.clearCache()` — they live in the block manager as
   * persistent RDDs and pin executor memory until explicitly released.
-  * Call [[releaseCaches]] between queries (Bench/QBench/Verify all do)
+  * Call [[releaseCaches]] between queries (Bench and Verify both do)
   * or storage memory starves execution memory over a long sweep.
   */
 object SparkEntry {

@@ -3,7 +3,6 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Spill-pressure probe for the 100 TB posture (evidence recorded in
   * BASELINE.md): runs the shuffle-heavy dedup/simhash family under
@@ -48,15 +47,11 @@ object SpillProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val memFraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.6")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = GraftSession.local(32)
       .config("spark.memory.fraction", memFraction)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
 
     // task-level truth: spill bytes come off TaskMetrics, summed across

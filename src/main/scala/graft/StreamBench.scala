@@ -89,14 +89,7 @@ object StreamBench {
     val outJson = args.lift(1).getOrElse("STREAMBENCH.json")
     val batchSize = args.lift(2).map(_.toInt).getOrElse(2000)
     val maxRows = args.lift(3).map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

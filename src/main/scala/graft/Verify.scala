@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Schema pin: name the drifted column up front instead of letting N
     // queries fail with opaque analysis errors (round-11 incident). Warn
@@ -56,17 +48,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // effective index parameters (ADVICE r19): the ANN queries' graded
-    // semantics move with these env-overridable vals — record what this
-    // dump actually ran with (separate sidecar: oracle_sql.json must
-    // stay a pure name→SQL map for the driver's DuckDB loop)
-    locally {
-      import graft.operators.SimilarityQueries._
-      Files.writeString(Paths.get(s"$outDir/params.json"),
-        s"""{"ann_params":{"lsh_tables":$LshTables,"lsh_planes":$LshPlanes,""" +
-          s""""lsh_cap":$LshCandidateCap,"ivf_nprobe":$IvfNprobe,""" +
-          s""""ivf_centroids":$IvfCentroids}}""")
-    }
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.board
 
+import graft.GraftSession
 import graft.board.EtlMain.{EtlConfig, EtlResult, Fields}
 import graft.sinks.HttpSink.Transport
 import graft.sinks.{JdkTransport, RequestBuilders}
@@ -227,11 +228,9 @@ object EtlCli {
   /** bin/etl: `etl [board.json [trello-fields.json]]` against the real
     * GitHub API (headers per gh.js:25-28). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try {
       val apiUrl = sys.env.getOrElse("GITHUB_API_URL", "https://api.github.com")

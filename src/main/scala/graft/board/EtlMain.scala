@@ -185,7 +185,16 @@ object EtlMain {
     val cards = BoardPipeline.customizeCards(
       n, config.listStatusMap, config.secondaryAdminFieldId)
       .coalesce(1).localCheckpoint(true)
+    // only the items of active cards become issues: the reference
+    // skips a closed card or a card in an unmapped list together with
+    // its checklist (etl.js:26-29, :148-151). The join on card_id both
+    // restricts the items and carries the parent-card fields the item
+    // field phase writes, so no later phase joins the cards again (each
+    // broadcast of the cards is a job of its own)
     val items = BoardPipeline.customizeItems(n)
+      .join(cards.select(col("card_id"), col("name").as("card_name"),
+        col("owner").as("card_owner"), col("fallback_owner").as("card_fallback")),
+        Seq("card_id"))
       .coalesce(1).localCheckpoint(true)
 
     var ledger = issueLedger0.getOrElse(emptyLedger(spark))
@@ -193,6 +202,17 @@ object EtlMain {
 
     def ledgerFor(kind: String): DataFrame =
       ledger.filter(col("entity_kind") === kind)
+
+    // ---- fold acknowledged (entity_id, value) rows into one ledger
+    //      column: acked entities take the new value, the rest keep
+    //      theirs. Called only when a phase acked something; the
+    //      ledger is change-set-sized, so one partition keeps each
+    //      lineage cut a single-task job (the suite ran 4× faster)
+    def patchLedger(column: String, acked: DataFrame): Unit =
+      ledger = ledger
+        .join(broadcast(acked.toDF("entity_id", "__acked")), Seq("entity_id"), "left")
+        .withColumn(column, coalesce(col("__acked"), col(column)))
+        .drop("__acked").coalesce(1).localCheckpoint(true)
 
     // ---- phase: create missing issues for a desired frame
     //      (entity_id, title, issue_body, assignees)
@@ -219,19 +239,10 @@ object EtlMain {
       val (resps, report) = sendPhase(writer,
         RequestBuilders.addProjectItem(missing, config.projectNodeId))
       track(report)
-      if (resps.nonEmpty) {
-        val itemIds = resps.map { case (keys, j) =>
+      if (resps.nonEmpty)
+        patchLedger("project_item_id", resps.map { case (keys, j) =>
           (keys.head, j.at("/data/addProjectNextItem/projectNextItem/id").asText())
-        }.toDF("entity_id", "new_item_id")
-        ledger = ledger.join(broadcast(itemIds), Seq("entity_id"), "left")
-          .withColumn("project_item_id",
-            coalesce(col("project_item_id"), col("new_item_id")))
-          .drop("new_item_id")
-          // lineage cut only when the ledger actually changed; the
-          // ledger is change-set-sized so one partition keeps each
-          // checkpoint a single-task job (the suite ran 4× faster)
-          .coalesce(1).localCheckpoint(true)
-      }
+        }.toDF())
     }
 
     // ---- phase: write changed (entity, field, value) rows
@@ -311,15 +322,10 @@ object EtlMain {
         titleDrift.select("entity_id", "issue_number", "title", "issue_body"),
         config.owner, config.repo))
     track(driftReport)
-    if (driftResps.nonEmpty) {
-      val acked = driftResps.map(_._1.head).toDF("entity_id")
-      ledger = ledger
-        .join(broadcast(titleDrift.join(acked, Seq("entity_id"))
-          .select(col("entity_id"), col("title").as("__new_title"))),
-          Seq("entity_id"), "left")
-        .withColumn("issue_title", coalesce(col("__new_title"), col("issue_title")))
-        .drop("__new_title").coalesce(1).localCheckpoint(true)
-    }
+    if (driftResps.nonEmpty)
+      patchLedger("issue_title", titleDrift
+        .join(driftResps.map(_._1.head).toDF("entity_id"), Seq("entity_id"))
+        .select("entity_id", "title"))
 
     val toClose = n.checkItems.filter(col("state") === "complete")
       .select(col("id").as("entity_id"))
@@ -329,24 +335,14 @@ object EtlMain {
     val (closeResps, closeReport) = sendPhase(writer,
       RequestBuilders.updateIssue(toClose, config.owner, config.repo))
     track(closeReport)
-    if (closeResps.nonEmpty) {
-      val acked = closeResps.map(_._1.head).toDF("entity_id")
-      ledger = ledger
-        .join(broadcast(acked.withColumn("__closed", lit(true))),
-          Seq("entity_id"), "left")
-        .withColumn("issue_state",
-          when(col("__closed"), lit("closed")).otherwise(col("issue_state")))
-        .drop("__closed").coalesce(1).localCheckpoint(true)
-    }
+    if (closeResps.nonEmpty)
+      patchLedger("issue_state", closeResps.map(r => (r._1.head, "closed")).toDF())
 
     addToProject("item")
 
     // ---- item fields (etl.js:234-330); parent fields join the card
     //      ledger for the parent issue url (card._issue, etl.js:52)
     val itemsWithCard = items
-      .join(cards.select(col("card_id"), col("name").as("card_name"),
-        col("owner").as("card_owner"), col("fallback_owner").as("card_fallback")),
-        Seq("card_id"))
       .join(ledgerFor("card").select(col("entity_id").as("card_id"),
         col("html_url").as("card_issue_url")), Seq("card_id"), "left")
     def itemField(key: String, value: org.apache.spark.sql.Column,
@@ -382,16 +378,9 @@ object EtlMain {
     val (mdResps, mdReport) = sendPhase(writer,
       RequestBuilders.updateIssue(finalize, config.owner, config.repo))
     track(mdReport)
-    if (mdResps.nonEmpty) {
-      val acked = mdResps.map(_._1.head).toDF("entity_id")
-      ledger = ledger
-        .join(broadcast(acked.withColumn("__bump", lit(true))),
-          Seq("entity_id"), "left")
-        .withColumn("migration",
-          when(col("__bump"), greatest(col("migration"), lit(StateStore.MLists)))
-            .otherwise(col("migration")))
-        .drop("__bump").coalesce(1).localCheckpoint(true)
-    }
+    // every pending card sits below M_LISTS, so an acked one bumps to it
+    if (mdResps.nonEmpty)
+      patchLedger("migration", mdResps.map(r => (r._1.head, StateStore.MLists)).toDF())
 
     EtlResult(ledger, fieldLedger, SinkReport(totalSent, totalRetried, totalFailed))
   }

@@ -1,5 +1,6 @@
 package graft.board
 
+import graft.GraftSession
 import graft.sinks.HttpSink.Transport
 import graft.sinks.{JdkTransport, RequestBuilders}
 import graft.sinks.RequestBuilders.ProjectInfo
@@ -76,9 +77,7 @@ object InitMain {
       Map(
         "accept" -> "application/vnd.github.v3+json",
         "Authorization" -> s"token ${sys.env.getOrElse("GITHUB_TOKEN", "")}"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .getOrCreate()
     try run(spark, sys.env.toMap, transport) match {
       case Ready(_, project) =>

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.HintBridge
 
 /** Deduplication operators over `documents` (north-star LLM-pipeline
   * surface): exact hash-groupBy, MinHash+LSH banding, LSH-candidate
@@ -125,7 +126,7 @@ object DedupQueries {
     * 92 s at sf0.1 in the round-3 sweep, "Block already exists"
     * warnings). In production the index would be persisted to parquet
     * once ("persist the LSH index"); localCheckpoint is the in-process
-    * equivalent. Bench/QBench/Verify unpersist all persistent RDDs
+    * equivalent. Bench and Verify unpersist all persistent RDDs
     * between queries, so nothing leaks into later measurements. */
   private[graft] def sigIndex(s: SparkSession, d: String): DataFrame = {
     // Resolve the sets memo BEFORE entering the sigs memo: a nested
@@ -787,7 +788,13 @@ object DedupQueries {
         val edges = candidatePairsFrom(sigIndex(s, d))
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val cc = ConnectedComponents.run(edges)
-        val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
+        // both sides are shuffle stages over the same labels, and AQE
+        // re-plans the join when the FIRST of them completes: whichever
+        // finished first was broadcast, so the build side followed task
+        // timing. The sizes side never broadcasts; the labels side does
+        // once its stage is in, whatever the completion order
+        val sizes = HintBridge.noBroadcast(
+          cc.groupBy("cluster").agg(count(lit(1)).as("cluster_size")))
         cc.join(sizes, Seq("cluster"))
           .select(col("node").as("doc_id"), col("cluster"), col("cluster_size"))
           .orderBy("doc_id")

@@ -188,7 +188,7 @@ object ProductQuantization {
   private[graft] def serve(queries: DataFrame, idx: PqIndex): DataFrame = {
     import graft.functions.IntVectorFunctions.{int_sqdist, pq_adc, pq_lut}
     // SERVING-SESSION CONFS (set at the serving entry points —
-    // AnnServeStream.start / ServeProbe — NOT here: a conf.set inside
+    // AnnServeStream.start — NOT here: a conf.set inside
     // a query builder would silently re-shape every later query in a
     // shared session, e.g. a bench sweep):
     //  - objectHashAggregate.sortBased.fallbackThreshold=4096: the

@@ -1517,7 +1517,12 @@ object TextQueries {
     //      per-source sort — q71's pattern applied to the curation
     //      tier. Scores feed the heap on the rounded grid (q176 rule)
     //      negated, so "top" = hardest, ties to min doc_id — the
-    //      exact row_number semantics the oracle proves.
+    //      exact row_number semantics the oracle proves. The output
+    //      score IS that grid value: a second round to 4 places would
+    //      round twice, and the engines break the resulting exact
+    //      midpoints differently (Spark HALF_UP on the decimal repr,
+    //      DuckDB on the scaled binary value: 0.17855 → 0.1786 vs
+    //      0.1785).
     QueryDef(
       "q186_hard_examples",
       (s, d) => {
@@ -1533,9 +1538,7 @@ object TextQueries {
             buf.items.zipWithIndex.map { case (sc, i) =>
               (src, i + 1, sc.id, -sc.score)
             }
-          }.toDF("source", "rn", "doc_id", "rscore")
-          .select(col("source"), col("rn"), col("doc_id"),
-            round(col("rscore"), 4).as("score_r"))
+          }.toDF("source", "rn", "doc_id", "score_r")
           .orderBy("source", "rn")
       },
       Some(s"""WITH $oracleScoreCtes,
@@ -1544,7 +1547,7 @@ object TextQueries {
             CAST(row_number() OVER (PARTITION BY source
               ORDER BY rscore ASC, doc_id ASC) AS INT) AS rn
           FROM sc)
-        SELECT source, rn, doc_id, round(rscore, 4) AS score_r
+        SELECT source, rn, doc_id, rscore AS score_r
         FROM ranked WHERE rn <= 5 ORDER BY source, rn"""),
       doc = "per-source hard-example mining: bottom-5 by quality score via the typed bounded-heap TopK Aggregator (partial state <= k per map task), rounded-grid scores with min-doc_id ties — the review-queue feed"),
 

@@ -139,6 +139,40 @@ class EtlMainSpec extends SparkSpecBase {
     assert(again.issueLedger.count() == 4)
   }
 
+  test("checklist items of closed cards and of cards in unmapped lists " +
+      "get no issue and no project item (etl.js:26-29, :148-151)") {
+    // the fixture board plus one incomplete item on c2 (closed) and one
+    // on c3 (list Icebox, absent from the status map)
+    val board = mapper.readTree(new java.io.File(boardPath))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val checklists = board.withArray("checklists")
+    for ((card, item) <- Seq("c2" -> "i_closed", "c3" -> "i_unmapped"))
+      checklists.add(mapper.readTree(
+        s"""{"id":"ch_$card","name":"Inactive Tasks","idCard":"$card","pos":9.0,
+           |"idBoard":"b1","checkItems":[{"id":"$item","idChecklist":"ch_$card",
+           |"state":"incomplete","name":"task of $card","pos":1.0,"due":null,
+           |"idMember":null}]}""".stripMargin))
+    val dir = java.nio.file.Files.createTempDirectory("graft-inactive")
+    val path = dir.resolve("board.json")
+    try {
+      mapper.writeValue(path.toFile, board)
+      val gh = new FakeGithub
+      val result = EtlMain.run(spark, path.toString, config, gh, sleeper = _ => ())
+      val mutations = gh.log.filterNot(_.method == "GET")
+      assert(!mutations.exists(_.body.contains("task of c")),
+        "an item of an inactive card reached the wire")
+      // the same set as the plain fixture: c1 plus i1, i2, i4
+      assert(mutations.count(r => r.method == "POST" &&
+        r.url == "/repos/org1/repo1/issues") == 4)
+      assert(mutations.count(_.body.contains("addProjectNextItem")) == 4)
+      val ids = result.issueLedger.select("entity_id").collect().map(_.getString(0))
+      assert(ids.sorted.toSeq == Seq("c1", "i1", "i2", "i4"))
+      assert(result.report.failed == 0)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("ledgers persist between batch runs: run → save → load → re-run sends nothing") {
     // the reference's db.json restart semantics (etl.js:14-19), on the
     // batch ledgers: a fresh process that loads the saved state must

@@ -105,6 +105,9 @@ class PlanSnapshotSpec extends SparkSpecBase {
       .trim
 
   private def planOf(name: String): String = {
+    // start from a released state: a chain frame memoized by an earlier
+    // suite must not stand in for the one this query builds
+    SparkEntry.releaseCaches(spark)
     // scan metadata (DataFilters etc.) truncates at a CHARACTER count,
     // so the cutoff position depends on raw expression-id widths and
     // drifts run-to-run; render it untruncated instead

@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
 import scala.sys.process.{Process, ProcessLogger}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -52,14 +53,6 @@ class ToolMainsSpec extends AnyFunSuite {
   private def scratch(name: String): File =
     Files.createTempDirectory(s"graft-toolsmoke-$name").toFile
 
-  test("BandPop runs at sf0.001 and reports the cap regime") {
-    val (exit, out) = runMain("graft.BandPop", Seq(sf0001),
-      Map("SPARK_GRAFT_CPUS" -> "4"), scratch("bandpop"))
-    assert(exit == 0, s"BandPop exit $exit:\n${out.takeRight(2000)}")
-    assert(out.contains("BANDPOP dir=") && out.contains("max_pop="),
-      s"missing BANDPOP report:\n${out.takeRight(2000)}")
-  }
-
   test("ScaleUp replicates documents+embeddings at sf0.001") {
     val dir = scratch("scaleup")
     val outDir = new File(dir, "sf-smoke").getPath
@@ -93,14 +86,6 @@ class ToolMainsSpec extends AnyFunSuite {
       "SkewProbe artifact not written to its CWD")
   }
 
-  test("AnnRecallProbe measures planted-twin recall at sf0.001") {
-    val (exit, out) = runMain("graft.AnnRecallProbe", Seq(sf0001),
-      Map("SPARK_GRAFT_CPUS" -> "4"), scratch("annrecall"))
-    assert(exit == 0, s"AnnRecallProbe exit $exit:\n${out.takeRight(2000)}")
-    assert(out.contains("ANNRECALL {\"sf\""),
-      s"missing ANNRECALL summary line:\n${out.takeRight(2000)}")
-  }
-
   test("ClusterProbe hash-parity at sf0.001 on a small local-cluster") {
     val dir = scratch("clusterprobe")
     val (exit, out) = runMain("graft.ClusterProbe", Seq.empty,
@@ -117,33 +102,6 @@ class ToolMainsSpec extends AnyFunSuite {
       s"missing parity verdict:\n${out.takeRight(3000)}")
     assert(new File(dir, "CLUSTERBENCH.json").isFile,
       "ClusterProbe pricing artifact not written to its CWD")
-  }
-
-  test("AnnClusterProbe grades recall on a tiny mixture-of-Gaussians corpus") {
-    val dir = scratch("anncluster")
-    // 2000 vectors / 20 centers / one tight operating point: every
-    // in-probe stage (corpus synth, q39 truth, all five variants)
-    // runs; the quality thresholds are graded at real sizes, not here
-    val (exit, out) = runMain("graft.AnnClusterProbe",
-      Seq("2000", "20", "0.97", "ANNQUALITY_SMOKE.json"),
-      Map("SPARK_GRAFT_CPUS" -> "4"), dir)
-    assert(exit == 0, s"AnnClusterProbe exit $exit:\n${out.takeRight(2000)}")
-    assert(out.contains("ANNQUALITY {\"probe\":\"ann_cluster\""),
-      s"missing ANNQUALITY summary line:\n${out.takeRight(2000)}")
-    assert(new File(dir, "ANNQUALITY_SMOKE.json").isFile,
-      "AnnClusterProbe artifact not written to its CWD")
-  }
-
-  test("ServeProbe times the serving-batch stages at sf0.001") {
-    val dir = scratch("serveprobe")
-    val (exit, out) = runMain("graft.ServeProbe",
-      Seq(sf0001, "20", "1", "SERVEPROBE_SMOKE.json"),
-      Map("SPARK_GRAFT_CPUS" -> "4"), dir)
-    assert(exit == 0, s"ServeProbe exit $exit:\n${out.takeRight(2000)}")
-    assert(out.contains("SERVEPROBE {\"probe\":\"serve\""),
-      s"missing SERVEPROBE summary line:\n${out.takeRight(2000)}")
-    assert(new File(dir, "SERVEPROBE_SMOKE.json").isFile,
-      "ServeProbe artifact not written to its CWD")
   }
 
   test("SpanVerifyProbe census + sampled re-verify passes at sf0.001") {
@@ -167,6 +125,18 @@ class ToolMainsSpec extends AnyFunSuite {
     for (s <- Seq("dedup_minhash", "dedup_simhash", "media_dedup", "ann_serve"))
       assert(out.contains(s""""$s":{"""),
         s"stream $s missing from the artifact line:\n${out.takeRight(3000)}")
+  }
+
+  test("GraftSession is the only place src/main builds a Spark session") {
+    val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
+    val builds = "SparkSession\\s*\\.\\s*builder".r
+    val sources = Files.walk(srcMain).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val builders = sources
+      .filter(p => builds.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => srcMain.relativize(p).toString)
+    assert(builders === Seq("scala/graft/GraftSession.scala"),
+      s"SparkSession.builder outside GraftSession: ${builders.sorted.mkString(", ")}")
   }
 
   test("Bench contention guard tracks the newest committed anchor artifact") {
