@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet star schema (TESTDATA.md).
   *
@@ -8,6 +11,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vectorized parquet scan; Catalyst prunes columns / pushes filters per
   * query. At 100 TB the same API holds — `dir` becomes an object-store
   * prefix and the scans keep partition pruning + predicate pushdown.
+  *
+  * Schema memo: `spark.read.parquet` without a schema reads a footer
+  * in a Spark job of its own, on every load. Each load therefore lists
+  * the table's files once and keys its inferred schema on the
+  * qualified path plus the session's values of [[FooterConfs]]; the
+  * entry holds the schema together with the listing's fingerprint
+  * (every file's name, length and modification time). A later load
+  * whose listing has the same fingerprint reads with that schema and
+  * launches no job. A rewritten, added or removed file changes the
+  * fingerprint, so that load infers the schema again and replaces the
+  * entry: the memo never hands out a stale schema, and
+  * [[schemaDrift]] still sees what is on disk. A missing path or a
+  * directory without data files is never memoized; it goes to
+  * `spark.read.parquet` as before and raises the same
+  * `AnalysisException`.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +33,59 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** Session confs that change how a parquet footer converts to Spark
+    * types. `nanosAsLong` is set by the events fallback below. */
+  private val FooterConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  /** (qualified path, footer conf values) → (fingerprint, schema): one
+    * entry per table and conf setting, replaced when the files change */
+  private val schemaMemo =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), (Fingerprint, StructType)]()
+
+  /** `spark.read.parquet(path)` with the schema memoized by the path's
+    * file listing (see the object doc). */
+  private def readParquet(s: SparkSession, path: String): DataFrame =
+    listing(s, path) match {
+      case None => s.read.parquet(path)
+      case Some((qualified, files)) =>
+        val key = (qualified, FooterConfs.map(s.conf.getOption))
+        Option(schemaMemo.get(key)) match {
+          case Some((`files`, schema)) => s.read.schema(schema).parquet(path)
+          case _ =>
+            val df = s.read.parquet(path)
+            schemaMemo.put(key, (files, df.schema))
+            df
+        }
+    }
+
+  /** The qualified path and the fingerprint of every file under it;
+    * None when the path is missing or holds no data file (every file
+    * sits under a `_` or `.` name, which the parquet reader skips). */
+  private def listing(s: SparkSession, path: String): Option[(String, Fingerprint)] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+      def walk(f: FileStatus): Seq[FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk) else Seq(f)
+      val top = fs.getFileStatus(p)
+      val root = top.getPath.toString
+      val files = walk(top).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      val data = files.exists { case (name, _, _) =>
+        !name.stripPrefix(root).split('/').exists(n => n.startsWith("_") || n.startsWith("."))
+      }
+      if (data) Some((root, files.sorted)) else None
+    } catch {
+      case _: java.io.IOException => None
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -56,14 +126,14 @@ object Tables {
     * `events` is the only NANOS-prone table in the contract and
     * [[normalizeEventsTs]] branches on the landed dtype either way. */
   private[graft] def loadEventsRaw(s: SparkSession, path: String): DataFrame =
-    try s.read.parquet(path)
+    try readParquet(s, path)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if String.valueOf(e.getMessage).contains("Illegal Parquet type") ||
             String.valueOf(e.getMessage).contains("PARQUET_TYPE_ILLEGAL") =>
         // TIMESTAMP(NANOS) footer: reread nanos as plain int64
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(path)
+        readParquet(s, path)
     }
 
   /** Normalize a loaded events frame's `ts` to TimestampType regardless

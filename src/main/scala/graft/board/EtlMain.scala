@@ -247,8 +247,11 @@ object EtlMain {
 
     // ---- phase: write changed (entity, field, value) rows
     def setFields(kind: String, desired: DataFrame): Unit = {
+      // pinned once: the send and the ledger merge both read the change
+      // set, and re-deriving it runs the per-field union again
       val changes = StateStore.changeSet(desired, fieldLedger,
         Seq("entity_id", "field_id"), Seq("value"))
+        .coalesce(1).localCheckpoint(true)
       val withNode = changes
         .join(ledgerFor(kind).select(col("entity_id"),
           col("project_item_id").as("item_node_id")), Seq("entity_id"))

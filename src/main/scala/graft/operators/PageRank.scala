@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PageRank over the user–item interaction graph mined from `events` —
@@ -39,7 +40,9 @@ object PageRank {
   private val Unit: Long = 1000000000000L
 
   /** Directed edge list (both directions of each distinct interaction
-    * pair) with the SOURCE degree attached. */
+    * pair) with the SOURCE degree attached: a count over a window
+    * partitioned by `src`, one shuffle on `src` and no aggregate and
+    * join of its own. */
   private[graft] def edgesWithDeg(s: SparkSession, d: String): DataFrame = {
     val pairs = Tables.events(s, d)
       .select(col("user_id"),
@@ -48,19 +51,26 @@ object PageRank {
       .select(concat(lit("u"), col("user_id").cast("string")).as("u"),
         concat(lit("i"), col("k").cast("string")).as("i"))
       .distinct()
-    val edges = pairs.select(col("u").as("src"), col("i").as("dst"))
+    pairs.select(col("u").as("src"), col("i").as("dst"))
       .union(pairs.select(col("i").as("src"), col("u").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    edges.join(deg, Seq("src"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
   }
+
+  /** The pinned (node, deg, pr = 1) frame of round 0: the degree frame
+    * and the first rank frame in one. */
+  private def start(ed: DataFrame): DataFrame =
+    ed.select(col("src").as("node"), col("deg")).distinct()
+      .withColumn("pr", lit(Unit)).localCheckpoint()
 
   /** T pinned damped rounds over an already-pinned (src, dst, deg)
     * edge frame; returns the final (node, pr) frame. Factored from
     * [[iterate]] so specs can drive a hand-computable graph through
     * the EXACT production round template. */
-  private[graft] def iterateFrom(ed: DataFrame, rounds: Int): DataFrame = {
-    val deg = ed.select(col("src").as("node"), col("deg")).distinct()
-    var ranks = deg.select(col("node"), lit(Unit).as("pr")).localCheckpoint()
+  private[graft] def iterateFrom(ed: DataFrame, rounds: Int): DataFrame =
+    roundsFrom(ed, start(ed), rounds)
+
+  private def roundsFrom(ed: DataFrame, r0: DataFrame, rounds: Int): DataFrame = {
+    var ranks = r0.select(col("node"), col("pr"))
     (1 to rounds).foreach { _ =>
       ranks = ed
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -76,8 +86,8 @@ object PageRank {
   /** T pinned damped rounds; returns (final ranks, degree frame). */
   private[graft] def iterate(s: SparkSession, d: String, rounds: Int): (DataFrame, DataFrame) = {
     val ed = edgesWithDeg(s, d).localCheckpoint()
-    val deg = ed.select(col("src").as("node"), col("deg")).distinct()
-    (iterateFrom(ed, rounds), deg)
+    val r0 = start(ed)
+    (roundsFrom(ed, r0, rounds), r0.select(col("node"), col("deg")))
   }
 
   /** The oracle's unrolled-CTE round template (DuckDB `//` is Spark's
