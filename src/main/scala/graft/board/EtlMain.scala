@@ -1,8 +1,7 @@
 package graft.board
 
-import com.fasterxml.jackson.databind.JsonNode
-import graft.sinks.HttpSink.{HttpRequest, RateLimitedWriter, RetryPolicy, SinkReport, Transport}
-import graft.sinks.RequestBuilders
+import graft.sinks.HttpSink.{RateLimitedWriter, RetryPolicy, SinkReport, Transport}
+import graft.sinks.{HttpSink, RequestBuilders}
 import graft.sources.{ApiSource, ConfigValidation}
 import graft.state.StateStore
 import graft.transforms.TrelloTransforms
@@ -95,55 +94,6 @@ object EtlMain {
 
   private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Ship request rows (keys…, method, url, body) ordered by the key
-    * columns; returns (key values, parsed response) pairs for the 2xx
-    * requests ONLY and the sink report — so callers can mark exactly
-    * the acknowledged writes as applied and leave failed ones eligible
-    * for retry on resume.
-    *
-    * Driver-memory bound: the ordered frame streams through
-    * `toLocalIterator` (orderBy's range partitioning preserves global
-    * key order across the partition-at-a-time fetch), so request
-    * bodies — the corpus-sized part of a first-run migration's change
-    * set — hold at most ONE partition on the driver at a time. What
-    * the driver retains for the whole phase is the key tuples plus
-    * the parsed 2xx response JSON (the ack payload callers fold into
-    * the ledger) — O(change set) in COUNT but id-sized per row, not
-    * body-sized. The reference holds the full serialized set either
-    * way (etl.js builds its request list in memory); this keeps the
-    * same per-key ack alignment without that ceiling. */
-  private[graft] def sendPhase(
-      writer: RateLimitedWriter,
-      reqs: DataFrame,
-      keyCols: Seq[String] = Seq("entity_id")): (Seq[(Seq[String], JsonNode)], SinkReport) = {
-    val k = keyCols.length
-    val rowIt = reqs.select((keyCols ++ Seq("method", "url", "body")).map(col): _*)
-      .orderBy(keyCols.map(col): _*)
-      .toLocalIterator()
-    // keys are captured AS the request iterator drains (sendEach pulls
-    // one row, sends, fires the callback, then pulls the next — a
-    // streaming zip), so the positional alignment sendEach guarantees
-    // (one callback per request, in input order, terminal rows for
-    // exhausted retries) maps back to keys without re-materializing
-    // the rows; request bodies are dropped the moment their response
-    // lands
-    var curKeys: Seq[String] = Seq.empty
-    val reqIt = new Iterator[HttpRequest] {
-      override def hasNext: Boolean = rowIt.hasNext
-      override def next(): HttpRequest = {
-        val r = rowIt.next()
-        curKeys = (0 until k).map(r.getString)
-        HttpRequest(r.getString(k), r.getString(k + 1), r.getString(k + 2))
-      }
-    }
-    val parsed = Seq.newBuilder[(Seq[String], JsonNode)]
-    val report = writer.sendEach(reqIt) { (_, resp) =>
-      if (resp.status >= 200 && resp.status < 300)
-        parsed += ((curKeys, mapper.readTree(resp.body)))
-    }
-    (parsed.result(), report)
-  }
-
   def run(
       spark: SparkSession,
       boardPath: String,
@@ -156,8 +106,13 @@ object EtlMain {
     import spark.implicits._
     val writer = new RateLimitedWriter(transport, config.policy, sleeper)
     var totalSent = 0; var totalRetried = 0; var totalFailed = 0
-    def track(r: SinkReport): Unit = {
+    // one ordered send per phase: the key tuple and response of each
+    // acknowledged (2xx) request
+    def send(reqs: DataFrame, keyCols: Seq[String] = Seq("entity_id"))
+        : Seq[(Seq[String], HttpSink.HttpResponse)] = {
+      val (acked, r) = HttpSink.sendPhase(writer, reqs, keyCols)
       totalSent += r.sent; totalRetried += r.retried; totalFailed += r.failed
+      acked
     }
 
     // ---- mustInit (S3/J10): configured field ids must exist remotely.
@@ -218,12 +173,11 @@ object EtlMain {
     //      (entity_id, title, issue_body, assignees)
     def createIssues(kind: String, desired: DataFrame): Unit = {
       val missing = desired.join(ledgerFor(kind), Seq("entity_id"), "left_anti")
-      val (resps, report) = sendPhase(writer,
-        RequestBuilders.createIssue(missing, config.owner, config.repo))
-      track(report)
+      val resps = send(RequestBuilders.createIssue(missing, config.owner, config.repo))
       if (resps.nonEmpty) {
-        val created = resps.map { case (keys, j) =>
+        val created = resps.map { case (keys, resp) =>
           val id = keys.head
+          val j = mapper.readTree(resp.body)
           (kind, id, j.at("/number").asLong(), j.at("/node_id").asText(),
             j.at("/state").asText("open"), j.at("/title").asText(),
             j.at("/html_url").asText(), null: String, StateStore.MCreated)
@@ -236,12 +190,11 @@ object EtlMain {
     def addToProject(kind: String): Unit = {
       val missing = ledgerFor(kind).filter(col("project_item_id").isNull)
         .select(col("entity_id"), col("issue_node_id"))
-      val (resps, report) = sendPhase(writer,
-        RequestBuilders.addProjectItem(missing, config.projectNodeId))
-      track(report)
+      val resps = send(RequestBuilders.addProjectItem(missing, config.projectNodeId))
       if (resps.nonEmpty)
-        patchLedger("project_item_id", resps.map { case (keys, j) =>
-          (keys.head, j.at("/data/addProjectNextItem/projectNextItem/id").asText())
+        patchLedger("project_item_id", resps.map { case (keys, resp) =>
+          (keys.head, mapper.readTree(resp.body)
+            .at("/data/addProjectNextItem/projectNextItem/id").asText())
         }.toDF())
     }
 
@@ -256,8 +209,7 @@ object EtlMain {
         .join(ledgerFor(kind).select(col("entity_id"),
           col("project_item_id").as("item_node_id")), Seq("entity_id"))
       val reqs = RequestBuilders.setFieldValue(withNode, options, config.projectNodeId)
-      val (resps, report) = sendPhase(writer, reqs, Seq("entity_id", "field_id"))
-      track(report)
+      val resps = send(reqs, Seq("entity_id", "field_id"))
       // record ONLY the writes the API acknowledged (2xx): a failed or
       // join-dropped row must stay out of the ledger so a resume
       // retries it instead of treating it as applied. A phase that
@@ -320,11 +272,9 @@ object EtlMain {
       .join(ledgerFor("item").select(col("entity_id"), col("issue_number"),
         col("issue_title")), Seq("entity_id"))
       .filter(col("title") =!= col("issue_title"))
-    val (driftResps, driftReport) = sendPhase(writer,
-      RequestBuilders.updateIssue(
-        titleDrift.select("entity_id", "issue_number", "title", "issue_body"),
-        config.owner, config.repo))
-    track(driftReport)
+    val driftResps = send(RequestBuilders.updateIssue(
+      titleDrift.select("entity_id", "issue_number", "title", "issue_body"),
+      config.owner, config.repo))
     if (driftResps.nonEmpty)
       patchLedger("issue_title", titleDrift
         .join(driftResps.map(_._1.head).toDF("entity_id"), Seq("entity_id"))
@@ -335,9 +285,7 @@ object EtlMain {
       .join(ledgerFor("item").filter(col("issue_state") === "open")
         .select(col("entity_id"), col("issue_number")), Seq("entity_id"))
       .withColumn("state", lit("closed"))
-    val (closeResps, closeReport) = sendPhase(writer,
-      RequestBuilders.updateIssue(toClose, config.owner, config.repo))
-    track(closeReport)
+    val closeResps = send(RequestBuilders.updateIssue(toClose, config.owner, config.repo))
     if (closeResps.nonEmpty)
       patchLedger("issue_state", closeResps.map(r => (r._1.head, "closed")).toDF())
 
@@ -378,9 +326,7 @@ object EtlMain {
     val rendered = BoardPipeline.renderIssueMarkdown(cards, items, issueState)
       .select(col("card_id").as("entity_id"), col("body").as("issue_body"))
     val finalize = pending.join(rendered, Seq("entity_id"))
-    val (mdResps, mdReport) = sendPhase(writer,
-      RequestBuilders.updateIssue(finalize, config.owner, config.repo))
-    track(mdReport)
+    val mdResps = send(RequestBuilders.updateIssue(finalize, config.owner, config.repo))
     // every pending card sits below M_LISTS, so an acked one bumps to it
     if (mdResps.nonEmpty)
       patchLedger("migration", mdResps.map(r => (r._1.head, StateStore.MLists)).toDF())

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   * (reference analogue: the db.json ledger that makes re-runs
   * incremental, etl.js:14-19, applied to the dedup family).
   *
-  * ONE combined ledger `(doc_id, sd, sig)` written through
-  * [[StateStore]]'s crash-atomic generation protocol (tmp write →
-  * `_SUCCESS` commit point → rename swap). One ledger — not a
+  * ONE combined ledger `(doc_id, sd, sig)`, a [[StateStore.loadLog log]]
+  * written through [[StateStore]]'s crash-atomic generation protocol
+  * (tmp write → `_SUCCESS` commit point → rename swap). One ledger — not a
   * shingles/sigs pair — because atomicity must cover the WHOLE index:
   * two independent saves leave a crash window where the verify side is
   * generation N+1 and the candidate side generation N, silently
@@ -47,13 +47,17 @@ object DedupIndex {
 
   def indexPath(dir: String): String = s"$dir/index"
 
+  /** The persisted index: base ∪ the deltas [[ingest]] appended. */
+  def load(spark: SparkSession, dir: String): StateStore.Log =
+    StateStore.loadLog(spark, indexPath(dir), indexSchema)
+
   /** Build (or atomically refresh) the index from a (doc_id, text)
     * corpus frame. One tokenize pass (the materialized shingle sets
-    * feed both columns), ONE generation-swapped save — the refresh is
-    * all-or-nothing. */
+    * feed both columns), ONE [[StateStore.refresh]] — the refresh is
+    * all-or-nothing and supersedes every delta folded before it. */
   def build(spark: SparkSession, corpus: DataFrame, dir: String): Unit = {
     val sets = DedupQueries.shingleSetsOf(corpus).localCheckpoint()
-    StateStore.save(
+    StateStore.refresh(
       sets.join(DedupQueries.minhashFrom(sets), Seq("doc_id")),
       indexPath(dir), bucketCols = Seq("doc_id"))
   }
@@ -68,26 +72,22 @@ object DedupIndex {
     * and the corpus side comes exclusively from the ledger. */
   def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
-    val ledger = StateStore.load(spark, indexPath(dir), indexSchema)
     val batchSets = DedupQueries.shingleSetsOf(batch).localCheckpoint()
-    flagsAgainst(batchSets, ledger, minJaccard, withinBatch = false)
+    flagsAgainst(batchSets, load(spark, dir).rows, minJaccard, withinBatch = false)
   }
 
   /** The full incremental-ingest step a crawl pipeline runs per
     * delivery: flag the batch against the persisted index AND against
     * itself (within-batch twins attribute to the lowest-id survivor,
     * matching [[graft.streaming.DedupStream.processBatch]]), then FOLD
-    * the survivors' (sd, sig) rows into the ledger through one atomic
-    * generation swap. Returns the flags; after the call the index
-    * covers the new docs, so the next delivery's twins collide.
-    *
-    * Scale: the fold rewrites the ledger (atomicity first — the same
-    * trade as the streaming fold); at 100 TB the cadence amortizes it,
-    * or a base+delta layout compacted offline replaces it. The flag
-    * plan is unchanged either way. */
+    * the survivors' (sd, sig) rows into the ledger as one O(batch)
+    * [[StateStore.append]] under the log's newest id + 1. Returns the
+    * flags; after the call the index covers the new docs, so the next
+    * delivery's twins collide. */
   def ingest(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
-    val ledger = StateStore.load(spark, indexPath(dir), indexSchema)
+    val index = load(spark, dir)
+    val ledger = index.rows
     val batchSets = DedupQueries.shingleSetsOf(batch).localCheckpoint()
     val flags = flagsAgainst(batchSets, ledger, minJaccard, withinBatch = true)
       .localCheckpoint() // pin: the fold below must not re-run the joins
@@ -99,9 +99,8 @@ object DedupIndex {
       // from being flagged against themselves — together: same flags
       // out, ledger unchanged)
       .join(ledger.select("doc_id"), Seq("doc_id"), "left_anti")
-    StateStore.save(
-      ledger.unionByName(survivors.join(DedupQueries.minhashFrom(survivors), Seq("doc_id"))),
-      indexPath(dir), bucketCols = Seq("doc_id"))
+    StateStore.append(index, survivors.join(DedupQueries.minhashFrom(survivors), Seq("doc_id")),
+      index.newest + 1, bucketCols = Seq("doc_id"))
     flags
   }
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Rate-limited HTTP sink — the Spark-native form of the reference's
   * REST/GraphQL writers (lib/gh.js:192-202, 348-367, 430-485) with its
@@ -63,7 +64,7 @@ object HttpSink {
       * The output is strictly 1:1 with the input, in order: a request
       * that exhausts its rate-limit retries yields a synthetic terminal
       * `HttpResponse(429, "retries exhausted")` rather than being
-      * dropped — callers (EtlMain.sendPhase) align responses to request
+      * dropped — callers ([[sendPhase]]) align responses to request
       * rows positionally, and a dropped entry would shift the zip and
       * attribute later 2xx responses to the wrong rows. */
     def sendAll(reqs: Iterator[HttpRequest]): (Seq[(HttpRequest, HttpResponse)], SinkReport) = {
@@ -75,8 +76,8 @@ object HttpSink {
     /** Streaming form of [[sendAll]]: `onResult` fires once per input
       * request, in order, immediately after its final response —
       * NOTHING is retained here, so a caller that drops request bodies
-      * as it goes ([[graft.board.EtlMain]]'s sendPhase keeps only key
-      * tuples + parsed 2xx acks) gets a driver footprint bounded by
+      * as it goes ([[sendPhase]] keeps only key tuples + 2xx
+      * responses) gets a driver footprint bounded by
       * what IT keeps, not by the change-set's serialized bodies. */
     def sendEach(reqs: Iterator[HttpRequest])(
         onResult: (HttpRequest, HttpResponse) => Unit): SinkReport = {
@@ -110,6 +111,46 @@ object HttpSink {
       }
       SinkReport(sent, retried, failed)
     }
+  }
+
+  /** Ship request rows (keys…, method, url, body) through `writer` in
+    * key order; returns (key values, response) for the 2xx requests
+    * ONLY and the sink report, so callers mark exactly the acknowledged
+    * writes as applied and leave failed ones for a resume to retry.
+    *
+    * Driver-memory bound: the ordered frame streams through
+    * `toLocalIterator` (orderBy's range partitioning keeps global key
+    * order across the partition-at-a-time fetch), so request bodies —
+    * the corpus-sized part of a first-run migration — hold at most ONE
+    * partition on the driver; the phase retains only key tuples and
+    * 2xx responses. */
+  def sendPhase(writer: RateLimitedWriter, reqs: DataFrame, keyCols: Seq[String])
+      : (Seq[(Seq[String], HttpResponse)], SinkReport) = {
+    val k = keyCols.length
+    val rowIt = reqs.select((keyCols ++ Seq("method", "url", "body")).map(col): _*)
+      .orderBy(keyCols.map(col): _*)
+      .toLocalIterator()
+    // keys are captured AS the request iterator drains (sendEach pulls
+    // one row, sends, fires the callback, then pulls the next — a
+    // streaming zip), so the positional alignment sendEach guarantees
+    // (one callback per request, in input order, terminal rows for
+    // exhausted retries) maps back to keys without re-materializing
+    // the rows; request bodies are dropped the moment their response
+    // lands
+    var curKeys: Seq[String] = Seq.empty
+    val reqIt = new Iterator[HttpRequest] {
+      override def hasNext: Boolean = rowIt.hasNext
+      override def next(): HttpRequest = {
+        val r = rowIt.next()
+        curKeys = (0 until k).map(r.getString)
+        HttpRequest(r.getString(k), r.getString(k + 1), r.getString(k + 2))
+      }
+    }
+    val acked = Seq.newBuilder[(Seq[String], HttpResponse)]
+    val report = writer.sendEach(reqIt) { (_, resp) =>
+      if (resp.status >= 200 && resp.status < 300) acked += ((curKeys, resp))
+    }
+    (acked.result(), report)
   }
 
   /** Ship a change-set DataFrame through the sink. The frame must carry

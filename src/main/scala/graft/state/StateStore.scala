@@ -1,9 +1,9 @@
 package graft.state
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** MERGE-style keyed state — the Spark-native replacement for the
   * reference's dom-storage/json-storage KV ledger (etl.js:14-19).
@@ -103,28 +103,10 @@ object StateStore {
     * the old ledger or the new one, never a half-written directory and
     * never a silently-empty one. */
   def save(ledger: DataFrame, path: String, bucketCols: Seq[String] = Nil,
-      numBuckets: Int = 0): Unit = {
-    val spark = ledger.sparkSession
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (recover(fs, dest)) spark.catalog.refreshByPath(path)
-    val stamp = nextStamp()
-    val tmp = new Path(path + s".tmp-$stamp")
-    val old = new Path(path + s".old-$stamp")
-    val out =
-      if (bucketCols.nonEmpty && numBuckets > 0)
-        ledger.repartition(numBuckets, bucketCols.map(col): _*)
-      else if (bucketCols.nonEmpty) ledger.repartition(bucketCols.map(col): _*)
-      else ledger
-    out.write.mode("overwrite").parquet(tmp.toString)
-    val hadPrev = fs.exists(dest)
-    if (hadPrev) require(fs.rename(dest, old), s"could not stage out $dest")
-    require(fs.rename(tmp, dest), s"could not commit $tmp -> $dest")
-    if (hadPrev) fs.delete(old, true)
-    // frames loaded from `path` BEFORE this save hold the old file
-    // list — drop the cached metadata; callers re-load after a save
-    spark.catalog.refreshByPath(path)
-  }
+      numBuckets: Int = 0): Unit =
+    swapIn(ledger.sparkSession, path) { (_, tmp) =>
+      bucketed(ledger, bucketCols, numBuckets).write.mode("overwrite").parquet(tmp.toString)
+    }
 
   /** Load a ledger saved by [[save]]; an absent path is an empty
     * ledger (first run — the reference's missing db.json). Runs
@@ -133,7 +115,7 @@ object StateStore {
     * every external mutation). */
   def load(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val dest = new Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, dest)
     // a recovery rename replaces dest's files under a path this session
     // may have scanned before — drop the cached listing or the next
     // plan reads deleted part files (FileNotFoundException)
@@ -143,22 +125,178 @@ object StateStore {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Roll an interrupted [[save]] forward (or back) and sweep strays.
-    *
-    * If sibling generations exist, a save crashed mid-swap. The commit
-    * point is the `_SUCCESS` marker: a `.tmp-*` carrying one holds a
-    * fully-written NEW generation whose recorded mutations were
-    * already sent, so it rolls FORWARD over whatever `dest` holds
-    * (re-reading the superseded generation would re-send them). With
-    * no committed tmp, an absent `dest` is restored from the newest
-    * `.old-*` (the staged-out previous generation) — never silently
-    * read as an empty first run. Everything else — incomplete tmp
-    * writes, superseded old generations — is deleted once `dest` is
-    * settled.
-    *
-    * Returns true when anything under `dest`'s parent changed — the
-    * caller must then invalidate Spark's cached file listing for the
-    * path (a rename swaps part files a live session may have scanned). */
+  // ---------------------------------------------------------------
+  // append-only ledgers ("logs"): a directory of `base/` plus one
+  // `delta-<12-digit id>/` per append, each its own [[save]]
+  // generation, so an append writes O(delta) bytes. Loads read base
+  // plus only the deltas whose id EXCEEDS base's newest stamp, so a
+  // compaction cut between its base commit and its sweep leaves stale
+  // deltas that every load ignores (and deletes).
+  // ---------------------------------------------------------------
+
+  /** The stamp column of a log row: the id of the append that folded
+    * it in. A schema without it gets it appended on load. */
+  val Stamp = "added_batch"
+
+  /** Deltas a log accumulates before an append folds them into base
+    * (the only O(ledger) write, amortized over this many appends). */
+  val CompactEvery = 8
+
+  /** A loaded log: its live rows (base ∪ the live deltas, stamped) and
+    * the newest fold id, -1 for an empty log. */
+  final case class Log(path: String, rows: DataFrame, newest: Long)
+
+  private def basePath(p: String) = s"$p/base"
+  private def deltaPath(p: String, id: Long) = f"$p/delta-$id%012d"
+  private val DeltaName = """^delta-(\d{12})$""".r
+  /** A `.tmp-*`/`.old-*` generation an interrupted delta swap left. */
+  private val DeltaStray = """^delta-(\d{12})\.(tmp|old)-.*$""".r
+
+  private def deltaIds(fs: FileSystem, dir: Path): Seq[Long] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
+      case DeltaName(id) => id.toLong
+    }.sorted
+
+  /** Bring a log to a readable state: [[recover]] an interrupted
+    * [[refresh]] (a swap of the whole directory); move a flat ledger
+    * (parquet files directly at `path`, the layout before logs) into
+    * `base/` — else it would read as EMPTY and the append guard would
+    * never fire — through a `.mig-flat` staging dir a crash leaves for
+    * the next call to roll forward; and recover each delta's own
+    * interrupted swap, so no committed append is left in a
+    * `.tmp-*`/`.old-*` generation. */
+  private def settle(spark: SparkSession, path: String): Unit = {
+    val dir = new Path(path)
+    val fs = fsOf(spark, dir)
+    var moved = recover(fs, dir)
+    val staging = new Path(path + ".mig-flat")
+    val entries =
+      if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath.getName) else Seq.empty
+    // part files, not `_SUCCESS`: a refreshed log keeps its commit
+    // marker at the root while its base may be mid-swap
+    val flat = !entries.exists(n => n == "base" || DeltaName.matches(n)) &&
+      entries.exists(_.startsWith("part-"))
+    if (flat) require(fs.rename(dir, staging), s"cannot stage flat layout at $path")
+    if (flat || fs.exists(staging)) {
+      if (!fs.exists(dir)) require(fs.mkdirs(dir), s"cannot recreate $dir")
+      require(fs.rename(staging, new Path(basePath(path))),
+        s"cannot finish flat-layout migration at $path")
+      moved = true
+    }
+    entries.collect { case DeltaStray(id, _) => id.toLong }.distinct.foreach { id =>
+      moved |= recover(fs, new Path(deltaPath(path, id)))
+    }
+    if (moved) spark.catalog.refreshByPath(path)
+  }
+
+  /** Load a log written by [[append]], [[compact]] or [[refresh]] (or
+    * a flat ledger [[save]]d at `path`, which moves into `base/`); an
+    * absent path is an empty log. One aggregation over base finds its
+    * newest stamp; the deltas' ids come from their names, since delta
+    * rows carry `Stamp == their directory id` by construction. Deltas
+    * at or below base's newest stamp are already in base: they are
+    * ignored and deleted. */
+  def loadLog(spark: SparkSession, path: String, schema: StructType): Log = {
+    settle(spark, path)
+    val full = if (schema.fieldNames.contains(Stamp)) schema else schema.add(Stamp, LongType)
+    val base = load(spark, basePath(path), full)
+    val baseNewest = base.agg(max(Stamp)).head() match {
+      case r if r.isNullAt(0) => -1L
+      case r => r.getLong(0)
+    }
+    val dir = new Path(path)
+    val fs = fsOf(spark, dir)
+    val (stale, live) = deltaIds(fs, dir).partition(_ <= baseNewest)
+    stale.foreach(id => fs.delete(new Path(deltaPath(path, id)), true))
+    val rows = live.map(id => load(spark, deltaPath(path, id), full))
+      .foldLeft(base)(_ unionByName _)
+    Log(path, rows, math.max(baseNewest, live.lastOption.getOrElse(-1L)))
+  }
+
+  /** Fold `delta`, stamped `id`, into `log` as its own `delta-<id>`
+    * generation; every [[CompactEvery]] deltas the log is [[compact]]ed.
+    * A stream fold appends under its batch id: an id EQUAL to the
+    * newest fold is a replay and overwrites its own delta with the same
+    * rows, an id BELOW it (a stream restarted with a fresh checkpoint
+    * against an accumulated log, which would re-read it as empty) fails
+    * loud. A fold that is idempotent by a key anti-join appends under
+    * `log.newest + 1`, so it never overwrites an earlier delta. */
+  def append(log: Log, delta: DataFrame, id: Long, bucketCols: Seq[String] = Nil): Unit = {
+    require(id >= log.newest,
+      s"ledger at ${log.path} was folded up to ${log.newest} " +
+        s"but this append is at $id — restarted with a fresh checkpoint? " +
+        "Reuse the original checkpoint or rebuild the ledger.")
+    val spark = delta.sparkSession
+    save(delta.withColumn(Stamp, lit(id)), deltaPath(log.path, id), bucketCols)
+    if (deltaIds(fsOf(spark, new Path(log.path)), new Path(log.path)).size >= CompactEvery)
+      compact(spark, log.path, log.rows.schema, bucketCols)
+  }
+
+  /** Fold a log's deltas into base (the amortized O(ledger) write),
+    * then sweep the absorbed deltas. The sweep set is the delta ids
+    * snapshotted before the fold, not a stamp comparison, which would
+    * never sweep an EMPTY delta (an append with no rows) and let
+    * trailing empties trip a compaction on every append. Safe at any
+    * moment: a crash after the base commit leaves deltas whose rows
+    * base already holds, which loads ignore by stamp. */
+  def compact(spark: SparkSession, path: String, schema: StructType,
+      bucketCols: Seq[String] = Nil): Unit = {
+    val dir = new Path(path)
+    val fs = fsOf(spark, dir)
+    val ids = deltaIds(fs, dir) // snapshot BEFORE the fold
+    if (ids.isEmpty) return
+    val all = loadLog(spark, path, schema).rows.localCheckpoint()
+    save(all, basePath(path), bucketCols)
+    ids.foreach(id => fs.delete(new Path(deltaPath(path, id)), true))
+  }
+
+  /** Replace a whole log with `rows`, stamped 0, as its only base — a
+    * full rebuild that supersedes every earlier delta. The new
+    * directory (base plus a `_SUCCESS` commit marker) is swapped in
+    * like a [[save]] generation, so a crash at any point leaves the
+    * old log or the new one and no earlier delta can come back. */
+  def refresh(rows: DataFrame, path: String, bucketCols: Seq[String] = Nil): Unit = {
+    val spark = rows.sparkSession
+    settle(spark, path)
+    swapIn(spark, path) { (fs, tmp) =>
+      bucketed(rows.withColumn(Stamp, lit(0L)), bucketCols, 0)
+        .write.parquet(basePath(tmp.toString))
+      fs.create(new Path(tmp, "_SUCCESS")).close()
+    }
+  }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def bucketed(df: DataFrame, bucketCols: Seq[String], numBuckets: Int): DataFrame =
+    if (bucketCols.nonEmpty && numBuckets > 0) df.repartition(numBuckets, bucketCols.map(col): _*)
+    else if (bucketCols.nonEmpty) df.repartition(bucketCols.map(col): _*)
+    else df
+
+  /** The generation swap behind [[save]] and [[refresh]]: recover any
+    * interrupted swap, `write` the new generation into a fresh `.tmp-*`
+    * sibling (it must leave a `_SUCCESS` marker there — the commit
+    * point), stage the live generation out to `.old-*`, rename the new
+    * one in, delete the old one. */
+  private def swapIn(spark: SparkSession, path: String)(
+      write: (FileSystem, Path) => Unit): Unit = {
+    val dest = new Path(path)
+    val fs = fsOf(spark, dest)
+    if (recover(fs, dest)) spark.catalog.refreshByPath(path)
+    val stamp = nextStamp()
+    val tmp = new Path(path + s".tmp-$stamp")
+    val old = new Path(path + s".old-$stamp")
+    write(fs, tmp)
+    val hadPrev = fs.exists(dest)
+    if (hadPrev) require(fs.rename(dest, old), s"could not stage out $dest")
+    require(fs.rename(tmp, dest), s"could not commit $tmp -> $dest")
+    if (hadPrev) fs.delete(old, true)
+    // frames loaded from `path` BEFORE this swap hold the old file
+    // list — drop the cached metadata; callers re-load after a swap
+    spark.catalog.refreshByPath(path)
+  }
+
   /** Generation stamps must ORDER, not just differ: recover picks the
     * newest committed generation, and filesystem mtime has 1 s
     * granularity on some filesystems — rapid crash-retry cycles tie
@@ -181,15 +319,29 @@ object StateStore {
     * (== temporally) and ALWAYS beat legacy stamps; legacy stamps fall
     * back to mtime order among themselves (the best signal they have). */
   private val WallClockStamp = """\d{13}-\d{6}""".r
-  private def stampKey(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path, marker: String): (Int, String) =
+  private def stampKey(fs: FileSystem, p: Path, marker: String): (Int, String) =
     stampOf(p, marker) match {
       case s @ WallClockStamp() => (1, s)
       case _ => (0, f"${fs.getFileStatus(p).getModificationTime}%020d")
     }
 
-  private def recover(
-      fs: org.apache.hadoop.fs.FileSystem, dest: Path): Boolean = {
+  /** Roll an interrupted [[save]] forward (or back) and sweep strays.
+    *
+    * If sibling generations exist, a save crashed mid-swap. The commit
+    * point is the `_SUCCESS` marker: a `.tmp-*` carrying one holds a
+    * fully-written NEW generation whose recorded mutations were
+    * already sent, so it rolls FORWARD over whatever `dest` holds
+    * (re-reading the superseded generation would re-send them). With
+    * no committed tmp, an absent `dest` is restored from the newest
+    * `.old-*` (the staged-out previous generation) — never silently
+    * read as an empty first run. Everything else — incomplete tmp
+    * writes, superseded old generations — is deleted once `dest` is
+    * settled.
+    *
+    * Returns true when anything under `dest`'s parent changed — the
+    * caller must then invalidate Spark's cached file listing for the
+    * path (a rename swaps part files a live session may have scanned). */
+  private def recover(fs: FileSystem, dest: Path): Boolean = {
     val parent = dest.getParent
     if (parent == null || !fs.exists(parent)) return false
     val name = dest.getName

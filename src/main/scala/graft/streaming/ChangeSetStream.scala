@@ -1,12 +1,15 @@
 package graft.streaming
 
-import graft.sinks.HttpSink.{HttpRequest, RateLimitedWriter, RetryPolicy, Transport}
-import org.apache.spark.sql.DataFrame
+import graft.sinks.HttpSink
+import graft.sinks.HttpSink.{RateLimitedWriter, RetryPolicy, Transport}
+import graft.state.StateStore
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming change-set shipper — the streaming twin of
-  * [[graft.sinks.HttpSink.writeChangeSet]] / `EtlMain.sendPhase`,
+  * [[graft.sinks.HttpSink.writeChangeSet]] / [[HttpSink.sendPhase]],
   * closing the loop between §2.10 streaming and the S11/S12 connector
   * tier: a stream of rendered request rows (key columns + `method`,
   * `url`, `body`) is shipped through ONE rate-limited writer per
@@ -20,22 +23,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * keys, so an unacknowledged write stays eligible for the replay,
   * mirroring EtlMain's acked-only resume.
   *
-  * The ledger IS [[graft.state.StateStore]]'s durable generation store
-  * — the same atomic rename swap + crash recovery the batch ledgers
-  * use, so batch and streaming restarts share one durability
-  * mechanism: a crash mid-commit can never read back as an empty
-  * ledger (which would re-send every acknowledged mutation). Each
-  * batch rewrites the ledger generation rather than appending files;
-  * the ledger is applied-keys-sized — bounded by what the rate-limited
-  * endpoint has ever absorbed — and the write is parallel and bucketed
-  * by key, so the rewrite stays cheap relative to the sends it guards.
+  * The ledger is a [[StateStore.loadLog log]]: each batch appends only
+  * its acknowledged keys as a new delta (under the log's newest id + 1,
+  * so a replayed batch never overwrites an earlier batch's acks),
+  * through the same atomic rename swap + crash recovery the batch
+  * ledgers use — a crash mid-commit can never read back as an empty
+  * ledger (which would re-send every acknowledged mutation).
   *
   * 100 TB posture: the expensive derivation upstream (diffing desired
   * state, rendering request bodies) stays a parallel streaming plan;
   * only the change set — bounded by the endpoint's rate limit, exactly
   * the rows the reference serializes one-by-one — reaches the driver.
   * The ledger anti-join broadcasts when small and shuffles when not;
-  * the per-batch collect is bounded by what a rate-limited API can
+  * the send streams one partition at a time, and what the driver
+  * keeps — the acked keys — is bounded by what a rate-limited API can
   * absorb in a trigger interval (~0.33 req/s at the reference's
   * pacing), never by corpus size.
   */
@@ -74,35 +75,13 @@ object ChangeSetStream {
       policy: RetryPolicy = RetryPolicy(),
       sleeper: Long => Unit = Thread.sleep): Unit = {
     val spark = batch.sparkSession
-    val keySchema = org.apache.spark.sql.types.StructType(
-      batch.select(keyCols.map(col): _*).schema.fields)
-    val applied = graft.state.StateStore.load(spark, ledgerDir, keySchema)
-    val rows = batch
-      .join(applied, keyCols, "left_anti")
-      .select((keyCols ++ Seq("method", "url", "body")).map(col): _*)
-      .orderBy(keyCols.map(col): _*) // deterministic send order (entity, field)
-      .collect()
-    if (rows.nonEmpty) {
-      val k = keyCols.length
-      val writer = new RateLimitedWriter(transport, policy, sleeper)
-      val (pairs, _) = writer.sendAll(rows.iterator.map(r =>
-        HttpRequest(r.getString(k), r.getString(k + 1), r.getString(k + 2))))
-      // sendAll is strictly 1:1 with its input, so acked keys align by
-      // position with the collected rows
-      val acked = rows.zip(pairs).collect {
-        case (row, (_, resp)) if resp.status >= 200 && resp.status < 300 =>
-          org.apache.spark.sql.Row.fromSeq((0 until k).map(row.getString))
-      }
-      if (acked.nonEmpty) {
-        val ackedDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(acked.toSeq, 1), keySchema)
-        // next generation = loaded ledger ∪ this batch's acks, through
-        // the same atomic swap the batch ledgers use (self-overwrite of
-        // `applied`'s source is safe: the temp write materializes fully
-        // before the swap touches the path)
-        graft.state.StateStore.save(
-          applied.unionByName(ackedDf), ledgerDir, bucketCols = keyCols)
-      }
-    }
+    val keySchema = StructType(batch.select(keyCols.map(col): _*).schema.fields)
+    val applied = StateStore.loadLog(spark, ledgerDir, keySchema)
+    val (acked, _) = HttpSink.sendPhase(new RateLimitedWriter(transport, policy, sleeper),
+      batch.join(applied.rows, keyCols, "left_anti"), keyCols)
+    if (acked.nonEmpty)
+      StateStore.append(applied, spark.createDataFrame(
+        spark.sparkContext.parallelize(acked.map(a => Row.fromSeq(a._1)), 1), keySchema),
+        applied.newest + 1, bucketCols = keyCols)
   }
 }

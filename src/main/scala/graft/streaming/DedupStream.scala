@@ -137,7 +137,12 @@ object DedupStream {
   val bandsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("band", StringType),
-    StructField("added_batch", LongType)))
+    StructField(StateStore.Stamp, LongType)))
+
+  /** The live index view: base ∪ the deltas newer than base's newest
+    * fold ([[StateStore.loadLog]]). */
+  def loadIndex(spark: SparkSession, indexPath: String): DataFrame =
+    StateStore.loadLog(spark, indexPath, bandsSchema).rows
 
   /** One micro-batch of the SELF-MAINTAINING dedup flow: flag the
     * arriving docs against the persisted probe index AND against each
@@ -155,137 +160,19 @@ object DedupStream {
     * both the probe and the fold ignore ledger rows with
     * `added_batch >= batchId`. A replayed batch therefore probes the
     * identical pre-fold index (same flags out) and re-derives the
-    * identical fold (no double-add, no lost rows) — the StateStore
-    * generation swap makes each fold crash-atomic in between.
+    * identical fold (no double-add, no lost rows).
     *
     * Scale: the stream side hashes only its own micro-batch, and the
-    * fold is a BASE+DELTA layout: each batch writes only its own
-    * survivors as `delta-<batchId>` (O(batch) bytes, one atomic
-    * generation swap on its own path), and every `CompactEvery`
-    * deltas the index folds them into `base/` (the only O(index)
-    * write, amortized). Crash consistency is stamp-guarded, not
-    * multi-path-atomic: loads take base plus only the deltas whose
-    * batch id EXCEEDS base's newest `added_batch`, so a crash between
-    * "new base committed" and "old deltas swept" leaves stale deltas
-    * that every subsequent load provably ignores (and the next
-    * compaction sweeps). Replay overwrites its own delta path
-    * atomically — same content, no double-fold. */
-  private[graft] val CompactEvery = 8
-
-  private def basePath(p: String) = s"$p/base"
-  private def deltaPath(p: String, id: Long) = f"$p/delta-$id%012d"
-  private val DeltaName = """^delta-(\d{12})$""".r
-
-  /** (committed delta ids, present on disk) — StateStore's in-flight
-    * `.tmp-*`/`.old-*` generation suffixes are excluded by the exact
-    * name match. */
-  private def deltaIds(spark: SparkSession, p: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(p)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case DeltaName(id) => id.toLong
-    }.sorted
-  }
-
-  /** Roll a PRE-base+delta flat ledger (parquet files directly at
-    * `indexPath`) into `base/`. Without this, loadIndex would read an
-    * old-version index as EMPTY and the fresh-checkpoint guard (which
-    * keys off the newest fold) would never fire — the exact silent
-    * re-admission the guard exists to prevent. The two renames are
-    * crash-recoverable: a stranded `.mig-flat` staging dir is rolled
-    * forward before anything reads the index. */
-  private def migrateFlatLayout(spark: SparkSession, indexPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(indexPath + ".mig-flat")
-    if (fs.exists(staging)) { // crashed mid-migration: roll forward
-      if (!fs.exists(dir)) require(fs.mkdirs(dir), s"cannot recreate $dir")
-      require(fs.rename(staging, new Path(basePath(indexPath))),
-        s"cannot finish flat-layout migration at $indexPath")
-      return
-    }
-    def entries: Seq[String] =
-      if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath.getName) else Seq.empty
-    val hasNewLayout = entries.exists(n => n == "base" || DeltaName.matches(n))
-    if (!hasNewLayout) {
-      // A flat-era ledger may be settled at `dir` — or stranded
-      // MID-SWAP by the old code's save() crash: `dir` absent, the
-      // committed generation sitting in a `.tmp-*`/`.old-*` SIBLING.
-      // StateStore.load runs that generation recovery as its side
-      // effect (roll forward a committed tmp, restore the newest old)
-      // and tolerates a truly-absent path — after it, `dir` holds the
-      // settled flat ledger iff one ever existed.
-      StateStore.load(spark, indexPath, bandsSchema)
-      if (entries.exists(n => n.startsWith("part-") || n == "_SUCCESS")) {
-        require(fs.rename(dir, staging), s"cannot stage flat layout at $indexPath")
-        require(fs.mkdirs(dir), s"cannot recreate $dir")
-        require(fs.rename(staging, new Path(basePath(indexPath))),
-          s"cannot finish flat-layout migration at $indexPath")
-      }
-    }
-  }
-
-  /** (live index view, newest folded batch id or -1). One base scan:
-    * delta rows carry `added_batch == their directory id` by
-    * construction, so the newest fold is max(base's newest, last delta
-    * id) without a second full-index aggregation. */
-  private def loadIndexWithNewest(spark: SparkSession, indexPath: String)
-      : (DataFrame, Long) = {
-    migrateFlatLayout(spark, indexPath)
-    val base = StateStore.load(spark, basePath(indexPath), bandsSchema)
-    val baseNewest = base.agg(max("added_batch")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    val liveDeltas = deltaIds(spark, indexPath).filter(_ > baseNewest)
-    val view = liveDeltas
-      .map(id => StateStore.load(spark, deltaPath(indexPath, id), bandsSchema))
-      .foldLeft(base)(_ unionByName _)
-    (view, math.max(baseNewest, liveDeltas.lastOption.getOrElse(-1L)))
-  }
-
-  /** The live index view: base ∪ the deltas newer than base's newest
-    * fold (staleness filter — see the layout note on [[processBatch]]). */
-  def loadIndex(spark: SparkSession, indexPath: String): DataFrame =
-    loadIndexWithNewest(spark, indexPath)._1
-
-  /** Fold the deltas into base (the amortized O(index) write), then
-    * sweep the absorbed delta dirs. The sweep set is the DELTA IDS
-    * snapshotted before the fold — not a row-stamp comparison, which
-    * would never sweep an EMPTY delta (a zero-survivor batch) and let
-    * trailing empties pin the compaction cadence at every-batch.
-    * Safe at any moment: a crash after the base commit leaves deltas
-    * whose rows base already holds, which loads ignore by stamp. */
-  def compact(spark: SparkSession, indexPath: String): Unit = {
-    val ids = deltaIds(spark, indexPath) // snapshot BEFORE the fold
-    if (ids.isEmpty) return
-    val all = loadIndex(spark, indexPath).localCheckpoint()
-    StateStore.save(all, basePath(indexPath), bucketCols = Seq("band"))
-    val dir = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ids.foreach(id =>
-      fs.delete(new org.apache.hadoop.fs.Path(deltaPath(indexPath, id)), true))
-  }
-
+    * index is a [[StateStore.loadLog log]]: each batch appends only its
+    * own survivors under its batch id (O(batch) bytes, one atomic
+    * generation swap), the log compacts into its base every
+    * [[StateStore.CompactEvery]] deltas, and a batch id below the
+    * newest fold — a restart with a fresh checkpoint — fails loud
+    * instead of wiping the index. */
   def processBatch(spark: SparkSession, batchDocs: DataFrame,
       indexPath: String, batchId: Long): DataFrame = {
-    val (full, newestFold) = loadIndexWithNewest(spark, indexPath)
-    // The replay filter is DESTRUCTIVE by design for rows stamped >=
-    // batchId — correct when the same checkpoint replays its last
-    // batch, catastrophic when an operator restarts the stream with a
-    // FRESH checkpoint (batchId resets to 0) against an accumulated
-    // index: every probe would come up empty and the fold would wipe
-    // the ledger. Structured Streaming ids are sequential, so a
-    // legitimate batchId is never more than one step behind the newest
-    // fold — anything older is a checkpoint/index mismatch; fail loud.
-    if (newestFold >= 0)
-      require(batchId >= newestFold,
-        s"dedup index at $indexPath was folded up to batch $newestFold " +
-          s"but this stream is at batch $batchId — restarted with a fresh " +
-          "checkpoint? Reuse the original checkpoint or rebuild the index.")
-    val ledger = full.filter(col("added_batch") < batchId)
+    val index = StateStore.loadLog(spark, indexPath, bandsSchema)
+    val ledger = index.rows.filter(col("added_batch") < batchId)
     val batchBands = DedupQueries.rowBands(batchDocs).localCheckpoint()
     // hot-band cap, the same family as the batch chain
     // (candidatePairsFrom / DedupIndex.flagsAgainst): a ledger band
@@ -316,13 +203,7 @@ object DedupStream {
     val flags = corpusFlags.unionByName(withinBatch).localCheckpoint()
     val survivorBands = batchBands
       .join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    // O(batch) fold: this batch's survivors go to their OWN delta path
-    // (atomic swap; a replay overwrites the same path with the same
-    // content). Earlier-stamped rows are never rewritten here.
-    StateStore.save(
-      survivorBands.withColumn("added_batch", lit(batchId)),
-      deltaPath(indexPath, batchId), bucketCols = Seq("band"))
-    if (deltaIds(spark, indexPath).size >= CompactEvery) compact(spark, indexPath)
+    StateStore.append(index, survivorBands, batchId, bucketCols = Seq("band"))
     flags
   }
 

@@ -25,22 +25,20 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * batch N carry `added_batch = N`; both the probe and the re-fold
   * ignore rows with `added_batch >= batchId`, so a replayed batch
   * probes the identical pre-fold ledger (same flags) and regenerates
-  * the identical post-fold ledger (no double-add). Each fold is one
-  * crash-atomic [[StateStore]] generation swap. The fold rewrites the
-  * whole ledger (O(index) per batch — 8 bytes + tag per corpus item,
-  * so a billion-item ledger is still parquet-light); the base+delta
-  * amortization [[DedupStream]] ships applies unchanged if that ever
-  * dominates.
+  * the identical fold (no double-add). The ledger is a
+  * [[StateStore.loadLog log]]: each batch appends only its survivors
+  * under its batch id, and a batch id below the newest fold (a fresh
+  * checkpoint against an accumulated ledger) fails loud.
   */
 object MediaDedupStream {
 
   val ledgerSchema: StructType = StructType(
-    MediaDedupIndex.indexSchema.fields :+ StructField("added_batch", LongType))
+    MediaDedupIndex.indexSchema.fields :+ StructField(StateStore.Stamp, LongType))
 
   def ledgerPath(dir: String): String = s"$dir/media_stream_index"
 
   def loadLedger(spark: SparkSession, dir: String): DataFrame =
-    StateStore.load(spark, ledgerPath(dir), ledgerSchema)
+    StateStore.loadLog(spark, ledgerPath(dir), ledgerSchema).rows
 
   /** One micro-batch: flag arriving media against the pre-batch ledger
     * and within the batch (lowest-id attribution — deterministic under
@@ -51,16 +49,12 @@ object MediaDedupStream {
   def processBatch(spark: SparkSession, batchMedia: DataFrame, dir: String,
       batchId: Long, maxHamming: Int = 3): DataFrame = {
     // NOT pinned (r22, matching DedupStream.processBatch): the ledger
-    // is already a parquet store — its two readers (the probe join,
-    // which column-prunes to (doc_id, modality, h0..h3), and the
-    // re-fold, inside StateStore.save's tmp write) scan it directly,
-    // and both reads complete BEFORE save's generation swap touches
-    // the files. The per-batch localCheckpoint materialized the WHOLE
-    // ledger (every column) into block storage every micro-batch —
-    // one extra job per batch here, a full-ledger copy per batch at
-    // a 100 TB corpus's ledger size.
-    val prior = loadLedger(spark, dir)
-      .filter(col("added_batch") < batchId) // replay guard
+    // is already a parquet store, and its reader (the probe join)
+    // column-prunes to (doc_id, modality, h0..h3). A per-batch
+    // localCheckpoint would materialize the WHOLE ledger into block
+    // storage every micro-batch.
+    val ledger = StateStore.loadLog(spark, ledgerPath(dir), ledgerSchema)
+    val prior = ledger.rows.filter(col("added_batch") < batchId) // replay guard
     val bf = MediaDedupIndex.fingerprints(spark, batchMedia).localCheckpoint()
 
     def sides(df: DataFrame, idAs: String, pre: String) =
@@ -90,9 +84,7 @@ object MediaDedupStream {
 
     val survivors = bf
       .join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .withColumn("added_batch", lit(batchId))
-    StateStore.save(prior.unionByName(survivors), ledgerPath(dir),
-      bucketCols = Seq("doc_id"))
+    StateStore.append(ledger, survivors, batchId, bucketCols = Seq("doc_id"))
     flags
   }
 

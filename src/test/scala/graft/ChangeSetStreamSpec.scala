@@ -1,8 +1,10 @@
 package graft
 
 import graft.sinks.HttpSink.{HttpRequest, HttpResponse, RetryPolicy, Transport}
+import graft.state.StateStore
 import graft.streaming.ChangeSetStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.collection.mutable
 
 /** The streaming change-set shipper: per-batch rate-limited sends,
@@ -21,8 +23,8 @@ class ChangeSetStreamSpec extends SparkSpecBase {
   }
 
   private def ledgerKeys(dir: String): Set[String] =
-    try spark.read.parquet(dir).collect().map(_.getString(0)).toSet
-    catch { case _: Throwable => Set.empty }
+    StateStore.loadLog(spark, dir, StructType(Seq(StructField("entity_id", StringType))))
+      .rows.collect().map(_.getString(0)).toSet
 
   test("micro-batches ship in key order and acked keys land in the ledger") {
     import spark.implicits._
@@ -71,6 +73,8 @@ class ChangeSetStreamSpec extends SparkSpecBase {
 
   test("a ledger crash mid-swap recovers instead of re-sending acks " +
       "(StateStore generation semantics, shared with the batch path)") {
+    // the crash hits the generation that holds the acked keys: first an
+    // ack delta, then (after a compaction) the log's base
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_css").toString
@@ -86,13 +90,23 @@ class ChangeSetStreamSpec extends SparkSpecBase {
       assert(ledgerKeys(ledger) == Set("e1"))
       // simulate a crash between StateStore.save's stage-out and commit
       // renames: the live dir vanishes, only an .old-* generation stays
-      assert(new java.io.File(ledger).renameTo(new java.io.File(s"$ledger.old-crash")))
+      val delta = s"$ledger/delta-000000000000"
+      assert(new java.io.File(delta).renameTo(new java.io.File(s"$delta.old-crash")))
       // the replay arrives; a naive read would see an EMPTY ledger and
       // re-send e1 — recovery must roll the generation back first
       mem.addData(("e1", "POST", "/issues/e1", "{}"), ("e2", "POST", "/issues/e2", "{}"))
       q.processAllAvailable()
       assert(gh.log.map(_.url) == Seq("/issues/e1", "/issues/e2"))
       assert(ledgerKeys(ledger) == Set("e1", "e2"))
+      // the same crash on the compacted base
+      StateStore.compact(spark, ledger, StructType(Seq(StructField("entity_id", StringType))))
+      val base = s"$ledger/base"
+      assert(new java.io.File(base).renameTo(new java.io.File(s"$base.old-crash")))
+      mem.addData(("e1", "POST", "/issues/e1", "{}"), ("e2", "POST", "/issues/e2", "{}"),
+        ("e3", "POST", "/issues/e3", "{}"))
+      q.processAllAvailable()
+      assert(gh.log.map(_.url) == Seq("/issues/e1", "/issues/e2", "/issues/e3"))
+      assert(ledgerKeys(ledger) == Set("e1", "e2", "e3"))
     } finally q.stop()
   }
 

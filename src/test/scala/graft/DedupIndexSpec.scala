@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Restart contract of the persisted LSH corpus index: an index built
   * once serves incoming batches in a BRAND-NEW session with zero
-  * corpus re-tokenization — the dedup plan reads the two StateStore
-  * ledgers, never the corpus source. (The EtlCliSpec resumability
+  * corpus re-tokenization — the dedup plan reads the persisted index
+  * log, never the corpus source. (The EtlCliSpec resumability
   * pattern applied to the dedup family.)
   */
 class DedupIndexSpec extends SparkSpecBase {
@@ -75,8 +75,7 @@ class DedupIndexSpec extends SparkSpecBase {
         (id + Ids.VariantOffset, text.substring(text.indexOf(' ') + 1).trim)
       }
       DedupIndex.build(spark, docs.take(30).toSeq.toDF("doc_id", "text"), p)
-      val sizeBefore = graft.state.StateStore
-        .load(spark, DedupIndex.indexPath(p), DedupIndex.indexSchema).count()
+      val sizeBefore = DedupIndex.load(spark, p).rows.count()
 
       // delivery 1: 10 genuinely-new docs + a twin of a CORPUS doc + a
       // twin of a BATCH-MATE (doc 35 arrives alongside its variant)
@@ -86,8 +85,7 @@ class DedupIndexSpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(flags1(Ids.VariantOffset + 3L) == 3L, s"corpus twin: $flags1") // vs the index
       assert(flags1(Ids.VariantOffset + 35L) == 35L, s"within-batch twin: $flags1") // vs a batch-mate
-      val sizeAfter = graft.state.StateStore
-        .load(spark, DedupIndex.indexPath(p), DedupIndex.indexSchema).count()
+      val sizeAfter = DedupIndex.load(spark, p).rows.count()
       assert(sizeAfter == sizeBefore + 12 - flags1.size) // survivors only
 
       // delivery 2: a twin of a doc FOLDED by delivery 1 — only the
@@ -109,8 +107,7 @@ class DedupIndexSpec extends SparkSpecBase {
       DedupIndex.build(spark, docs.take(15).toSeq.toDF("doc_id", "text"), p)
       val delivery = docs.drop(15).toSeq.toDF("doc_id", "text")
 
-      def ledgerRows() = graft.state.StateStore
-        .load(spark, DedupIndex.indexPath(p), DedupIndex.indexSchema)
+      def ledgerRows() = DedupIndex.load(spark, p).rows
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       val flagsA = DedupIndex.ingest(spark, delivery, p)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -130,11 +127,9 @@ class DedupIndexSpec extends SparkSpecBase {
     try {
       val p = s"$dir/index"
       DedupIndex.build(spark, originals.limit(20), p)
-      val before = graft.state.StateStore
-        .load(spark, DedupIndex.indexPath(p), DedupIndex.indexSchema).count()
+      val before = DedupIndex.load(spark, p).rows.count()
       DedupIndex.build(spark, originals, p) // self-overwrite through the generation swap
-      val after = graft.state.StateStore
-        .load(spark, DedupIndex.indexPath(p), DedupIndex.indexSchema).count()
+      val after = DedupIndex.load(spark, p).rows.count()
       assert(before <= 20 && after > before)
       // no stray generations left behind
       val strays = new java.io.File(p).listFiles()

@@ -1,9 +1,13 @@
 package graft
 
-import graft.operators.{DedupQueries, Ids}
-import graft.streaming.DedupStream
+import graft.operators.{DedupIndex, DedupQueries, Ids}
+import graft.sinks.HttpSink.{HttpRequest, HttpResponse, Transport}
+import graft.state.StateStore
+import graft.streaming.{ChangeSetStream, DedupStream, MediaDedupStream}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Stream-static incremental dedup: per-row band derivation must be
   * bit-for-bit the batch pipeline's, and the stream-static join must
@@ -419,7 +423,7 @@ class DedupStreamSpec extends SparkSpecBase {
         .map(_.getName).filter(_.matches("^delta-\\d{12}$")).sorted.toSeq
       // 10 folds at CompactEvery=8: a compaction ran, so far fewer than
       // 10 deltas remain and base holds the absorbed rows
-      assert(deltaDirs().size < batches.size - DedupStream.CompactEvery + 2,
+      assert(deltaDirs().size < batches.size - StateStore.CompactEvery + 2,
         deltaDirs().mkString(","))
       val total = DedupStream.loadIndex(spark, path)
       val expectedDocs = total.select("doc_id").distinct().count()
@@ -431,7 +435,7 @@ class DedupStreamSpec extends SparkSpecBase {
       graft.state.StateStore.save(staleRows, s"$path/delta-000000000000")
       assert(DedupStream.loadIndex(spark, path)
         .select("doc_id").distinct().count() == expectedDocs)
-      DedupStream.compact(spark, path)
+      StateStore.compact(spark, path, DedupStream.bandsSchema, Seq("band"))
       assert(!deltaDirs().contains("delta-000000000000")) // swept
       assert(DedupStream.loadIndex(spark, path)
         .select("doc_id").distinct().count() == expectedDocs)
@@ -486,6 +490,46 @@ class DedupStreamSpec extends SparkSpecBase {
     }
   }
 
+  /** A flat generation of each of the other three log ledgers —
+    * MediaDedupStream's, ChangeSetStream's and DedupIndex's, with the
+    * columns and key buckets the flat layout wrote them with — is put
+    * in place by `write(flat, path, bucketCols)`; each must then load
+    * through its log loader with every row, and a ChangeSetStream
+    * replay of the acked keys must send nothing. */
+  private def checkFlatLedgers(dir: String,
+      write: (DataFrame, String, Seq[String]) => Unit): Unit = {
+    import spark.implicits._
+    val keySchema = StructType(Seq(StructField("entity_id", StringType)))
+    val ledgers = Seq[(DataFrame, String, Seq[String], () => DataFrame)](
+      (Seq((1L, "image", 1, 2, 3, 4, 0L), (2L, "audio", 5, 6, 7, 8, 3L))
+        .toDF(MediaDedupStream.ledgerSchema.fieldNames.toIndexedSeq: _*),
+        MediaDedupStream.ledgerPath(s"$dir/media"), Seq("doc_id"),
+        () => MediaDedupStream.loadLedger(spark, s"$dir/media")),
+      (Seq("e1", "e2", "e3").toDF("entity_id"), s"$dir/acks", Seq("entity_id"),
+        () => StateStore.loadLog(spark, s"$dir/acks", keySchema).rows),
+      (Seq((7L, Seq("a b c", "b c d"), Seq("s0", "s1")), (9L, Seq("x y z"), Seq("s2", "s3")))
+        .toDF(DedupIndex.indexSchema.fieldNames.toIndexedSeq: _*),
+        DedupIndex.indexPath(s"$dir/dedup"), Seq("doc_id"),
+        () => DedupIndex.load(spark, s"$dir/dedup").rows))
+    ledgers.foreach { case (flat, p, bucketCols, loadLog) =>
+      val want = flat.collect().map(_.toString).toSeq.sorted
+      write(flat, p, bucketCols)
+      val got = loadLog().select(flat.columns.toIndexedSeq.map(col): _*)
+        .collect().map(_.toString).toSeq.sorted
+      assert(got == want, s"$p: loaded $got, flat held $want")
+      assert(new java.io.File(s"$p/base").isDirectory, s"$p not migrated")
+    }
+    val sent = scala.collection.mutable.Buffer.empty[String]
+    val transport = new Transport {
+      def send(req: HttpRequest): HttpResponse = { sent += req.url; HttpResponse(200, "{}") }
+    }
+    ChangeSetStream.shipBatch(
+      Seq("e1", "e2", "e3").map(k => (k, "POST", s"/issues/$k", "{}"))
+        .toDF("entity_id", "method", "url", "body"),
+      transport, s"$dir/acks", Seq("entity_id"), sleeper = _ => ())
+    assert(sent.isEmpty, s"replay after the upgrade re-sent ${sent.mkString(",")}")
+  }
+
   test("a pre-base+delta flat ledger migrates into base/ instead of reading as empty") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-migrate").toString
     try {
@@ -509,6 +553,9 @@ class DedupStreamSpec extends SparkSpecBase {
         DedupStream.processBatch(spark, toDf(orig), path, 0L).count()
       }
       assert(e.getMessage.contains("fresh"), e.getMessage)
+      // the other three log ledgers, saved flat the same way
+      checkFlatLedgers(dir, (flat, p, bucketCols) =>
+        graft.state.StateStore.save(flat, p, bucketCols))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       SparkEntry.releaseCaches(spark)
@@ -541,6 +588,11 @@ class DedupStreamSpec extends SparkSpecBase {
         DedupStream.processBatch(spark, toDf(orig), path, 0L).count()
       }
       assert(e.getMessage.contains("fresh"), e.getMessage)
+      // the other three log ledgers, stranded the same way
+      checkFlatLedgers(dir, (flat, p, _) => {
+        flat.write.parquet(s"$p.tmp-g1")
+        assert(!new java.io.File(p).exists())
+      })
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       SparkEntry.releaseCaches(spark)

@@ -254,7 +254,7 @@ class EtlMainSpec extends SparkSpecBase {
     }
     val writer = new graft.sinks.HttpSink.RateLimitedWriter(
       transport, graft.sinks.HttpSink.RetryPolicy(), sleeper = _ => ())
-    val (acks, report) = EtlMain.sendPhase(writer, reqs)
+    val (acks, report) = graft.sinks.HttpSink.sendPhase(writer, reqs, Seq("entity_id"))
     // global send order = ascending entity_id, all rows exactly once
     assert(seen.size == n)
     assert(seen.toSeq == (0 until n).map(i => f"e$i%07d"))
@@ -262,9 +262,9 @@ class EtlMainSpec extends SparkSpecBase {
     assert(report.sent == seen.count(k => k.drop(1).toInt % 7 != 3))
     assert(report.failed == n - report.sent)
     assert(acks.size == report.sent)
-    acks.foreach { case (keys, node) =>
+    acks.foreach { case (keys, resp) =>
       assert(keys.size == 1)
-      assert(node.at("/ok").asText() == keys.head)
+      assert(mapper.readTree(resp.body).at("/ok").asText() == keys.head)
     }
   }
 

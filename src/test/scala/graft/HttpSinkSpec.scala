@@ -64,7 +64,7 @@ class HttpSinkSpec extends AnyFunSuite {
 
   test("sendAll stays 1:1 with input when a request exhausts retries") {
     // req1 burns every retry on 429s; req2 succeeds. The exhausted
-    // request must still emit a terminal row — EtlMain.sendPhase aligns
+    // request must still emit a terminal row — HttpSink.sendPhase aligns
     // responses to request rows positionally, and a dropped entry would
     // attribute req2's 2xx to req1's row (wrong issue number in the
     // ledger, phantom "applied" mark for a write that never landed).

@@ -83,6 +83,31 @@ class MediaDedupStreamSpec extends SparkSpecBase {
     } finally SparkEntry.releaseCaches(spark)
   }
 
+  test("a fresh-checkpoint restart against an accumulated media ledger fails loud, not wipes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-media-guard").toString
+    try {
+      val originals = media.filter(col("doc_id") < Ids.VariantOffset).localCheckpoint()
+      // two batches, so the ledger holds folds up to batch 1
+      MediaDedupStream.processBatch(spark, originals.filter(col("doc_id") % 2 === 0),
+        dir, batchId = 0L).count()
+      MediaDedupStream.processBatch(spark, originals.filter(col("doc_id") % 2 === 1),
+        dir, batchId = 1L).count()
+      val before = MediaDedupStream.loadLedger(spark, dir)
+        .collect().map(_.toString).toSet
+      assert(before.nonEmpty)
+      // checkpoint cleared → batch ids restart at 0: a fold of batch 0
+      // would drop every accumulated row stamped 0 or later
+      val e = intercept[IllegalArgumentException] {
+        MediaDedupStream.processBatch(spark, originals, dir, batchId = 0L).count()
+      }
+      assert(e.getMessage.contains("fresh"), e.getMessage)
+      assert(MediaDedupStream.loadLedger(spark, dir).collect().map(_.toString).toSet == before)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
   test("streaming wiring: foreachBatch maintains the ledger across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -10,7 +10,9 @@ import org.scalacheck.Prop.forAll
   * subsequent load returns exactly the last COMMITTED generation —
   * where "committed" means the parquet write finished (`_SUCCESS`), the
   * recover() roll-forward rule. Never an empty ledger, never a torn
-  * one, and the directory is swept clean afterwards.
+  * one, and the directory is swept clean afterwards. The same holds for
+  * the append-only log built from those generations: every committed
+  * row, exactly once, whatever step was cut where.
   */
 object StateStoreProps extends Properties("state-store-durability") {
 
@@ -82,6 +84,126 @@ object StateStoreProps extends Properties("state-store-durability") {
           val strays = new java.io.File(dir).listFiles()
             .map(_.getName).filterNot(_ == "ledger")
           got == want && strays.isEmpty
+        }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+
+  // ---- the log: appends, same-id replays, compactions, refreshes ----
+
+  private val logSchema = StructType(Seq(StructField("v", LongType, nullable = false)))
+
+  sealed trait LogOp
+  case object Append extends LogOp // a fresh append at newest + 1
+  case object Replay extends LogOp // the newest append again, same id and rows
+  case object Compact extends LogOp
+  case object CompactUnswept extends LogOp // cut after the new base commits, before the sweep
+  case object Refresh extends LogOp // a full rebuild (DedupIndex.build)
+
+  private val swapCuts = Seq(BeforeWrite, AfterWrite, AfterStageOut, BeforeOldDelete, Clean)
+  private val logOpGen: Gen[(LogOp, CrashPoint)] = Gen.frequency(
+    3 -> Gen.oneOf(swapCuts).map(c => (Append: LogOp, c)),
+    1 -> Gen.oneOf(swapCuts).map(c => (Replay: LogOp, c)),
+    1 -> Gen.oneOf(swapCuts).map(c => (Compact: LogOp, c)),
+    1 -> Gen.const((CompactUnswept: LogOp, Clean: CrashPoint)),
+    1 -> Gen.oneOf(swapCuts).map(c => (Refresh: LogOp, c)))
+
+  /** The rows append id `id` folds in — none for every third id, the
+    * zero-survivor batch a stream fold appends as an empty delta. */
+  private def appendRows(id: Long): Seq[Long] = (0L until id % 3).map(id * 100 + _)
+
+  /** Re-enact a generation swap of `dest` whose new generation
+    * `write(dir)` fills, cut at `crash`; true when that generation
+    * committed (its `_SUCCESS` marker was written). */
+  private def cutSwap(dest: String, gen: Int, crash: CrashPoint,
+      write: String => Unit): Boolean = {
+    val f = new java.io.File(dest)
+    val tmp = s"$dest.tmp-g$gen"
+    def stageOut(): Unit =
+      if (f.exists()) assert(f.renameTo(new java.io.File(s"$dest.old-g$gen")))
+    crash match {
+      case BeforeWrite =>
+        val half = new java.io.File(tmp)
+        assert(half.mkdirs())
+        java.nio.file.Files.write(half.toPath.resolve("part-00000.parquet"),
+          Array[Byte](9, 9, 9))
+        false
+      case AfterWrite => write(tmp); true
+      case AfterStageOut => write(tmp); stageOut(); true
+      case BeforeOldDelete =>
+        write(tmp); stageOut(); assert(new java.io.File(tmp).renameTo(f)); true
+      case other => sys.error(s"$other is not a swap cut")
+    }
+  }
+
+  private def stamped(rows: Seq[Long], stamp: Long) = {
+    import spark.implicits._
+    rows.toDF("v").withColumn(StateStore.Stamp, org.apache.spark.sql.functions.lit(stamp))
+  }
+
+  property("a log load returns every committed row exactly once and sweeps strays, " +
+      "for appends, replays, compactions and refreshes cut at any point") =
+    forAll(Gen.nonEmptyListOf(logOpGen).map(_.take(6))) { ops =>
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft-ssp-log").toString
+      val path = s"$dir/log"
+      def deltaPath(id: Long) = f"$path/delta-$id%012d"
+      try {
+        var log = StateStore.loadLog(spark, path, logSchema)
+        var committed = Seq.empty[Long]
+        ops.zipWithIndex.forall { case ((op, crash), gen) =>
+          op match {
+            case Append | Replay =>
+              val fresh = op == Append || log.newest < 0
+              val id = if (fresh) log.newest + 1 else log.newest
+              val ok = crash match {
+                case Clean =>
+                  StateStore.append(log, appendRows(id).toDF("v"), id); true
+                case _ => cutSwap(deltaPath(id), gen, crash,
+                  d => stamped(appendRows(id), id).repartition(2).write.parquet(d))
+              }
+              // a replay re-folds rows the log already holds (or, at an
+              // id base already covers, is ignored): nothing changes
+              if (ok && fresh) committed ++= appendRows(id)
+            case Compact | CompactUnswept =>
+              val all = log.rows.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+              (op, crash) match {
+                case (CompactUnswept, _) =>
+                  StateStore.save(all.toDF("v", StateStore.Stamp), s"$path/base")
+                case (_, Clean) => StateStore.compact(spark, path, logSchema)
+                case _ => cutSwap(s"$path/base", gen, crash,
+                  d => all.toDF("v", StateStore.Stamp).write.parquet(d))
+              }
+            case Refresh =>
+              val rows = (0L until gen % 3).map(1000000L + gen * 10 + _)
+              val ok = crash match {
+                case Clean => StateStore.refresh(rows.toDF("v"), path); true
+                case _ => cutSwap(path, gen, crash, { d =>
+                  stamped(rows, 0L).write.parquet(s"$d/base")
+                  assert(new java.io.File(d, "_SUCCESS").createNewFile())
+                })
+              }
+              if (ok) committed = rows
+          }
+          log = StateStore.loadLog(spark, path, logSchema)
+          val got = log.rows.collect().map(_.getLong(0)).sorted.toSeq
+          // after a load, no generation of any swap is left over, and
+          // no delta that base already covers
+          def names(f: java.io.File): Seq[String] =
+            Option(f.listFiles()).toSeq.flatten.flatMap(c => c.getName +: names(c))
+          val strays = names(new java.io.File(dir)).filter(n =>
+            n.contains(".tmp-") || n.contains(".old-") || n.contains(".mig-flat"))
+          val base = new java.io.File(s"$path/base")
+          val baseNewest =
+            if (!base.exists()) -1L
+            else spark.read.schema(s"v LONG, ${StateStore.Stamp} LONG").parquet(base.toString).agg(
+              org.apache.spark.sql.functions.max(StateStore.Stamp)).head() match {
+              case r if r.isNullAt(0) => -1L
+              case r => r.getLong(0)
+            }
+          val staleDeltas = Option(new java.io.File(path).listFiles()).toSeq.flatten
+            .map(_.getName).collect { case n if n.matches("delta-\\d{12}") => n.drop(6).toLong }
+            .filter(_ <= baseNewest)
+          got == committed.sorted && strays.isEmpty && staleDeltas.isEmpty
         }
       } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -1,6 +1,10 @@
 package graft
 
+import graft.operators.DedupIndex
 import graft.state.StateStore
+import graft.streaming.{DedupStream, MediaDedupStream}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** MERGE semantics + upsert idempotence (SURVEY.md §5.3). */
 class StateStoreSpec extends SparkSpecBase {
@@ -203,6 +207,38 @@ class StateStoreSpec extends SparkSpecBase {
       StateStore.save(bigLedger.limit(3), path, bucketCols = Seq("kind", "id"))
       assert(idsAt(path) == Seq("c0", "c1", "c2"))
       assert(new java.io.File(dir).listFiles().map(_.getName).toSeq == Seq("ledger"))
+    }
+  }
+
+  test("a non-compaction append writes O(delta) bytes on every log ledger: " +
+      "delta sizes stay flat while the log grows") {
+    def dirBytes(f: java.io.File): Long =
+      if (f.isFile) f.length() else f.listFiles().map(dirBytes).sum
+    // one equal-size batch per append id, in the schema of each ledger
+    // that folds through StateStore.append
+    val n = 40
+    val ledgers = Seq[(String, StructType, Long => DataFrame)](
+      ("stream-bands", DedupStream.bandsSchema,
+        id => (0 until n).map(i => (id * 1000 + i, f"b$id%03d-$i%03d")).toDF("doc_id", "band")),
+      ("stream-media", MediaDedupStream.ledgerSchema,
+        id => (0 until n).map(i => (id * 1000 + i, "image", i, i + 1, i + 2, i + 3))
+          .toDF("doc_id", "modality", "h0", "h1", "h2", "h3")),
+      ("acked-keys", StructType(Seq(StructField("entity_id", StringType))),
+        id => (0 until n).map(i => f"e$id%03d-$i%03d").toDF("entity_id")),
+      ("dedup-index", DedupIndex.indexSchema,
+        id => (0 until n).map(i => (id * 1000 + i, Seq(f"s$id%03d $i%03d"), Seq(f"h$id%03d$i%03d")))
+          .toDF("doc_id", "sd", "sig")))
+    withLedgerDir { dir =>
+      ledgers.foreach { case (name, schema, batch) =>
+        val path = s"$dir/$name"
+        // 7 appends: below CompactEvery, so each is a pure delta write
+        val sizes = (0L until 7L).map { id =>
+          StateStore.append(StateStore.loadLog(spark, path, schema), batch(id), id)
+          dirBytes(new java.io.File(f"$path/delta-$id%012d"))
+        }
+        assert(sizes.max <= 3 * sizes.min, s"$name delta sizes grow with the log: $sizes")
+        assert(StateStore.loadLog(spark, path, schema).rows.count() == 7 * n)
+      }
     }
   }
 }

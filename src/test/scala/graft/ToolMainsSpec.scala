@@ -139,6 +139,24 @@ class ToolMainsSpec extends AnyFunSuite {
       s"SparkSession.builder outside GraftSession: ${builders.sorted.mkString(", ")}")
   }
 
+  test("StateStore is the only place src/main renames or deletes through a Hadoop FileSystem") {
+    // every ledger layout (generation swaps, logs, their recovery)
+    // lives in StateStore; a fold elsewhere that moves files itself
+    // keeps a second copy of that crash-consistency protocol
+    val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
+    val usesHadoopFs = "getFileSystem|hadoop\\.fs\\.FileSystem".r
+    val movesFiles = "\\.(rename|delete)\\s*\\(".r
+    val movers = Files.walk(srcMain).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .filter { p =>
+        val src = Files.readString(p)
+        usesHadoopFs.findFirstIn(src).isDefined && movesFiles.findFirstIn(src).isDefined
+      }
+      .map(p => srcMain.relativize(p).toString).sorted
+    assert(movers === Seq("scala/graft/state/StateStore.scala"),
+      s"Hadoop FileSystem renames/deletes outside StateStore: ${movers.mkString(", ")}")
+  }
+
   test("Bench contention guard tracks the newest committed anchor artifact") {
     // temp-dir resolution: highest round wins, field parsed exactly
     val dir = scratch("anchorguard")
