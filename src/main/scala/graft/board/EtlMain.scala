@@ -5,7 +5,7 @@ import graft.sinks.{HttpSink, RequestBuilders}
 import graft.sources.{ApiSource, ConfigValidation}
 import graft.state.StateStore
 import graft.transforms.TrelloTransforms
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,11 +14,12 @@ import org.apache.spark.sql.types._
   *
   *   mustInit (field validation, gh.js:48-190)
   *   → normalize + derive (BoardPipeline ← transform.js:223-305)
-  *   → card issue creates (etl.js:41-45)
-  *   → project adds (etl.js:54-59)
-  *   → custom-field change set + writes (etl.js:62-146)
-  *   → item issue creates / title updates / closes (etl.js:173-226)
-  *   → item project adds + field writes (etl.js:228-330)
+  *   → issue creates, cards then items (etl.js:41-45, 173-199)
+  *   → item title-drift updates (etl.js:199-218)
+  *   → item closes (etl.js:219-226)
+  *   → project adds, cards and items (etl.js:54-59, 228-232)
+  *   → custom-field change set + writes, cards and items
+  *     (etl.js:62-146, 234-330)
   *   → markdown finalize + migration bump (etl.js:150-168)
   *
   * The reference walks card-by-card with awaits; the engine batches by
@@ -26,10 +27,16 @@ import org.apache.spark.sql.types._
   * desired state diffed against the ledger with
   * [[StateStore.changeSet]] — renders concrete request rows with
   * [[RequestBuilders]], and ships them through one rate-limited writer.
+  * Cards and items share a phase wherever the reference does the same
+  * work for both, so a run costs six sends, not one per phase and kind.
   * Same request set, idempotent like the reference (re-running sends
   * nothing once the ledger matches), but the expensive derivation stays
   * a parallel Spark plan and only the change set is serialized. Request
-  * order inside a phase is deterministic (entity id, then field).
+  * order inside a phase is deterministic: entity kind (every card
+  * before every item), entity id, then field. Across phases, what a
+  * request needs was created by an earlier phase: the project add
+  * needs the issue, a field write the project item, an item's parent
+  * link field its card's issue, and the finalize every item's issue.
   *
   * Ledgers replace the reference's KV store (etl.js:14-19):
   *  - issue ledger: one row per created issue
@@ -86,6 +93,9 @@ object EtlMain {
     StructField("field_id", StringType),
     StructField("value", StringType)))
 
+  /** The issue ledger's key: every phase sends and folds acks by it. */
+  private val EntityKey = Seq("entity_kind", "entity_id")
+
   def emptyLedger(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], issueLedgerSchema)
 
@@ -108,7 +118,7 @@ object EtlMain {
     var totalSent = 0; var totalRetried = 0; var totalFailed = 0
     // one ordered send per phase: the key tuple and response of each
     // acknowledged (2xx) request
-    def send(reqs: DataFrame, keyCols: Seq[String] = Seq("entity_id"))
+    def send(reqs: DataFrame, keyCols: Seq[String] = EntityKey)
         : Seq[(Seq[String], HttpSink.HttpResponse)] = {
       val (acked, r) = HttpSink.sendPhase(writer, reqs, keyCols)
       totalSent += r.sent; totalRetried += r.retried; totalFailed += r.failed
@@ -158,27 +168,27 @@ object EtlMain {
     def ledgerFor(kind: String): DataFrame =
       ledger.filter(col("entity_kind") === kind)
 
-    // ---- fold acknowledged (entity_id, value) rows into one ledger
-    //      column: acked entities take the new value, the rest keep
-    //      theirs. Called only when a phase acked something; the
-    //      ledger is change-set-sized, so one partition keeps each
+    // ---- fold acknowledged (entity_kind, entity_id, value) rows into
+    //      one ledger column: acked entities take the new value, the
+    //      rest keep theirs. Called only when a phase acked something;
+    //      the ledger is change-set-sized, so one partition keeps each
     //      lineage cut a single-task job (the suite ran 4× faster)
     def patchLedger(column: String, acked: DataFrame): Unit =
       ledger = ledger
-        .join(broadcast(acked.toDF("entity_id", "__acked")), Seq("entity_id"), "left")
+        .join(broadcast(acked.toDF(EntityKey :+ "__acked": _*)), EntityKey, "left")
         .withColumn(column, coalesce(col("__acked"), col(column)))
         .drop("__acked").coalesce(1).localCheckpoint(true)
 
     // ---- phase: create missing issues for a desired frame
-    //      (entity_id, title, issue_body, assignees)
-    def createIssues(kind: String, desired: DataFrame): Unit = {
-      val missing = desired.join(ledgerFor(kind), Seq("entity_id"), "left_anti")
+    //      (entity_kind, entity_id, title, issue_body, assignees); the
+    //      send's key order puts every card before every item
+    def createIssues(desired: DataFrame): Unit = {
+      val missing = desired.join(ledger, EntityKey, "left_anti")
       val resps = send(RequestBuilders.createIssue(missing, config.owner, config.repo))
       if (resps.nonEmpty) {
         val created = resps.map { case (keys, resp) =>
-          val id = keys.head
           val j = mapper.readTree(resp.body)
-          (kind, id, j.at("/number").asLong(), j.at("/node_id").asText(),
+          (keys(0), keys(1), j.at("/number").asLong(), j.at("/node_id").asText(),
             j.at("/state").asText("open"), j.at("/title").asText(),
             j.at("/html_url").asText(), null: String, StateStore.MCreated)
         }.toDF(issueLedgerSchema.fieldNames.toIndexedSeq: _*)
@@ -187,36 +197,38 @@ object EtlMain {
     }
 
     // ---- phase: add ledger rows without a project item to the project
-    def addToProject(kind: String): Unit = {
-      val missing = ledgerFor(kind).filter(col("project_item_id").isNull)
-        .select(col("entity_id"), col("issue_node_id"))
+    def addToProject(): Unit = {
+      val missing = ledger.filter(col("project_item_id").isNull)
+        .select(col("entity_kind"), col("entity_id"), col("issue_node_id"))
       val resps = send(RequestBuilders.addProjectItem(missing, config.projectNodeId))
       if (resps.nonEmpty)
         patchLedger("project_item_id", resps.map { case (keys, resp) =>
-          (keys.head, mapper.readTree(resp.body)
+          (keys(0), keys(1), mapper.readTree(resp.body)
             .at("/data/addProjectNextItem/projectNextItem/id").asText())
         }.toDF())
     }
 
-    // ---- phase: write changed (entity, field, value) rows
-    def setFields(kind: String, desired: DataFrame): Unit = {
+    // ---- phase: write changed (entity, field, value) rows. The field
+    //      ledger keys on entity_id alone (Trello ids are unique across
+    //      cards and items), so the kind comes from the issue ledger
+    def setFields(desired: DataFrame): Unit = {
       // pinned once: the send and the ledger merge both read the change
       // set, and re-deriving it runs the per-field union again
       val changes = StateStore.changeSet(desired, fieldLedger,
         Seq("entity_id", "field_id"), Seq("value"))
         .coalesce(1).localCheckpoint(true)
       val withNode = changes
-        .join(ledgerFor(kind).select(col("entity_id"),
+        .join(ledger.select(col("entity_kind"), col("entity_id"),
           col("project_item_id").as("item_node_id")), Seq("entity_id"))
       val reqs = RequestBuilders.setFieldValue(withNode, options, config.projectNodeId)
-      val resps = send(reqs, Seq("entity_id", "field_id"))
+      val resps = send(reqs, EntityKey :+ "field_id")
       // record ONLY the writes the API acknowledged (2xx): a failed or
       // join-dropped row must stay out of the ledger so a resume
       // retries it instead of treating it as applied. A phase that
       // acknowledged nothing keeps the ledger untouched (no merge +
       // checkpoint job).
       if (resps.nonEmpty) {
-        val acked = resps.map { case (keys, _) => (keys.head, keys(1)) }
+        val acked = resps.map { case (keys, _) => (keys(1), keys(2)) }
           .toDF("entity_id", "field_id")
         fieldLedger = StateStore.merge(fieldLedger,
           changes.join(broadcast(acked), Seq("entity_id", "field_id"))
@@ -225,81 +237,76 @@ object EtlMain {
       }
     }
 
-    // ---- cards (etl.js:41-59: create, project-add)
+    // ---- issue creates: cards (etl.js:41-45), then items (etl.js:173-199)
     val cardDesired = cards.select(
+      lit("card").as("entity_kind"),
       col("card_id").as("entity_id"),
       col("name").as("title"),
       TrelloTransforms.cardIssueBody(col("url"), col("desc")).as("issue_body"),
       col("member_usernames").as("assignees"))
-    createIssues("card", cardDesired)
-    addToProject("card")
-
-    // ---- card fields (etl.js:62-146); conditional fields mirror the
-    //      reference's truthiness guards (labels only when present)
-    def f(key: String): String = config.fieldIds(key)
-    val cardFields = Seq(
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.TrelloId)).as("field_id"),
-        col("card_id").as("value")),
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.TrelloType)).as("field_id"),
-        lit("Card").as("value")),
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.CardStatus)).as("field_id"),
-        col("card_status").as("value")),
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.CardType)).as("field_id"),
-        col("card_type").as("value")),
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.Owner)).as("field_id"),
-        col("owner").as("value")),
-      cards.select(col("card_id").as("entity_id"), lit(f(Fields.FallbackOwner)).as("field_id"),
-        col("fallback_owner").as("value")),
-      // only when the card has real labels (etl.js:131-137 guards on
-      // length; the "!Label" default-fill is presentation-only)
-      cards.filter(element_at(col("label_names"), 1) =!= "!Label")
-        .select(col("card_id").as("entity_id"), lit(f(Fields.Labels)).as("field_id"),
-          element_at(col("label_names"), 1).as("value"))
-    ).reduce(_ unionByName _)
-    setFields("card", cardFields)
-
-    // ---- items (etl.js:173-226): create, then title-drift updates,
-    //      then close issues whose Trello item completed after import
     val itemDesired = items.select(
+      lit("item").as("entity_kind"),
       col("item_id").as("entity_id"),
       col("title"),
       col("desc").as("issue_body"),
       when(col("assignee") === "!Assigned", array().cast("array<string>"))
         .otherwise(array(col("assignee"))).as("assignees"))
-    createIssues("item", itemDesired)
+    createIssues(cardDesired.unionByName(itemDesired))
 
+    // ---- item title-drift updates, then close issues whose Trello item
+    //      completed after import (etl.js:199-226)
     val titleDrift = itemDesired
-      .join(ledgerFor("item").select(col("entity_id"), col("issue_number"),
-        col("issue_title")), Seq("entity_id"))
+      .join(ledgerFor("item").select(col("entity_kind"), col("entity_id"),
+        col("issue_number"), col("issue_title")), EntityKey)
       .filter(col("title") =!= col("issue_title"))
     val driftResps = send(RequestBuilders.updateIssue(
-      titleDrift.select("entity_id", "issue_number", "title", "issue_body"),
+      titleDrift.select("entity_kind", "entity_id", "issue_number", "title", "issue_body"),
       config.owner, config.repo))
     if (driftResps.nonEmpty)
       patchLedger("issue_title", titleDrift
-        .join(driftResps.map(_._1.head).toDF("entity_id"), Seq("entity_id"))
-        .select("entity_id", "title"))
+        .join(driftResps.map { case (keys, _) => (keys(0), keys(1)) }
+          .toDF(EntityKey: _*), EntityKey)
+        .select("entity_kind", "entity_id", "title"))
 
     val toClose = n.checkItems.filter(col("state") === "complete")
       .select(col("id").as("entity_id"))
       .join(ledgerFor("item").filter(col("issue_state") === "open")
-        .select(col("entity_id"), col("issue_number")), Seq("entity_id"))
+        .select(col("entity_kind"), col("entity_id"), col("issue_number")), Seq("entity_id"))
       .withColumn("state", lit("closed"))
     val closeResps = send(RequestBuilders.updateIssue(toClose, config.owner, config.repo))
     if (closeResps.nonEmpty)
-      patchLedger("issue_state", closeResps.map(r => (r._1.head, "closed")).toDF())
+      patchLedger("issue_state", closeResps.map { case (keys, _) =>
+        (keys(0), keys(1), "closed") }.toDF())
 
-    addToProject("item")
+    // ---- project adds (etl.js:54-59, 228-232)
+    addToProject()
 
-    // ---- item fields (etl.js:234-330); parent fields join the card
-    //      ledger for the parent issue url (card._issue, etl.js:52)
+    // ---- custom fields of cards (etl.js:62-146) and items
+    //      (etl.js:234-330); conditional fields mirror the reference's
+    //      truthiness guards (labels only when present). Item parent
+    //      fields join the card ledger for the parent issue url
+    //      (card._issue, etl.js:52)
     val itemsWithCard = items
       .join(ledgerFor("card").select(col("entity_id").as("card_id"),
         col("html_url").as("card_issue_url")), Seq("card_id"), "left")
-    def itemField(key: String, value: org.apache.spark.sql.Column,
-        filtered: DataFrame = itemsWithCard): DataFrame =
-      filtered.select(col("item_id").as("entity_id"),
-        lit(f(key)).as("field_id"), value.as("value"))
+    def field(rows: DataFrame, idCol: String, key: String, value: Column): DataFrame =
+      rows.select(col(idCol).as("entity_id"), lit(config.fieldIds(key)).as("field_id"),
+        value.as("value"))
+    def cardField(key: String, value: Column, rows: DataFrame = cards): DataFrame =
+      field(rows, "card_id", key, value)
+    def itemField(key: String, value: Column, rows: DataFrame = itemsWithCard): DataFrame =
+      field(rows, "item_id", key, value)
+    val cardFields = Seq(
+      cardField(Fields.TrelloId, col("card_id")),
+      cardField(Fields.TrelloType, lit("Card")),
+      cardField(Fields.CardStatus, col("card_status")),
+      cardField(Fields.CardType, col("card_type")),
+      cardField(Fields.Owner, col("owner")),
+      cardField(Fields.FallbackOwner, col("fallback_owner")),
+      // only when the card has real labels (etl.js:131-137 guards on
+      // length; the "!Label" default-fill is presentation-only)
+      cardField(Fields.Labels, element_at(col("label_names"), 1),
+        cards.filter(element_at(col("label_names"), 1) =!= "!Label")))
     val itemFields = Seq(
       itemField(Fields.TrelloId, col("item_id")),
       itemField(Fields.TaskParent, col("card_name")),
@@ -313,14 +320,13 @@ object EtlMain {
       itemField(Fields.Dash, col("amount").cast("double").cast("string"),
         itemsWithCard.filter(col("amount").isNotNull)),
       itemField(Fields.TaskAssignee, col("assignee"),
-        itemsWithCard.filter(col("assignee") =!= "!Assigned"))
-    ).reduce(_ unionByName _)
-    setFields("item", itemFields)
+        itemsWithCard.filter(col("assignee") =!= "!Assigned")))
+    setFields((cardFields ++ itemFields).reduce(_ unionByName _))
 
     // ---- markdown finalize (etl.js:150-168): cards still below M_LISTS
     //      get the full checklist-rendered body, then the bump
     val pending = ledgerFor("card").filter(col("migration") < StateStore.MLists)
-      .select(col("entity_id"), col("issue_number"))
+      .select(col("entity_kind"), col("entity_id"), col("issue_number"))
     val issueState = ledgerFor("item").select(col("entity_id").as("item_id"),
       col("issue_number"), col("issue_state"))
     val rendered = BoardPipeline.renderIssueMarkdown(cards, items, issueState)
@@ -329,7 +335,8 @@ object EtlMain {
     val mdResps = send(RequestBuilders.updateIssue(finalize, config.owner, config.repo))
     // every pending card sits below M_LISTS, so an acked one bumps to it
     if (mdResps.nonEmpty)
-      patchLedger("migration", mdResps.map(r => (r._1.head, StateStore.MLists)).toDF())
+      patchLedger("migration", mdResps.map { case (keys, _) =>
+        (keys(0), keys(1), StateStore.MLists) }.toDF())
 
     EtlResult(ledger, fieldLedger, SinkReport(totalSent, totalRetried, totalFailed))
   }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions.col
   *
   * Design (SURVEY.md §4): the analytic 99% of a pipeline stays fully
   * parallel; only the (small) change set from
-  * [[graft.state.StateStore.changeSet]] reaches this sink, usually via
-  * `coalesce(1)` when a global rate limit applies, or per-partition
-  * token buckets when the endpoint allows N writers. Everything is
-  * injectable (transport, clock, sleeper) so tests run with a virtual
-  * clock and a scripted transport — the reference's live-API test
+  * [[graft.state.StateStore.changeSet]] reaches this sink, streamed to
+  * the driver by [[sendPhase]] and sent one request at a time through
+  * one [[RateLimitedWriter]] — a single rate-limit domain, matching the
+  * reference's deliberate anti-parallelism. Everything is injectable
+  * (transport, sleeper) so tests run with a virtual clock and a
+  * scripted transport — the reference's live-API test
   * (tests/set-field-value.js) becomes a deterministic unit test.
   */
 object HttpSink {
@@ -54,31 +55,21 @@ object HttpSink {
         (r.status == 403 && r.body != null &&
           r.body.toLowerCase.contains("secondary rate limit"))
 
-    def write(reqs: Iterator[HttpRequest]): SinkReport = sendAll(reqs)._2
-
-    /** Like [[write]] but also returns each request's final response —
-      * the connector tier (EtlMain) needs the created issue's number and
-      * node id from the response body, exactly as the reference stores
-      * the full create/update responses (etl.js:44-45,195-199).
+    /** Send `reqs` in order; `onResult` fires once per input request,
+      * immediately after its final response — the connector tier
+      * (EtlMain) needs the created issue's number and node id from the
+      * response body, exactly as the reference stores the full
+      * create/update responses (etl.js:44-45,195-199).
       *
-      * The output is strictly 1:1 with the input, in order: a request
-      * that exhausts its rate-limit retries yields a synthetic terminal
-      * `HttpResponse(429, "retries exhausted")` rather than being
-      * dropped — callers ([[sendPhase]]) align responses to request
-      * rows positionally, and a dropped entry would shift the zip and
-      * attribute later 2xx responses to the wrong rows. */
-    def sendAll(reqs: Iterator[HttpRequest]): (Seq[(HttpRequest, HttpResponse)], SinkReport) = {
-      val out = Seq.newBuilder[(HttpRequest, HttpResponse)]
-      val report = sendEach(reqs)((req, resp) => out += ((req, resp)))
-      (out.result(), report)
-    }
-
-    /** Streaming form of [[sendAll]]: `onResult` fires once per input
-      * request, in order, immediately after its final response —
-      * NOTHING is retained here, so a caller that drops request bodies
-      * as it goes ([[sendPhase]] keeps only key tuples + 2xx
-      * responses) gets a driver footprint bounded by
-      * what IT keeps, not by the change-set's serialized bodies. */
+      * The callbacks are strictly 1:1 with the input, in order: a
+      * request that exhausts its rate-limit retries yields a synthetic
+      * terminal `HttpResponse(429, "retries exhausted")` rather than
+      * being dropped — [[sendPhase]] aligns responses to request rows
+      * positionally, and a dropped entry would attribute later 2xx
+      * responses to the wrong rows. NOTHING is retained here, so a
+      * caller that drops request bodies as it goes ([[sendPhase]] keeps
+      * only key tuples + 2xx responses) gets a driver footprint bounded
+      * by what IT keeps, not by the change-set's serialized bodies. */
     def sendEach(reqs: Iterator[HttpRequest])(
         onResult: (HttpRequest, HttpResponse) => Unit): SinkReport = {
       var sent = 0; var retried = 0; var failed = 0
@@ -151,25 +142,5 @@ object HttpSink {
       if (resp.status >= 200 && resp.status < 300) acked += ((curKeys, resp))
     }
     (acked.result(), report)
-  }
-
-  /** Ship a change-set DataFrame through the sink. The frame must carry
-    * `method`, `url`, `body` string columns. `coalesce(1)` serializes
-    * globally (single rate-limit domain, matching the reference's
-    * deliberate anti-parallelism); pass parallelism > 1 only when the
-    * endpoint tolerates concurrent writers. */
-  def writeChangeSet(
-      changeSet: DataFrame,
-      transport: Transport,
-      policy: RetryPolicy = RetryPolicy(),
-      parallelism: Int = 1): Unit = {
-    changeSet
-      .select("method", "url", "body")
-      .coalesce(parallelism)
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val writer = new RateLimitedWriter(transport, policy)
-        writer.write(rows.map(r => HttpRequest(r.getString(0), r.getString(1), r.getString(2))))
-        ()
-      }
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * driver-side bootstrap calls (S16/S17).
   *
   * Each DataFrame builder appends `method`/`url`/`body` columns (the
-  * [[HttpSink.writeChangeSet]] contract) and passes every input column
+  * [[HttpSink.sendPhase]] contract) and passes every input column
   * through, so callers keep their entity keys for pairing responses.
   * Bodies are built with `to_json(struct(...))` — codegen'd, correctly
   * escaped, null fields dropped (so a PATCH carries only the fields

@@ -62,15 +62,6 @@ object StateStore {
     state.join(incoming, keyCols, "left_anti").unionByName(incoming)
   }
 
-  /** Checkpoint bump (etl.js:164-165): raise migration level for keys. */
-  def bumpMigration(state: DataFrame, keys: DataFrame, keyCols: Seq[String],
-      level: Int): DataFrame = {
-    val bumped = state.join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .withColumn("migration", greatest(col("migration"), lit(level)))
-    state.join(keys.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .unionByName(bumped)
-  }
-
   // ---------------------------------------------------------------
   // durable round-trip — the reference's db.json persists between
   // runs (etl.js:14-19); these give the batch ledgers the same

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming change-set shipper — the streaming twin of
-  * [[graft.sinks.HttpSink.writeChangeSet]] / [[HttpSink.sendPhase]],
+  * [[graft.sinks.HttpSink.sendPhase]],
   * closing the loop between §2.10 streaming and the S11/S12 connector
   * tier: a stream of rendered request rows (key columns + `method`,
   * `url`, `body`) is shipped through ONE rate-limited writer per

@@ -139,6 +139,93 @@ class EtlMainSpec extends SparkSpecBase {
     assert(again.issueLedger.count() == 4)
   }
 
+  private def variable(req: HttpRequest, name: String): String =
+    mapper.readTree(req.body).at(s"/variables/$name").asText()
+
+  private def isCreate(req: HttpRequest): Boolean =
+    req.method == "POST" && req.url == "/repos/org1/repo1/issues"
+
+  test("phases keep their dependency order: create → project add → field " +
+      "writes per entity, card creates before item creates, finalize last") {
+    val gh = new FakeGithub
+    val result = EtlMain.run(spark, boardPath, config, gh, sleeper = _ => ())
+    val log = gh.log.filterNot(_.method == "GET").toIndexedSeq
+    def at(p: HttpRequest => Boolean): Seq[Int] = log.indices.filter(i => p(log(i)))
+
+    // map every request back to its entity through the ledger: the stub
+    // mints issue n on the n-th create, adds carry the issue node id and
+    // field writes the project item id
+    val rows = result.issueLedger.collect().toSeq
+    def by(column: String): Map[String, String] =
+      rows.map(r => String.valueOf(r.getAs[Any](column)) -> r.getAs[String]("entity_id")).toMap
+    val kindOf = rows.map(r => r.getAs[String]("entity_id") -> r.getAs[String]("entity_kind")).toMap
+    val creates = at(isCreate)
+    val createAt = by("issue_number").map { case (n, id) => id -> creates(n.toInt - 1) }
+    val addAt = at(_.body.contains("addProjectNextItem"))
+      .map(i => by("issue_node_id")(variable(log(i), "issueId")) -> i).toMap
+    val setAt = at(_.body.contains("updateProjectNextItemField"))
+      .map(i => by("project_item_id")(variable(log(i), "itemId")) -> i)
+    assert(kindOf.keySet == Set("c1", "i1", "i2", "i4"))
+    assert(createAt.keySet == kindOf.keySet && addAt.keySet == kindOf.keySet)
+    assert(setAt.map(_._1).toSet == kindOf.keySet)
+
+    kindOf.keys.foreach(id => assert(createAt(id) < addAt(id), s"$id added before created"))
+    setAt.foreach { case (id, i) => assert(addAt(id) < i, s"$id field written before added") }
+    val (cardCreates, itemCreates) = createAt.partition { case (id, _) => kindOf(id) == "card" }
+    assert(cardCreates.values.max < itemCreates.values.min)
+    val patches = at(_.method == "PATCH")
+    assert(patches.size == 1)
+    assert(itemCreates.values.forall(_ < patches.head), "finalize rendered before an item existed")
+  }
+
+  test("a partly acknowledged migration resumes across both kinds: the " +
+      "re-run sends exactly the unacknowledged writes") {
+    // 500 to item i2's create and to card c1's CardStatus write
+    val gh = new FakeGithub {
+      var failing = true
+      override def send(req: HttpRequest): HttpResponse = {
+        val i2Create = isCreate(req) && req.body.contains("Some long task name")
+        val c1Status = req.body.contains(""""fieldId":"F_STATUS"""")
+        if (failing && (i2Create || c1Status)) { log += req; HttpResponse(500, "boom") }
+        else super.send(req)
+      }
+    }
+    val first = EtlMain.run(spark, boardPath, config, gh, sleeper = _ => ())
+    assert(first.report.failed == 2)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("entity_id").collect().map(_.getString(0)).toSeq.sorted
+    assert(ids(first.issueLedger) == Seq("c1", "i1", "i4"))
+    assert(first.fieldLedger.filter(col("entity_id") === "i2").count() == 0)
+    assert(first.fieldLedger.filter(col("entity_id") === "c1" &&
+      col("field_id") === "F_STATUS").count() == 0)
+    def cardLevels(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.filter(col("entity_kind") === "card").select("migration").collect().map(_.getInt(0)).toSeq
+    assert(cardLevels(first.issueLedger) == Seq(graft.state.StateStore.MLists))
+
+    gh.failing = false
+    val sentBefore = gh.log.size
+    val again = EtlMain.run(spark, boardPath, config, gh,
+      issueLedger0 = Some(first.issueLedger),
+      fieldLedger0 = Some(first.fieldLedger), sleeper = _ => ())
+    val wire = gh.log.drop(sentBefore).filterNot(_.method == "GET").toSeq
+    val row = again.issueLedger.collect().map(r => r.getAs[String]("entity_id") -> r).toMap
+    def item(id: String): String = row(id).getAs[String]("project_item_id")
+
+    val creates = wire.filter(isCreate)
+    assert(creates.size == 1 && creates.head.body.contains("Some long task name"))
+    val adds = wire.filter(_.body.contains("addProjectNextItem"))
+    assert(adds.map(variable(_, "issueId")) == Seq(row("i2").getAs[String]("issue_node_id")))
+    val sets = wire.filter(_.body.contains("updateProjectNextItemField"))
+      .map(r => (variable(r, "itemId"), variable(r, "fieldId")))
+    assert(sets.count(_._1 == item("i2")) == 7)
+    assert(sets.filterNot(_._1 == item("i2")) == Seq((item("c1"), "F_STATUS")))
+    assert(wire.size == creates.size + adds.size + sets.size, "a run-1 write was sent again")
+    assert(again.report.failed == 0 && again.report.sent == wire.size)
+    assert(ids(again.issueLedger) == Seq("c1", "i1", "i2", "i4"))
+    assert(again.fieldLedger.count() == 7 + 9 + 7 + 7)
+    assert(cardLevels(again.issueLedger) == Seq(graft.state.StateStore.MLists))
+  }
+
   test("checklist items of closed cards and of cards in unmapped lists " +
       "get no issue and no project item (etl.js:26-29, :148-151)") {
     // the fixture board plus one incomplete item on c2 (closed) and one

@@ -25,13 +25,25 @@ class HttpSinkSpec extends AnyFunSuite {
     }
   }
 
+  /** Send through [[RateLimitedWriter.sendEach]]; returns the report
+    * and the (request, response) callbacks in order. */
+  private def sendEach(w: RateLimitedWriter, reqs: Seq[HttpRequest])
+      : (SinkReport, Seq[(HttpRequest, HttpResponse)]) = {
+    val pairs = mutable.Buffer.empty[(HttpRequest, HttpResponse)]
+    val report = w.sendEach(reqs.iterator)((req, resp) => pairs += ((req, resp)))
+    (report, pairs.toSeq)
+  }
+
   private def run(script: Seq[Int], nReqs: Int,
       policy: RetryPolicy = RetryPolicy()): (SinkReport, Seq[Long], ScriptedTransport) = {
     val sleeps = mutable.Buffer.empty[Long]
     val t = new ScriptedTransport(script)
     val w = new RateLimitedWriter(t, policy, sleeps.append(_))
     val reqs = (1 to nReqs).map(k => HttpRequest("POST", s"/issues/$k", "{}"))
-    (w.write(reqs.iterator), sleeps.toSeq, t)
+    val (report, pairs) = sendEach(w, reqs)
+    // one callback per request, in input order
+    assert(pairs.map(_._1) == reqs)
+    (report, sleeps.toSeq, t)
   }
 
   test("paces between writes, not before the first") {
@@ -62,7 +74,7 @@ class HttpSinkSpec extends AnyFunSuite {
     assert(t.seen.map(_.url) == Seq("/issues/1", "/issues/2"))
   }
 
-  test("sendAll stays 1:1 with input when a request exhausts retries") {
+  test("sendEach stays 1:1 with input when a request exhausts retries") {
     // req1 burns every retry on 429s; req2 succeeds. The exhausted
     // request must still emit a terminal row — HttpSink.sendPhase aligns
     // responses to request rows positionally, and a dropped entry would
@@ -75,11 +87,12 @@ class HttpSinkSpec extends AnyFunSuite {
     val reqs = Seq(
       HttpRequest("POST", "/issues/1", "{}"),
       HttpRequest("POST", "/issues/2", "{}"))
-    val (pairs, report) = w.sendAll(reqs.iterator)
+    val (report, pairs) = sendEach(w, reqs)
     assert(pairs.map(_._1.url) == Seq("/issues/1", "/issues/2"))
     assert(pairs.head._2 == HttpResponse(429, "retries exhausted"))
     assert(pairs(1)._2.status == 200)
     assert(report == SinkReport(1, 3, 1))
+    assert(sleeps == Seq(60000L, 120000L, 240000L, 3000L))
   }
 
   test("plain 403 (no secondary-rate-limit body) fails fast, no backoff") {
@@ -93,8 +106,10 @@ class HttpSinkSpec extends AnyFunSuite {
       }
     }
     val w = new RateLimitedWriter(t, RetryPolicy(), sleeps.append(_))
-    val report = w.write(Iterator(HttpRequest("POST", "/issues/1", "{}")))
+    val req = HttpRequest("POST", "/issues/1", "{}")
+    val (report, pairs) = sendEach(w, Seq(req))
     assert(report == SinkReport(0, 0, 1))
+    assert(pairs == Seq((req, HttpResponse(403, """{"message":"Bad credentials"}"""))))
     assert(sleeps.isEmpty)
   }
 }

@@ -58,17 +58,6 @@ class StateStoreSpec extends SparkSpecBase {
     assert(once.filter($"id" === "c2").select("title").head().getString(0) == "title-b")
   }
 
-  test("bumpMigration raises level only for selected keys, monotonic") {
-    val state = written.withColumn("migration", org.apache.spark.sql.functions.lit(0))
-    val keys = Seq(("card", "c1")).toDF("kind", "id")
-    val bumped = StateStore.bumpMigration(state, keys, Seq("kind", "id"), StateStore.MLists)
-    val byId = bumped.collect().map(r => r.getAs[String]("id") -> r.getAs[Int]("migration")).toMap
-    assert(byId("c1") == 1 && byId("c2") == 0)
-    // re-bump with a lower level must not regress
-    val again = StateStore.bumpMigration(bumped, keys, Seq("kind", "id"), StateStore.MCreated)
-    assert(again.filter($"id" === "c1").select("migration").head().getInt(0) == 1)
-  }
-
   // ---------------------------------------------------------------
   // durable persistence: parallel write + crash-window recovery
   // ---------------------------------------------------------------
