@@ -32,26 +32,41 @@ object SparkEntry {
       .foreach(_.unpersist(blocking = true))
   }
 
-  def allDefs: Seq[QueryDef] =
-    operators.RelationalQueries.defs ++
-      operators.TextQueries.defs ++
-      operators.DedupQueries.defs ++
-      operators.SimilarityQueries.defs ++
-      operators.EventQueries.defs ++
-      operators.PipelineQueries.defs ++
-      operators.MultimodalQueries.defs ++
-      operators.AnalyticsQueries.defs ++
-      operators.ConnectorQueries.defs ++
-      operators.CurationQueries.defs ++
-      operators.ZOrder.defs ++
-      operators.KMeans.defs ++
-      operators.BpeTrain.defs ++
-      operators.ProductQuantization.defs ++
-      operators.PageRank.defs ++
-      operators.LabelPropagation.defs ++
-      operators.TriangleCount.defs ++
-      operators.CorpusStats.defs ++
-      operators.AuditQueries.defs
+  /** Every defining object with its battery, each listed once, in
+    * battery order: the families Bench reports a subtotal for. */
+  def families: Seq[(String, Seq[QueryDef])] = Seq(
+    "RelationalQueries" -> operators.RelationalQueries.defs,
+    "TextQueries" -> operators.TextQueries.defs,
+    "DedupQueries" -> operators.DedupQueries.defs,
+    "SimilarityQueries" -> operators.SimilarityQueries.defs,
+    "EventQueries" -> operators.EventQueries.defs,
+    "PipelineQueries" -> operators.PipelineQueries.defs,
+    "MultimodalQueries" -> operators.MultimodalQueries.defs,
+    "AnalyticsQueries" -> operators.AnalyticsQueries.defs,
+    "ConnectorQueries" -> operators.ConnectorQueries.defs,
+    "CurationQueries" -> operators.CurationQueries.defs,
+    "ZOrder" -> operators.ZOrder.defs,
+    "KMeans" -> operators.KMeans.defs,
+    "BpeTrain" -> operators.BpeTrain.defs,
+    "ProductQuantization" -> operators.ProductQuantization.defs,
+    "PageRank" -> operators.PageRank.defs,
+    "LabelPropagation" -> operators.LabelPropagation.defs,
+    "TriangleCount" -> operators.TriangleCount.defs,
+    "CorpusStats" -> operators.CorpusStats.defs,
+    "AuditQueries" -> operators.AuditQueries.defs)
+
+  def allDefs: Seq[QueryDef] = families.flatMap(_._2)
+
+  /** The queries `SPARK_GRAFT_ONLY` names (comma-separated full names),
+    * in battery order; None when it is unset. A name that matches no
+    * query fails the run: a typo'd filter would otherwise run nothing. */
+  def only: Option[Seq[QueryDef]] = sys.env.get("SPARK_GRAFT_ONLY").map { list =>
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- allDefs.map(_.name)
+    require(names.nonEmpty && unknown.isEmpty,
+      s"SPARK_GRAFT_ONLY=$list names no such query: ${unknown.toSeq.sorted.mkString(", ")}")
+    allDefs.filter(q => names(q.name))
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

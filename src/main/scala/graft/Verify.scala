@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional local-iteration filter (the driver never sets this).
+    val selected = SparkEntry.only.getOrElse(SparkEntry.allDefs)
     val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Schema pin: name the drifted column up front instead of letting N
@@ -14,18 +16,7 @@ object Verify {
       System.err.println(s"[verify] TESTDATA SCHEMA DRIFT — $d")
     }
     new java.io.File(outDir).mkdirs()
-    // Optional local-iteration filter (the driver never sets this).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
-    // a typo'd name silently verifying nothing wastes a whole iteration
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(s"[verify] SPARK_GRAFT_ONLY names no such query: ${unknown.mkString(", ")}")
-    }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case QueryDef(name, fn, _, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -232,7 +232,8 @@ object BoardPipeline {
     *
     * `issueState` is the state-ledger join (item_id, issue_number,
     * issue_state); items without an issue render as empty lines
-    * (transform.js:153-156). */
+    * (transform.js:153-156), and `unissued` flags a card with at least
+    * one such item, whose body is not yet final. */
   def renderIssueMarkdown(cards: DataFrame, items: DataFrame,
       issueState: DataFrame): DataFrame = {
     val sections = items
@@ -244,7 +245,8 @@ object BoardPipeline {
       .agg(concat_ws("\n",
         transform(
           sort_array(collect_list(struct(col("pos"), col("item_id"), col("line")))),
-          s => s.getField("line"))).as("task_list"))
+          s => s.getField("line"))).as("task_list"),
+        max(col("issue_number").isNull).as("unissued"))
       // `## <name>\n\n<tasks>\n` (transform.js:162,169)
       .withColumn("section",
         concat(lit("## "), col("checklist_name"), lit("\n\n"),
@@ -255,12 +257,14 @@ object BoardPipeline {
         transform(
           sort_array(collect_list(struct(col("checklist_pos"), col("checklist_id"),
             col("section")))),
-          s => s.getField("section"))).as("checklists_md"))
+          s => s.getField("section"))).as("checklists_md"),
+        max(col("unissued")).as("unissued"))
     cards.join(byCard, Seq("card_id"), "left")
       .select(col("card_id"), col("name"),
         concat_ws("\n\n",
           format_string("Imported from <%s>.", col("url")),
           format_string("> %s", col("desc")),
-          coalesce(col("checklists_md"), lit(""))).as("body"))
+          coalesce(col("checklists_md"), lit(""))).as("body"),
+        coalesce(col("unissued"), lit(false)).as("unissued"))
   }
 }

@@ -324,12 +324,16 @@ object EtlMain {
     setFields((cardFields ++ itemFields).reduce(_ unionByName _))
 
     // ---- markdown finalize (etl.js:150-168): cards still below M_LISTS
-    //      get the full checklist-rendered body, then the bump
+    //      whose every active item has an issue get the full
+    //      checklist-rendered body, then the bump. A card with an item
+    //      whose create failed waits: its body would keep an empty line
+    //      for that item, and a card at M_LISTS is never rendered again
     val pending = ledgerFor("card").filter(col("migration") < StateStore.MLists)
       .select(col("entity_kind"), col("entity_id"), col("issue_number"))
     val issueState = ledgerFor("item").select(col("entity_id").as("item_id"),
       col("issue_number"), col("issue_state"))
     val rendered = BoardPipeline.renderIssueMarkdown(cards, items, issueState)
+      .filter(!col("unissued"))
       .select(col("card_id").as("entity_id"), col("body").as("issue_body"))
     val finalize = pending.join(rendered, Seq("entity_id"))
     val mdResps = send(RequestBuilders.updateIssue(finalize, config.owner, config.repo))

@@ -157,16 +157,14 @@ object DedupQueries {
   private def memoized(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     chainMemo.computeIfAbsent((s, key), _ => build)
 
-  /** Drop every memoized chain frame — MUST precede unpersisting the
-    * checkpoint blocks the frames read from (a memo hit after its
-    * blocks are gone cannot recompute: localCheckpoint truncates
-    * lineage). Called by [[graft.SparkEntry.releaseCaches]]. */
-  private[graft] def clearChainMemo(): Unit = chainMemo.clear()
-
-  /** Per-session variant: drops only the given session's memo entries,
-    * so releaseCaches(sparkA) in a multi-session JVM (ClusterProbe,
-    * parallel test suites) cannot discard sparkB's live frames while
-    * B's checkpoint blocks stay persisted. */
+  /** Drop the given session's memoized chain frames — MUST precede
+    * unpersisting the checkpoint blocks the frames read from (a memo
+    * hit after its blocks are gone cannot recompute: localCheckpoint
+    * truncates lineage). Called by [[graft.SparkEntry.releaseCaches]].
+    * Only that session's entries go, so releaseCaches(sparkA) in a
+    * multi-session JVM (ClusterProbe, parallel test suites) cannot
+    * discard sparkB's live frames while B's checkpoint blocks stay
+    * persisted. */
   private[graft] def clearChainMemo(s: SparkSession): Unit =
     chainMemo.keySet.removeIf(_._1 eq s)
 

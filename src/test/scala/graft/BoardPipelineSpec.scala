@@ -103,8 +103,8 @@ class BoardPipelineSpec extends SparkSpecBase {
     val issueState = Seq(
       ("i1", 37L, "closed"),
       ("i2", 42L, "open")).toDF("item_id", "issue_number", "issue_state")
-    val md = BoardPipeline.renderIssueMarkdown(cards, items, issueState)
-      .collect().head.getAs[String]("body")
+    val rendered = BoardPipeline.renderIssueMarkdown(cards, items, issueState).collect().head
+    val md = rendered.getAs[String]("body")
     // QA checklist (pos 1.0) before Specification (pos 2.0)
     assert(md.contains("Imported from <https://trello.example/c/c1/184-incubator-on-github>."))
     assert(md.contains("> Bounty management, discussions, etc, co-located with our public repos."))
@@ -115,7 +115,8 @@ class BoardPipelineSpec extends SparkSpecBase {
     val i2Idx = md.indexOf("- [ ] #42")
     val i1Idx = md.indexOf("- [x] #37")
     assert(i2Idx >= 0 && i1Idx >= 0 && i2Idx < i1Idx)
-    // i4 has no issue → empty line rendered
+    // i4 has no issue → empty line rendered, and the card is flagged
     assert(md.contains("## QA Tasks\n\n\n"))
+    assert(rendered.getAs[Boolean]("unissued"))
   }
 }

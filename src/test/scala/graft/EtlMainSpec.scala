@@ -200,7 +200,10 @@ class EtlMainSpec extends SparkSpecBase {
       col("field_id") === "F_STATUS").count() == 0)
     def cardLevels(df: org.apache.spark.sql.DataFrame): Seq[Int] =
       df.filter(col("entity_kind") === "card").select("migration").collect().map(_.getInt(0)).toSeq
-    assert(cardLevels(first.issueLedger) == Seq(graft.state.StateStore.MLists))
+    // i2 has no issue yet, so c1's checklist cannot render in full: the
+    // finalize waits and c1 stays below M_LISTS
+    assert(!gh.log.exists(_.method == "PATCH"), "c1 finalized without i2's checkbox")
+    assert(cardLevels(first.issueLedger) == Seq(graft.state.StateStore.MCreated))
 
     gh.failing = false
     val sentBefore = gh.log.size
@@ -219,7 +222,15 @@ class EtlMainSpec extends SparkSpecBase {
       .map(r => (variable(r, "itemId"), variable(r, "fieldId")))
     assert(sets.count(_._1 == item("i2")) == 7)
     assert(sets.filterNot(_._1 == item("i2")) == Seq((item("c1"), "F_STATUS")))
-    assert(wire.size == creates.size + adds.size + sets.size, "a run-1 write was sent again")
+    def number(id: String): Long = row(id).getAs[Long]("issue_number")
+    val patches = wire.filter(_.method == "PATCH")
+    assert(patches.map(_.url) == Seq(s"/repos/org1/repo1/issues/${number("c1")}"))
+    val md = mapper.readTree(patches.head.body).at("/body").asText()
+    Seq("i1", "i2", "i4").foreach(id =>
+      assert(md.contains(s"- [ ] #${number(id)}"), s"$id's checkbox missing:\n$md"))
+    assert(wire.indexOf(patches.head) > wire.indexOf(creates.head), "finalized before i2 existed")
+    assert(wire.size == creates.size + adds.size + sets.size + patches.size,
+      "a run-1 write was sent again")
     assert(again.report.failed == 0 && again.report.sent == wire.size)
     assert(ids(again.issueLedger) == Seq("c1", "i1", "i2", "i4"))
     assert(again.fieldLedger.count() == 7 + 9 + 7 + 7)

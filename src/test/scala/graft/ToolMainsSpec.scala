@@ -157,63 +157,68 @@ class ToolMainsSpec extends AnyFunSuite {
       s"Hadoop FileSystem renames/deletes outside StateStore: ${movers.mkString(", ")}")
   }
 
-  test("Bench contention guard tracks the newest committed anchor artifact") {
-    // temp-dir resolution: highest round wins, field parsed exactly
-    val dir = scratch("anchorguard")
-    def write(name: String, body: String): Unit = {
-      val w = new java.io.PrintWriter(new File(dir, name), "UTF-8")
-      try w.println(body) finally w.close()
-    }
-    write("BENCH_ANCHOR_r17.json", """{"round": 17, "control_q01_q30_s": 9.999}""")
-    write("BENCH_ANCHOR_r18.json", """{"round": 18,
- "control_q01_q30_s": 7.799,
- "total_min_s": 129.408}""")
-    assert(Bench.anchorControlFromArtifacts(dir) === Some(7.799),
-      "guard must read control_q01_q30_s from the HIGHEST-round anchor")
-    assert(Bench.anchorControlFromArtifacts(scratch("noanchor")).isEmpty,
-      "no anchor artifact must disable the guard (None), not invent a control")
-    // repo-root resolution: the committed artifact the driver-run Bench
-    // (CWD = repo root) will actually grade against resolves and is sane
-    val repoRoot = new File(sys.props.getOrElse("user.dir", "."))
-    val fromRepo = Bench.anchorControlFromArtifacts(repoRoot)
-    assert(fromRepo.exists(c => c > 1.0 && c < 60.0),
-      s"repo-root anchor control missing or implausible: $fromRepo")
+  test("Bench times a filtered battery and its family subtotals sum to its total") {
+    val dir = scratch("bench")
+    val (exit, out) = runMain("graft.Bench", Seq.empty,
+      Map("SPARK_GRAFT_SF_DIR" -> sf0001, "SPARK_GRAFT_CPUS" -> "4",
+        "SPARK_GRAFT_ONLY" -> "q01_pricing_summary,q06_star_join_region_year"), dir)
+    assert(exit == 0, s"Bench exit $exit:\n${out.takeRight(3000)}")
+    val last = out.trim.linesIterator.toSeq.last
+    assert(last.contains(""""metric":"total"""") && last.contains(""""n_queries":2"""),
+      s"last line is not the compact summary:\n${out.takeRight(3000)}")
+    val detail = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new File(dir, "BENCH_DETAIL_ONLY.json"))
+    val rows = detail.get("rows").elements().asScala.toSeq
+    assert(rows.map(_.get("name").asText()) ==
+      Seq("q01_pricing_summary", "q06_star_join_region_year"))
+    assert(rows.forall(r => r.get("family").asText() == "RelationalQueries" &&
+      r.get("passes_s").size() == Bench.Passes && r.get("failed_passes").asInt() == 0))
+    val families = detail.get("families").properties().asScala.map(_.getValue.asDouble()).sum
+    assert(math.abs(families - detail.get("total_min_s").asDouble()) < 0.0015,
+      s"family subtotals do not sum to the total: $detail")
+    assert(!new File(dir, "BENCH_DETAIL.json").exists, "a filtered run wrote the full-sweep record")
   }
 
-  test("Bench per-query hot-row guard reads the anchor's queries map " +
-      "(r19 verdict item 4: the total-control test alone is too coarse)") {
-    val dir = scratch("hotrows")
-    def write(name: String, body: String): Unit = {
-      val w = new java.io.PrintWriter(new File(dir, name), "UTF-8")
-      try w.println(body) finally w.close()
+  test("every SparkEntry query sits in exactly one family; qNN prefixes are unique") {
+    val families = SparkEntry.families
+    assert(families.map(_._1).distinct.size == families.size, "a family is listed twice")
+    // each family is named after the object that defines its queries
+    families.foreach { case (family, defs) =>
+      val module = Class.forName(s"graft.operators.$family$$").getField("MODULE$").get(null)
+      val own = module.getClass.getMethod("defs").invoke(module)
+        .asInstanceOf[Seq[QueryDef]].map(_.name)
+      assert(defs.map(_.name) == own, s"family $family does not list $family.defs")
     }
-    // highest round wins; parsing must stop at the queries BLOCK and
-    // not leak into sibling objects (evidence_passes carries qNN keys
-    // with array values — the pair regex must not match those)
-    write("BENCH_ANCHOR_r17.json",
-      """{"round": 17, "control_q01_q30_s": 9.0,
- "queries":{"q01_pricing_summary":9.999},
- "evidence_passes":{"q01_pricing_summary":{"A":[9.9]}}}""")
-    write("BENCH_ANCHOR_r18.json",
-      """{"round": 18, "control_q01_q30_s": 7.799,
- "queries":{"q01_pricing_summary":0.194,"q59_pivot":0.185},
- "evidence_passes":{"q01_pricing_summary":{"A":[0.2,0.21]},"q59_pivot":{"A":[0.19]}}}""")
-    val qs = Bench.anchorQueriesFromArtifacts(dir)
-    assert(qs === Map("q01_pricing_summary" -> 0.194, "q59_pivot" -> 0.185),
-      s"hot-row guard must read per-query minima from the HIGHEST-round anchor: $qs")
-    assert(Bench.anchorQueriesFromArtifacts(scratch("noanchor2")).isEmpty,
-      "no anchor artifact must disable the per-query trigger, not invent minima")
-    // repo-root resolution: the committed anchor's per-query map loads
-    // whole and agrees with the scalar control field
-    val repoRoot = new File(sys.props.getOrElse("user.dir", "."))
-    val fromRepo = Bench.anchorQueriesFromArtifacts(repoRoot)
-    assert(fromRepo.size > 100,
-      s"repo-root anchor queries map implausibly small: ${fromRepo.size}")
-    val control = fromRepo.collect {
-      case (n, v) if n.takeWhile(_ != '_').drop(1).toInt <= 30 => v
-    }.sum
-    val scalar = Bench.anchorControlFromArtifacts(repoRoot).get
-    assert(math.abs(control - scalar) < 0.02,
-      s"per-query control sum $control disagrees with control_q01_q30_s $scalar")
+    val names = families.flatMap(_._2.map(_.name))
+    assert(names.distinct.size == names.size, "a query sits in two families")
+    assert(names.toSet == SparkEntry.queries.keySet)
+    val prefixes = names.map(_.takeWhile(_ != '_'))
+    assert(prefixes.distinct.size == prefixes.size, "duplicate qNN prefix")
+  }
+
+  test("src/main reads exactly the pinned set of environment variables") {
+    // a new knob is a new mode to test and document: adding one means
+    // adding it here, in the same change
+    val pinned = Set(
+      "GITHUB_API_URL", "GITHUB_TOKEN", "GRAFT_API_FIELDS_DSV2",
+      "SPARK_GRAFT_CLUSTER", "SPARK_GRAFT_CLUSTER_EXEC_MEM", "SPARK_GRAFT_CLUSTER_ONLY",
+      "SPARK_GRAFT_CLUSTER_OUT", "SPARK_GRAFT_CLUSTER_PASSES", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_MASTER", "SPARK_GRAFT_MEM_FRACTION", "SPARK_GRAFT_ONLY",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKEW_CROWD", "SPARK_GRAFT_SKEW_KEYS",
+      "SPARK_GRAFT_SKEW_ROWS", "SPARK_GRAFT_SPILL_ONLY", "SPARK_GRAFT_WARM_DIR",
+      "SPARK_HOME", "SPARK_MASTER")
+    val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
+    val read = "(?:sys\\.env(?:\\.\\w+)?|System\\.getenv)\\(\\s*(\"[^\"]*\")?".r
+    val sources = Files.walk(srcMain).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val reads = sources.flatMap(p => read.findAllMatchIn(Files.readString(p))
+      .map(m => srcMain.relativize(p).toString -> Option(m.group(1))))
+    // a key held in a variable would slip past the pin
+    val unnamed = reads.collect { case (file, None) => file }
+    assert(unnamed.isEmpty, s"environment read without a literal key in: ${unnamed.distinct.mkString(", ")}")
+    val keys = reads.flatMap(_._2).map(_.stripPrefix("\"").stripSuffix("\"")).toSet
+    assert(keys == pinned,
+      s"added: ${(keys -- pinned).toSeq.sorted.mkString(", ")}; " +
+        s"removed: ${(pinned -- keys).toSeq.sorted.mkString(", ")}")
   }
 }

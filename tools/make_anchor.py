@@ -4,7 +4,9 @@
 Replicates the r14 anchor recipe (BASELINE.md "Round-14 anchor"):
 the per-query minima ENVELOPE over two full sweeps (A, B), each
 min-of-3 warm passes after the sf0.001 JIT warm-up, sf0.1, local[32],
-gc_every=1. Inputs are the two sweeps' BENCH_DETAIL sidecars.
+a forced GC after every pass. Inputs are the two sweeps' BENCH_DETAIL
+sidecars; their rows must carry `family` (sidecars written before the
+families came from SparkEntry do not).
 
 Usage: make_anchor.py <round> <detail_A.json> <detail_B.json> <out.json>
 """
@@ -31,60 +33,21 @@ def main() -> None:
     control = round(sum(v for n, v in queries.items()
                         if int(n[1:n.index("_")]) <= 30), 3)
 
-    # family membership is not in the detail rows, so recompute the
-    # subtotals by re-running Bench.familyOf's partition in python.
-    # This partition is a hand-copy of Bench.familyOf — cross-validated
-    # below against each sweep sidecar's Bench-computed 'families' dict,
-    # so a future reclassification in Bench.scala fails loudly here
-    # instead of silently skewing the anchor's subtotals.
-    text = {31, 32, 33, 34, 69, 70, 83, 88, 96, 111, 112, 115, 123, 125,
-            129, 132, 138, 139, 140, 147, 148, 154, 160, 162, 167, 172,
-            176, 179, 181, 182, 183, 184, 186, 187, 188, 189, 190, 193, 195}
-    dedup = {35, 36, 37, 38, 77, 85, 102, 109, 110, 113, 118, 121, 122,
-             128, 144, 146, 158, 169, 173, 174, 191}
-    ann = {39, 40, 41, 78, 81, 94, 104, 116, 119, 126, 130, 164, 166, 185}
-    events = {42, 43, 44, 45, 46, 47, 48, 67, 108, 142, 143, 150, 151,
-              155, 157, 159, 161, 165, 170, 175, 178, 180, 194}
-    multimodal = {53, 54, 55, 101, 127, 131, 133, 136, 137, 141}
-    curation = {84, 86, 87, 89, 90, 91, 92, 93, 95, 97, 98, 99, 100, 103,
-                105, 106, 114, 117, 120, 124, 134, 135, 145, 149, 152,
-                153, 156, 163, 168, 171, 177, 192}
-
-    def family(n: str) -> str:
-        q = int(n[1:n.index("_")])
-        if q <= 30:
-            return "relational"
-        for fam, s in (("text", text), ("dedup", dedup), ("ann", ann),
-                       ("events", events), ("multimodal", multimodal),
-                       ("curation", curation)):
-            if q in s:
-                return fam
-        return "connector"
-
-    # drift check: the Python partition applied to each sweep's own
-    # min_s rows must reproduce that sweep's Bench-computed subtotals
-    for label, sweep, rows in (("A", a, rows_a), ("B", b, rows_b)):
-        mine = {}
-        for n, r in rows.items():
-            f = family(n)
-            mine[f] = mine.get(f, 0.0) + r["min_s"]
-        for f, v in sweep["families"].items():
-            if abs(mine.get(f, 0.0) - v) > 0.01:
-                raise SystemExit(
-                    f"family partition drift vs Bench.familyOf (sweep {label},"
-                    f" family {f}): python {mine.get(f, 0.0):.3f}"
-                    f" != sidecar {v:.3f}")
-
+    # each detail row names its defining object (SparkEntry.families)
+    family = {n: r["family"] for n, r in rows_a.items()}
+    drift = sorted(n for n, r in rows_b.items() if r["family"] != family[n])
+    if drift:
+        raise SystemExit(f"sweeps disagree on the family of {drift}")
     families = {}
     for n, v in queries.items():
-        families[family(n)] = round(families.get(family(n), 0.0) + v, 3)
+        families[family[n]] = round(families.get(family[n], 0.0) + v, 3)
 
     anchor = {
         "round": int(rnd),
         "methodology": (
             "per-query envelope (min) over two same-code sweeps in one "
             "session, each min-of-3 warm passes after sf0.001 JIT warm-up, "
-            "sf0.1, local[32], gc_every=1; per-pass times recorded per query"),
+            "sf0.1, local[32], GC after every pass; per-pass times recorded per query"),
         "n_queries": len(queries),
         "total_min_s": total,
         "control_q01_q30_s": control,

@@ -28,8 +28,8 @@ for sf in sf1 sf3 sf10; do
   echo "=== bench $sf ==="
   SPARK_DRIVER_MEM=64g \
   SPARK_GRAFT_SF_DIR=target/$sf \
-  SPARK_GRAFT_BENCH_ONLY=$QUERIES \
-  SPARK_GRAFT_BENCH_DETAIL=BENCH_SCALE_${sf}_r18_detail.json \
-  SPARK_GRAFT_BENCH_FULL=BENCH_SCALE_${sf}_r18.json \
+  SPARK_GRAFT_ONLY=$QUERIES \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -E '^\{|"metric"' | tail -2
+  mv BENCH_DETAIL_ONLY.json BENCH_SCALE_${sf}_r18_detail.json
+  mv BENCH_FULL_ONLY.json BENCH_SCALE_${sf}_r18.json
 done
