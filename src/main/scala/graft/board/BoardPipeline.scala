@@ -259,7 +259,7 @@ object BoardPipeline {
             col("section")))),
           s => s.getField("section"))).as("checklists_md"),
         max(col("unissued")).as("unissued"))
-    cards.join(byCard, Seq("card_id"), "left")
+    cards.join(broadcast(byCard), Seq("card_id"), "left")
       .select(col("card_id"), col("name"),
         concat_ws("\n\n",
           format_string("Imported from <%s>.", col("url")),

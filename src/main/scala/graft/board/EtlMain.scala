@@ -31,7 +31,17 @@ import org.apache.spark.sql.types._
   * work for both, so a run costs six sends, not one per phase and kind.
   * Same request set, idempotent like the reference (re-running sends
   * nothing once the ledger matches), but the expensive derivation stays
-  * a parallel Spark plan and only the change set is serialized. Request
+  * a parallel Spark plan and only the change set is serialized.
+  *
+  * At board scale a run is bound by Spark jobs, not rows, so every
+  * phase is planned to launch few: the derived frames, change sets and
+  * ledger generations are pinned as one partition their consumers know
+  * is one (`pin`), so no join, aggregate or send order over them
+  * shuffles; the other side of each join between them is a broadcast
+  * board-sized frame; empty ledgers are empty local relations that
+  * Catalyst folds out at plan time; and title drift and closes read
+  * only the pre-run ledger, so on a cold run they launch no job at all.
+  * A cold migration of the 4-issue fixture board runs 31 jobs. Request
   * order inside a phase is deterministic: entity kind (every card
   * before every item), entity id, then field. Across phases, what a
   * request needs was created by an earlier phase: the project add
@@ -96,13 +106,25 @@ object EtlMain {
   /** The issue ledger's key: every phase sends and folds acks by it. */
   private val EntityKey = Seq("entity_kind", "entity_id")
 
+  /** An empty `LocalRelation`, not an empty RDD: Catalyst folds a
+    * join, anti-join or union against it at plan time, so a cold run's
+    * first create, change set and merge launch no job for the ledger. */
   def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], issueLedgerSchema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), issueLedgerSchema)
 
   def emptyFieldLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], fieldLedgerSchema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), fieldLedgerSchema)
 
   private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Materialize `df` as one pinned partition that later plans know is
+    * one partition. A checkpoint of a plan that AQE ran reports unknown
+    * partitioning, so every join, aggregate and sort over it would
+    * shuffle it again, each shuffle a job of its own. Re-pinning the
+    * pinned rows through a narrow `coalesce(1)`, a plan AQE leaves
+    * alone, keeps `SinglePartition`; it is lazy, so it costs no job. */
+  private def pin(df: DataFrame): DataFrame =
+    df.coalesce(1).localCheckpoint(true).coalesce(1).localCheckpoint(false)
 
   def run(
       spark: SparkSession,
@@ -136,33 +158,35 @@ object EtlMain {
     ConfigValidation.requireAllPresent(
       config.fieldIds.values.toSeq.toDF("id"), fields.select("id"), "id",
       "project field")
-    val options = ApiSource.fieldOptions(fields)
+    val options = RequestBuilders.optionIds(ApiSource.fieldOptions(fields))
 
     // ---- normalize + derive
     val board = BoardPipeline.readBoard(spark, boardPath)
     val n = BoardPipeline.normalized(board)
-    // localCheckpoint (not cache): cache keeps the whole nested-board
-    // derivation inside every downstream phase's logical plan, and the
-    // 8 phases × (change-set + ledger) queries each re-analyze that
-    // tree — measured ~90 s of pure driver-side Catalyst/codegen per
-    // run on the fixture board. The checkpoint truncates the plan to a
-    // scan over the derived rows; phases analyze small trees.
-    val cards = BoardPipeline.customizeCards(
-      n, config.listStatusMap, config.secondaryAdminFieldId)
-      .coalesce(1).localCheckpoint(true)
+    // pinned (not cached): a cache keeps the whole nested-board
+    // derivation inside every downstream phase's logical plan, and each
+    // phase's change-set and ledger queries re-analyze that tree —
+    // measured ~90 s of pure driver-side Catalyst/codegen per run on
+    // the fixture board. The checkpoint truncates the plan to a scan
+    // over the derived rows; phases analyze small trees.
+    val cards = pin(BoardPipeline.customizeCards(
+      n, config.listStatusMap, config.secondaryAdminFieldId))
     // only the items of active cards become issues: the reference
     // skips a closed card or a card in an unmapped list together with
     // its checklist (etl.js:26-29, :148-151). The join on card_id both
     // restricts the items and carries the parent-card fields the item
     // field phase writes, so no later phase joins the cards again (each
     // broadcast of the cards is a job of its own)
-    val items = BoardPipeline.customizeItems(n)
-      .join(cards.select(col("card_id"), col("name").as("card_name"),
-        col("owner").as("card_owner"), col("fallback_owner").as("card_fallback")),
-        Seq("card_id"))
-      .coalesce(1).localCheckpoint(true)
+    val items = pin(BoardPipeline.customizeItems(n)
+      .join(broadcast(cards.select(col("card_id"), col("name").as("card_name"),
+        col("owner").as("card_owner"), col("fallback_owner").as("card_fallback"))),
+        Seq("card_id")))
 
-    var ledger = issueLedger0.getOrElse(emptyLedger(spark))
+    // the ledger as this run found it: title drift and closes read it,
+    // since an issue this run creates carries its title and an open,
+    // incomplete item (customizeItems drops complete ones)
+    val ledger0 = issueLedger0.getOrElse(emptyLedger(spark))
+    var ledger = ledger0
     var fieldLedger = fieldLedger0.getOrElse(emptyFieldLedger(spark))
 
     def ledgerFor(kind: String): DataFrame =
@@ -174,10 +198,10 @@ object EtlMain {
     //      the ledger is change-set-sized, so one partition keeps each
     //      lineage cut a single-task job (the suite ran 4× faster)
     def patchLedger(column: String, acked: DataFrame): Unit =
-      ledger = ledger
+      ledger = pin(ledger
         .join(broadcast(acked.toDF(EntityKey :+ "__acked": _*)), EntityKey, "left")
         .withColumn(column, coalesce(col("__acked"), col(column)))
-        .drop("__acked").coalesce(1).localCheckpoint(true)
+        .drop("__acked"))
 
     // ---- phase: create missing issues for a desired frame
     //      (entity_kind, entity_id, title, issue_body, assignees); the
@@ -192,7 +216,8 @@ object EtlMain {
             j.at("/state").asText("open"), j.at("/title").asText(),
             j.at("/html_url").asText(), null: String, StateStore.MCreated)
         }.toDF(issueLedgerSchema.fieldNames.toIndexedSeq: _*)
-        ledger = ledger.unionByName(created)
+        // one partition: the next phases sort and join it unshuffled
+        ledger = ledger.unionByName(created).coalesce(1)
       }
     }
 
@@ -214,12 +239,11 @@ object EtlMain {
     def setFields(desired: DataFrame): Unit = {
       // pinned once: the send and the ledger merge both read the change
       // set, and re-deriving it runs the per-field union again
-      val changes = StateStore.changeSet(desired, fieldLedger,
-        Seq("entity_id", "field_id"), Seq("value"))
-        .coalesce(1).localCheckpoint(true)
+      val changes = pin(StateStore.changeSet(desired, fieldLedger,
+        Seq("entity_id", "field_id"), Seq("value")))
       val withNode = changes
-        .join(ledger.select(col("entity_kind"), col("entity_id"),
-          col("project_item_id").as("item_node_id")), Seq("entity_id"))
+        .join(broadcast(ledger.select(col("entity_kind"), col("entity_id"),
+          col("project_item_id").as("item_node_id"))), Seq("entity_id"))
       val reqs = RequestBuilders.setFieldValue(withNode, options, config.projectNodeId)
       val resps = send(reqs, EntityKey :+ "field_id")
       // record ONLY the writes the API acknowledged (2xx): a failed or
@@ -230,10 +254,10 @@ object EtlMain {
       if (resps.nonEmpty) {
         val acked = resps.map { case (keys, _) => (keys(1), keys(2)) }
           .toDF("entity_id", "field_id")
-        fieldLedger = StateStore.merge(fieldLedger,
+        fieldLedger = pin(StateStore.merge(fieldLedger,
           changes.join(broadcast(acked), Seq("entity_id", "field_id"))
             .select("entity_id", "field_id", "value"),
-          Seq("entity_id", "field_id")).coalesce(1).localCheckpoint(true)
+          Seq("entity_id", "field_id")))
       }
     }
 
@@ -254,9 +278,12 @@ object EtlMain {
     createIssues(cardDesired.unionByName(itemDesired))
 
     // ---- item title-drift updates, then close issues whose Trello item
-    //      completed after import (etl.js:199-226)
+    //      completed after import (etl.js:199-226). Both check only the
+    //      pre-run ledger, so on a cold run both fold to an empty
+    //      relation and send without a job
+    val items0 = ledger0.filter(col("entity_kind") === "item")
     val titleDrift = itemDesired
-      .join(ledgerFor("item").select(col("entity_kind"), col("entity_id"),
+      .join(items0.select(col("entity_kind"), col("entity_id"),
         col("issue_number"), col("issue_title")), EntityKey)
       .filter(col("title") =!= col("issue_title"))
     val driftResps = send(RequestBuilders.updateIssue(
@@ -270,7 +297,7 @@ object EtlMain {
 
     val toClose = n.checkItems.filter(col("state") === "complete")
       .select(col("id").as("entity_id"))
-      .join(ledgerFor("item").filter(col("issue_state") === "open")
+      .join(items0.filter(col("issue_state") === "open")
         .select(col("entity_kind"), col("entity_id"), col("issue_number")), Seq("entity_id"))
       .withColumn("state", lit("closed"))
     val closeResps = send(RequestBuilders.updateIssue(toClose, config.owner, config.repo))
@@ -285,43 +312,44 @@ object EtlMain {
     //      (etl.js:234-330); conditional fields mirror the reference's
     //      truthiness guards (labels only when present). Item parent
     //      fields join the card ledger for the parent issue url
-    //      (card._issue, etl.js:52)
+    //      (card._issue, etl.js:52). Each kind's rows come from one pass
+    //      over its frame: a (field_id, value) struct per field, null
+    //      where the field's guard fails, exploded
     val itemsWithCard = items
-      .join(ledgerFor("card").select(col("entity_id").as("card_id"),
-        col("html_url").as("card_issue_url")), Seq("card_id"), "left")
-    def field(rows: DataFrame, idCol: String, key: String, value: Column): DataFrame =
-      rows.select(col(idCol).as("entity_id"), lit(config.fieldIds(key)).as("field_id"),
-        value.as("value"))
-    def cardField(key: String, value: Column, rows: DataFrame = cards): DataFrame =
-      field(rows, "card_id", key, value)
-    def itemField(key: String, value: Column, rows: DataFrame = itemsWithCard): DataFrame =
-      field(rows, "item_id", key, value)
-    val cardFields = Seq(
-      cardField(Fields.TrelloId, col("card_id")),
-      cardField(Fields.TrelloType, lit("Card")),
-      cardField(Fields.CardStatus, col("card_status")),
-      cardField(Fields.CardType, col("card_type")),
-      cardField(Fields.Owner, col("owner")),
-      cardField(Fields.FallbackOwner, col("fallback_owner")),
+      .join(broadcast(ledgerFor("card").select(col("entity_id").as("card_id"),
+        col("html_url").as("card_issue_url"))), Seq("card_id"), "left")
+    def fieldRows(rows: DataFrame, idCol: String,
+        fields: Seq[(String, Column, Column)]): DataFrame =
+      rows.select(col(idCol).as("entity_id"), explode(filter(array(fields.map {
+        case (key, value, guard) =>
+          when(guard, struct(lit(config.fieldIds(key)).as("field_id"), value.as("value")))
+      }: _*), _.isNotNull)).as("f"))
+        .select(col("entity_id"), col("f.field_id"), col("f.value"))
+    val always = lit(true)
+    val cardFields = fieldRows(cards, "card_id", Seq(
+      (Fields.TrelloId, col("card_id"), always),
+      (Fields.TrelloType, lit("Card"), always),
+      (Fields.CardStatus, col("card_status"), always),
+      (Fields.CardType, col("card_type"), always),
+      (Fields.Owner, col("owner"), always),
+      (Fields.FallbackOwner, col("fallback_owner"), always),
       // only when the card has real labels (etl.js:131-137 guards on
       // length; the "!Label" default-fill is presentation-only)
-      cardField(Fields.Labels, element_at(col("label_names"), 1),
-        cards.filter(element_at(col("label_names"), 1) =!= "!Label")))
-    val itemFields = Seq(
-      itemField(Fields.TrelloId, col("item_id")),
-      itemField(Fields.TaskParent, col("card_name")),
-      itemField(Fields.TaskParentLink, col("card_issue_url")),
-      itemField(Fields.TrelloType, lit("Task")),
-      itemField(Fields.TaskType, col("task_type")),
-      itemField(Fields.Owner, col("card_owner")),
-      itemField(Fields.FallbackOwner, col("card_fallback")),
+      (Fields.Labels, element_at(col("label_names"), 1),
+        element_at(col("label_names"), 1) =!= "!Label")))
+    val itemFields = fieldRows(itemsWithCard, "item_id", Seq(
+      (Fields.TrelloId, col("item_id"), always),
+      (Fields.TaskParent, col("card_name"), always),
+      (Fields.TaskParentLink, col("card_issue_url"), always),
+      (Fields.TrelloType, lit("Task"), always),
+      (Fields.TaskType, col("task_type"), always),
+      (Fields.Owner, col("card_owner"), always),
+      (Fields.FallbackOwner, col("card_fallback"), always),
       // numeric normalize then stringify (gh.js:487-494 parseFloat →
       // toString; Java renders 1.0 where JS renders 1 — documented)
-      itemField(Fields.Dash, col("amount").cast("double").cast("string"),
-        itemsWithCard.filter(col("amount").isNotNull)),
-      itemField(Fields.TaskAssignee, col("assignee"),
-        itemsWithCard.filter(col("assignee") =!= "!Assigned")))
-    setFields((cardFields ++ itemFields).reduce(_ unionByName _))
+      (Fields.Dash, col("amount").cast("double").cast("string"), col("amount").isNotNull),
+      (Fields.TaskAssignee, col("assignee"), col("assignee") =!= "!Assigned")))
+    setFields(cardFields.unionByName(itemFields))
 
     // ---- markdown finalize (etl.js:150-168): cards still below M_LISTS
     //      whose every active item has an issue get the full
@@ -330,12 +358,12 @@ object EtlMain {
     //      for that item, and a card at M_LISTS is never rendered again
     val pending = ledgerFor("card").filter(col("migration") < StateStore.MLists)
       .select(col("entity_kind"), col("entity_id"), col("issue_number"))
-    val issueState = ledgerFor("item").select(col("entity_id").as("item_id"),
-      col("issue_number"), col("issue_state"))
+    val issueState = broadcast(ledgerFor("item").select(col("entity_id").as("item_id"),
+      col("issue_number"), col("issue_state")))
     val rendered = BoardPipeline.renderIssueMarkdown(cards, items, issueState)
       .filter(!col("unissued"))
       .select(col("card_id").as("entity_id"), col("body").as("issue_body"))
-    val finalize = pending.join(rendered, Seq("entity_id"))
+    val finalize = broadcast(pending).join(rendered, Seq("entity_id"))
     val mdResps = send(RequestBuilders.updateIssue(finalize, config.owner, config.repo))
     // every pending card sits below M_LISTS, so an acked one bumps to it
     if (mdResps.nonEmpty)

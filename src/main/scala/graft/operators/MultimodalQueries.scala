@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.HintBridge
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
@@ -1040,7 +1041,10 @@ object MultimodalQueries {
         val pairs = img.unionByName(aud).unionByName(vid)
         val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val cc = ConnectedComponents.run(edges)
-        val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
+        // q77's join: the sizes side never broadcasts, so the build side
+        // does not follow which of the two shuffle stages ends first
+        val sizes = HintBridge.noBroadcast(
+          cc.groupBy("cluster").agg(count(lit(1)).as("cluster_size")))
         cc.join(sizes, Seq("cluster"))
           .withColumn("orig",
             when(col("node") >= Ids.VariantOffset, col("node") - Ids.VariantOffset).otherwise(col("node")))

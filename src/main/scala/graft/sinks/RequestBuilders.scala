@@ -84,30 +84,33 @@ object RequestBuilders {
         struct(lit(projectNodeId).as("projectId"),
                col("issue_node_id").as("issueId")).as("variables"))))
 
+  /** The single-select option dim, collected: field id → (option name
+    * → option id). Option dims are a project's few select fields, so
+    * the lookup travels as a literal in the plan, not as a join.
+    * `options` dim columns: `field_id`, `option_name`, `option_id`. */
+  def optionIds(options: DataFrame): Map[String, Map[String, String]] =
+    options.select("field_id", "option_name", "option_id").collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (field, rows) => field -> rows.map(r => r.getString(1) -> r.getString(2)).toMap }
+
   /** POST /graphql updateProjectNextItemField, with the reference's
     * name→option-id translation (gh.js:439-452): when the target field
     * is single-select (has options), the human value is replaced by its
     * option id and an unknown value raises from the executor with the
     * offending value in the message; free-form fields pass through.
     *
-    * Input columns: `item_node_id`, `field_id`, `value`.
-    * `options` dim columns: `field_id`, `option_name`, `option_id`. */
-  def setFieldValue(df: DataFrame, options: DataFrame, projectNodeId: String): DataFrame = {
-    val optDim = options.select(col("field_id").as("__opt_field"),
-      col("option_name").as("__opt_name"), col("option_id").as("__opt_id"))
-    val selectFields = optDim.select(col("__opt_field").as("__sel_field")).distinct()
-      .withColumn("__has_options", lit(true))
-    df.join(broadcast(selectFields), col("field_id") === col("__sel_field"), "left")
-      .join(broadcast(optDim),
-        col("field_id") === col("__opt_field") && col("value") === col("__opt_name"),
-        "left")
-      .withColumn("resolved_value",
-        when(col("__has_options").isNull, col("value"))
-          .when(col("__opt_id").isNotNull, col("__opt_id"))
+    * Input columns: `item_node_id`, `field_id`, `value`. `options` is
+    * [[optionIds]] of the field dim. */
+  def setFieldValue(df: DataFrame, options: Map[String, Map[String, String]],
+      projectNodeId: String): DataFrame = {
+    val fieldOptions = element_at(typedLit(options), col("field_id"))
+    val optionId = element_at(fieldOptions, col("value"))
+    df.withColumn("resolved_value",
+        when(fieldOptions.isNull, col("value"))
+          .when(optionId.isNotNull, optionId)
           .otherwise(raise_error(concat(
             lit("Could not find '"), col("value"), lit("' among options for '"),
             col("field_id"), lit("'")))))
-      .drop("__sel_field", "__has_options", "__opt_field", "__opt_name", "__opt_id")
       .withColumn("method", lit("POST"))
       .withColumn("url", lit("/graphql"))
       .withColumn("body", to_json(struct(

@@ -1,7 +1,7 @@
 package graft.state
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -111,9 +111,10 @@ object StateStore {
     // may have scanned before — drop the cached listing or the next
     // plan reads deleted part files (FileNotFoundException)
     if (recover(fs, dest)) spark.catalog.refreshByPath(path)
+    // an empty LocalRelation, which Catalyst folds out of a join or a
+    // union at plan time; an empty RDD would still launch a job
     if (fs.exists(dest)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   // ---------------------------------------------------------------

@@ -3,7 +3,11 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.board.EtlMain
 import graft.board.EtlMain.Fields
-import graft.sinks.HttpSink.{HttpRequest, HttpResponse, Transport}
+import graft.sinks.HttpSink.{HttpRequest, HttpResponse, SinkReport, Transport}
+import graft.state.StateStore
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -364,6 +368,96 @@ class EtlMainSpec extends SparkSpecBase {
       assert(keys.size == 1)
       assert(mapper.readTree(resp.body).at("/ok").asText() == keys.head)
     }
+  }
+
+  test("a re-run PATCHes the title of a renamed item and closes an item " +
+      "completed since, and the ledger records both (etl.js:199-226)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift")
+    try {
+      val first = EtlMain.run(spark, boardPath, config, new FakeGithub, sleeper = _ => ())
+      val issuePath = s"$dir/issue_ledger"
+      val fieldPath = s"$dir/field_ledger"
+      StateStore.save(first.issueLedger, issuePath)
+      StateStore.save(first.fieldLedger, fieldPath)
+      val number = first.issueLedger.collect()
+        .map(r => r.getAs[String]("entity_id") -> r.getAs[Long]("issue_number")).toMap
+
+      // on Trello since: i4 renamed, i1 completed
+      val board = mapper.readTree(new java.io.File(boardPath))
+      board.get("checklists").forEach(_.get("checkItems").forEach { node =>
+        val item = node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        item.get("id").asText() match {
+          case "i4" => item.put("name", "verify the new flow")
+          case "i1" => item.put("state", "complete")
+          case _ =>
+        }
+      })
+      val path = dir.resolve("board.json")
+      mapper.writeValue(path.toFile, board)
+
+      val gh = new FakeGithub
+      val again = EtlMain.run(spark, path.toString, config, gh,
+        issueLedger0 = Some(StateStore.load(spark, issuePath, EtlMain.issueLedgerSchema)),
+        fieldLedger0 = Some(StateStore.load(spark, fieldPath, EtlMain.fieldLedgerSchema)),
+        sleeper = _ => ())
+      val wire = gh.log.filterNot(_.method == "GET").toSeq
+      assert(wire.map(r => (r.method, r.url)) == Seq(
+        ("PATCH", s"/repos/org1/repo1/issues/${number("i4")}"),
+        ("PATCH", s"/repos/org1/repo1/issues/${number("i1")}")), wire)
+      val retitle = mapper.readTree(wire(0).body)
+      assert(retitle.at("/title").asText() == "verify the new flow")
+      assert(!retitle.has("state"))
+      val close = mapper.readTree(wire(1).body)
+      assert(close.at("/state").asText() == "closed")
+      assert(!close.has("title"))
+      assert(again.report == SinkReport(2, 0, 0))
+
+      val row = again.issueLedger.collect().map(r => r.getAs[String]("entity_id") -> r).toMap
+      assert(row("i4").getAs[String]("issue_title") == "verify the new flow")
+      assert(row("i4").getAs[String]("issue_state") == "open")
+      assert(row("i1").getAs[String]("issue_state") == "closed")
+      assert(row("i1").getAs[String]("issue_title") == first.issueLedger
+        .filter(col("entity_id") === "i1").select("issue_title").head().getString(0))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  /** Spark jobs of one cold migration of the fixture board: a ratchet,
+    * lower it when a change saves jobs. */
+  private val ColdMigrationJobs = 31
+
+  test("a cold migration stays within its Spark job budget, and its " +
+      "title-drift and close phases launch no job") {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // the jobs started before each request, the listener bus drained
+    val gh = new FakeGithub {
+      val jobsAt = mutable.Buffer.empty[Int]
+      override def send(req: HttpRequest): HttpResponse = {
+        ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+        jobsAt += jobs.get
+        super.send(req)
+      }
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      EtlMain.run(spark, boardPath, config, gh, sleeper = _ => ())
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"${jobs.get} jobs")
+    assert(jobs.get <= ColdMigrationJobs)
+    // title drift and closes run between the last issue create and the
+    // first project add; the one job there is the add phase's fetch
+    val log = gh.log.toIndexedSeq
+    val lastCreate = log.lastIndexWhere(isCreate)
+    val firstAdd = log.indexWhere(_.body.contains("addProjectNextItem"))
+    assert(lastCreate < firstAdd)
+    assert(gh.jobsAt(firstAdd) - gh.jobsAt(lastCreate) == 1,
+      s"${gh.jobsAt(firstAdd) - gh.jobsAt(lastCreate)} jobs between the creates and the adds")
   }
 
   test("missing configured field fails mustInit (gh.js:144-176 gate)") {

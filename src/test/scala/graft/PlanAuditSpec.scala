@@ -158,6 +158,17 @@ class PlanAuditSpec extends SparkSpecBase {
     } finally SparkEntry.releaseCaches(spark)
   }
 
+  test("q136: the cluster-size side never broadcasts, so the build side " +
+      "does not follow which of the join's two shuffle stages ends first") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, NO_BROADCAST_HASH}
+    try {
+      val hints = SparkEntry.queries("q136_media_dedup_clusters")(spark, sf)
+        .queryExecution.optimizedPlan.collect { case j: Join => j.hint }
+      assert(hints.exists(_.rightHint.exists(_.strategy.contains(NO_BROADCAST_HASH))),
+        hints)
+    } finally SparkEntry.releaseCaches(spark)
+  }
+
   test("q102: incremental dedup joins new bands against corpus bands " +
       "on the band key; the best-match window partitions per new doc") {
     val plan = executed("q102_incremental_dedup")

@@ -43,8 +43,9 @@ class RequestBuildersSpec extends SparkSpecBase {
 
   test("setFieldValue translates single-select names to option ids; " +
       "free-form passes through; unknown option raises") {
-    val options = Seq(("F_STATUS", "Pending", "opt1"), ("F_STATUS", "Done", "opt2"))
-      .toDF("field_id", "option_name", "option_id")
+    val options = RequestBuilders.optionIds(
+      Seq(("F_STATUS", "Pending", "opt1"), ("F_STATUS", "Done", "opt2"))
+        .toDF("field_id", "option_name", "option_id"))
     val df = Seq(
       ("e1", "F_STATUS", "Pending", "ITEM1"),
       ("e1", "F_FREE", "anything", "ITEM1"))

@@ -230,4 +230,29 @@ class StateStoreSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("load of a missing path is an empty LocalRelation that a join " +
+      "folds at plan time; loadLog with no base/ still returns its deltas") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    withLedgerDir { dir =>
+      val missing = StateStore.load(spark, s"$dir/none", bigLedger.schema)
+      missing.queryExecution.optimizedPlan match {
+        case l: LocalRelation => assert(l.data.isEmpty)
+        case p => fail(s"expected an empty LocalRelation, got\n$p")
+      }
+      val joined = bigLedger.join(missing.select("kind", "id"), Seq("kind", "id"))
+      assert(jobsIn(assert(joined.collect().isEmpty)) == 0)
+
+      // a log whose only generation is one delta: base/ was never written
+      val schema = StructType(Seq(StructField("entity_id", StringType)))
+      val path = s"$dir/log"
+      StateStore.append(StateStore.loadLog(spark, path, schema),
+        Seq("e1", "e2").toDF("entity_id"), 0L)
+      assert(!new java.io.File(s"$path/base").exists())
+      val log = StateStore.loadLog(spark, path, schema)
+      assert(log.newest == 0L)
+      assert(log.rows.select("entity_id").collect().map(_.getString(0)).sorted.toSeq ==
+        Seq("e1", "e2"))
+    }
+  }
 }

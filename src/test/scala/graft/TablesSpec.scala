@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 
 /** The schema memo in [[Tables]]: a repeated load of unchanged files
@@ -13,21 +10,6 @@ import org.apache.spark.sql.AnalysisException
 class TablesSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsIn[T](body: => T): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** A fresh directory holding copies of the named sf0.001 tables, so
     * no earlier load in this JVM has memoized their schemas. */
