@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   *    old-format (nested) and new-format (top-level) checklists unify.
   *  - [[customizeCards]]/[[customizeItems]] replace `customizeTrelloCard`
   *    (transform.js:257-305): the `_`-prefixed derived columns become
-  *    real columns from broadcast joins + scalar transforms.
+  *    real columns from dimension lookups + scalar transforms.
   *  - [[quickview]] replaces utils/board-quickview.js:48-204 (A3).
   *  - [[renderIssueMarkdown]] replaces mapCardToIssueMkdn
   *    (transform.js:127-170, A1/A2) with order-stable string aggs.
   *
-  * Dimensions (lists/members/customFields) are tiny → `broadcast()`;
-  * cards/items are the scaling axis and never collect to the driver.
+  * Dimensions (lists/members/customFields) are tiny → literal maps or
+  * `broadcast()`; cards/items are the scaling axis and never collect
+  * to the driver.
   */
 object BoardPipeline {
 
@@ -88,41 +89,36 @@ object BoardPipeline {
     * card_type, card_status, custom field names, sorted default-filled
     * labels, owner, fallback_owner.
     *
-    * The member dimension is collected to a broadcast map — it is the
-    * reference's members.json, inherently tiny — because J7's
-    * first-match semantics need the *card order* of `idMembers`
-    * preserved, which `transform()` over the array gives for free. */
+    * The member, list and custom-field dimensions are the reference's
+    * members/lists/customFields json, inherently tiny: one collect
+    * turns them into literal maps, so every lookup is a per-row
+    * `element_at` (a missing key gives null) and the card plan has no
+    * join. J7's first-match semantics need the *card order* of
+    * `idMembers` preserved, which `transform()` over the array gives
+    * for free. */
   def customizeCards(
       n: Normalized,
       listStatusMap: Map[String, String],
       secondaryAdminFieldId: String): DataFrame = {
-    val spark = n.cards.sparkSession
-    import spark.implicits._
-    val statusDim = listStatusMap.toSeq.toDF("list_name", "card_status")
-
-    val memberPairs = n.members.select("id", "username").collect()
-      .map(r => (r.getString(0), r.getString(1))).toMap
-    val memberMapCol: Column =
-      if (memberPairs.isEmpty) map()
-      else map(memberPairs.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    val boardUsernamesCol = array(memberPairs.values.toSeq.sorted.map(lit): _*)
-
-    val cfNames = n.cards
-      .select(col("id").as("cf_card_id"), explode_outer(col("customFieldItems")).as("cf"))
-      .join(broadcast(n.customFields.select(col("id").as("cf_id"), col("name").as("cf_name"))),
-        col("cf.idCustomField") === col("cf_id"), "left")
-      .groupBy("cf_card_id")
-      .agg(filter(collect_list(col("cf_name")), x => x.isNotNull).as("custom_field_names"))
+    def dim(kind: String, df: DataFrame, value: String): DataFrame =
+      df.select(lit(kind).as("kind"), col("id"), col(value).as("value"))
+    val dims = dim("member", n.members, "username")
+      .unionByName(dim("list", n.lists, "name"))
+      .unionByName(dim("field", n.customFields, "name"))
+      .filter(col("id").isNotNull)
+      .collect()
+      .groupMap(_.getString(0))(r => r.getString(1) -> r.getString(2))
+    def mapOf(kind: String): Map[String, String] = dims.getOrElse(kind, Array.empty).toMap
+    val members = mapOf("member")
+    val boardUsernamesCol = array(members.values.toSeq.sorted.map(lit): _*)
 
     n.cards
       .filter(!coalesce(col("closed"), lit(false))) // P3: skip closed
-      .join(broadcast(n.lists.select(col("id").as("idList"), col("name").as("card_type"))),
-        Seq("idList"), "left")
-      .join(broadcast(statusDim), col("card_type") === col("list_name"), "left")
-      .drop("list_name")
+      .withColumn("card_type", element_at(typedLit(mapOf("list")), col("idList")))
+      .withColumn("card_status", element_at(typedLit(listStatusMap), col("card_type")))
       .filter(col("card_status").isNotNull) // P4: unmapped list → inactive
       .withColumn("member_usernames",
-        filter(transform(col("idMembers"), m => element_at(memberMapCol, m)),
+        filter(transform(col("idMembers"), m => element_at(typedLit(members), m)),
           x => x.isNotNull))
       .withColumn("label_names_raw",
         array_sort(transform(col("labels"), l => l.getField("name")))) // O2
@@ -142,7 +138,10 @@ object BoardPipeline {
         resolveOwnersUdf(col("member_usernames"), col("raw_fallback"), boardUsernamesCol))
       .withColumn("owner", coalesce(col("owners._1"), lit("!Owner")))
       .withColumn("fallback_owner", coalesce(col("owners._2"), lit("!Fallback")))
-      .join(cfNames, col("id") === col("cf_card_id"), "left")
+      .withColumn("custom_field_names",
+        filter(transform(col("customFieldItems"),
+          f => element_at(typedLit(mapOf("field")), f.getField("idCustomField"))),
+          x => x.isNotNull))
       .select(col("id").as("card_id"), col("name"), col("desc"), col("url"),
         col("card_type"), col("card_status"), col("label_names"),
         coalesce(col("custom_field_names"), array().cast("array<string>"))

@@ -162,9 +162,8 @@ object DedupQueries {
     * hit after its blocks are gone cannot recompute: localCheckpoint
     * truncates lineage). Called by [[graft.SparkEntry.releaseCaches]].
     * Only that session's entries go, so releaseCaches(sparkA) in a
-    * multi-session JVM (ClusterProbe, parallel test suites) cannot
-    * discard sparkB's live frames while B's checkpoint blocks stay
-    * persisted. */
+    * multi-session JVM (parallel test suites) cannot discard sparkB's
+    * live frames while B's checkpoint blocks stay persisted. */
   private[graft] def clearChainMemo(s: SparkSession): Unit =
     chainMemo.keySet.removeIf(_._1 eq s)
 

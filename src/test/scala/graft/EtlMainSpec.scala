@@ -425,7 +425,7 @@ class EtlMainSpec extends SparkSpecBase {
 
   /** Spark jobs of one cold migration of the fixture board: a ratchet,
     * lower it when a change saves jobs. */
-  private val ColdMigrationJobs = 31
+  private val ColdMigrationJobs = 25
 
   test("a cold migration stays within its Spark job budget, and its " +
       "title-drift and close phases launch no job") {

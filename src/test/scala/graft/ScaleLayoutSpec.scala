@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.operators.SkewJoins
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout levers for the 100 TB posture: bucketed co-located
@@ -50,6 +56,50 @@ class ScaleLayoutSpec extends SparkSpecBase {
     val plainLeft = skewed.join(dim, $"k" === $"dk", "left").count()
     val saltedLeft = SkewJoins.saltedEquiJoin(skewed, dim, $"k", $"dk", Seq($"payload"), 8, "left").count()
     assert(plainLeft == saltedLeft)
+
+    // salting flattens the hot key: with broadcast and AQE's own skew
+    // split off (and no coalescing to merge the reduce tasks back), the
+    // salted join's largest reduce task reads a fraction of the plain
+    // join's, whose one task reads the hot key's 9,000 rows
+    val confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "32")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val plainMax = maxTaskShuffleRecords(
+        skewed.join(dim, $"k" === $"dk").agg(count(lit(1))).collect())
+      val saltedMax = maxTaskShuffleRecords(
+        SkewJoins.saltedEquiJoin(skewed, dim, $"k", $"dk", Seq($"payload"), buckets = 16)
+          .agg(count(lit(1))).collect())
+      info(s"largest reduce task: plain $plainMax, salted $saltedMax records")
+      assert(plainMax >= 9000, s"the plain join's largest task read $plainMax records")
+      assert(saltedMax * 4 < plainMax,
+        s"salting did not flatten the hot key: $saltedMax vs $plainMax records")
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The most shuffle records one task read in the stage of `body` that
+    * read the most (a join's reduce stage). */
+  private def maxTaskShuffleRecords(body: => Unit): Long = {
+    val reads = new ConcurrentLinkedQueue[(Int, Long)]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          reads.add(e.stageId -> m.shuffleReadMetrics.recordsRead))
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    reads.asScala.toSeq.groupMap(_._1)(_._2).values.maxBy(_.sum).max
   }
 
   test("partitioned writes prune partitions at read time") {

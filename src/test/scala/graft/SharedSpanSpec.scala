@@ -13,6 +13,15 @@ class SharedSpanSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** (doc_id, gram) for every 8-token window of the span corpus, keyed
+    * by the raw string the index hashes. */
+  private def stringGrams(sfDir: String) =
+    graft.operators.DedupQueries.variantCorpus(spark, sfDir)
+      .withColumn("ts", split(col("text"), "\\s+"))
+      .filter(size(col("ts")) >= 8)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(0, size(ts) - 8), i -> concat_ws(' ', slice(ts, i + 1, 8)))")).as("gram"))
+
   test("q122 reports span == variant token count for every original/variant pair") {
     try {
       val spans = SparkEntry.queries("q122_shared_span_pairs")(spark, sf)
@@ -73,12 +82,7 @@ class SharedSpanSpec extends SparkSpecBase {
       val spans = SparkEntry.queries("q122_shared_span_pairs")(spark, sf)
       // reported spans are >= 12 > 8, so both sides must contain at
       // least one identical 8-token window — re-derive independently
-      val grams = graft.operators.DedupQueries.variantCorpus(spark, sf)
-        .withColumn("ts", split(col("text"), "\\s+"))
-        .filter(size(col("ts")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ts) - 8), i -> concat_ws(' ', slice(ts, i + 1, 8)))")).as("gram"))
-        .distinct()
+      val grams = stringGrams(sf).distinct()
       val sharing = spans
         .join(grams.select(col("doc_id").as("doc_a"), col("gram")), Seq("doc_a"))
         .join(grams.select(col("doc_id").as("doc_b"), col("gram")), Seq("doc_b", "gram"), "left_semi")
@@ -87,5 +91,21 @@ class SharedSpanSpec extends SparkSpecBase {
         .join(sharing, Seq("doc_a", "doc_b"), "left_anti")
       assert(phantom.count() == 0, "q122 reported a pair with no shared 8-gram")
     } finally SparkEntry.releaseCaches(spark)
+  }
+
+  test("the span index's 8-gram hash is injective on the sf0.01 corpus") {
+    // q122/q128 key their gram index by xxhash64(gram). Equal strings
+    // always hash equal, so q122 can never lose a match; but under
+    // q128's document-frequency cap a collision could push a gram's df
+    // past the cap and prune a true gram, losing a real pair. As many
+    // distinct hashes in the index as distinct gram strings in its
+    // corpus means no collision, so the cap prunes exactly what a
+    // string-keyed index would.
+    val sf001 = "/root/testdata/sf0.01"
+    val strings = stringGrams(sf001).select("gram").distinct().count()
+    val hashes = graft.operators.DedupQueries.spanGramIndex(spark, sf001, dfCap = None)
+      .select("gram").distinct().count()
+    assert(strings > 10000, s"only $strings distinct grams")
+    assert(hashes == strings, s"$strings distinct 8-gram strings but $hashes distinct hashes")
   }
 }

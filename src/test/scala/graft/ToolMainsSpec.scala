@@ -8,39 +8,32 @@ import scala.sys.process.{Process, ProcessLogger}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Smoke coverage for the diagnostic mains (r17 verdict item 8): each
-  * tool parses its own arguments and completes a minimal run at
-  * sf0.001 — `sbt test` now exercises every `main`, so an orphaned or
-  * bit-rotted tool fails the suite instead of being discovered the
-  * round it's needed.
+/** Smoke coverage for the mains (r17 verdict item 8): each tool parses
+  * its own arguments and completes a minimal run at sf0.001, so an
+  * orphaned or bit-rotted tool fails the suite instead of being found
+  * the round it is needed. The mains are the program's (`ScaleUp`,
+  * `PlanDump`, `Bench`) plus the test-side [[ClusterParity]], which
+  * needs a JVM of its own for its local-cluster context. The other
+  * cases pin what src/main may do: build sessions, move ledger files,
+  * read environment variables.
   *
   * Each main is forked as its own JVM (the mains read `sys.env` and
-  * write artifacts into their CWD — a fork isolates both: env is
-  * injected per-run and the CWD is a scratch dir so repo artifacts
-  * like SKEWPROBE.json are never clobbered by a test run). The fork
-  * carries the same JDK-17 --add-opens set build.sbt gives forked
-  * tests, and the test JVM's own classpath.
+  * write artifacts into their CWD; a fork isolates both: env is
+  * injected per run and the CWD is a scratch dir, so committed
+  * artifacts are never clobbered by a test run). The fork carries the
+  * same JDK 17 --add-opens set build.sbt gives forked tests, and the
+  * test JVM's own classpath.
   */
 class ToolMainsSpec extends AnyFunSuite {
 
   private val sf0001 = "/root/testdata/sf0.001"
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** Fork `java <addOpens> -cp <test classpath> <mainClass> <args>` in a
+  /** Fork `java <AddOpens> -cp <test classpath> <mainClass> <args>` in a
     * scratch CWD with `env` injected; return (exitCode, combined output). */
   private def runMain(mainClass: String, args: Seq[String],
       env: Map[String, String], cwd: File): (Int, String) = {
     val java = new File(new File(sys.props("java.home"), "bin"), "java").getPath
-    val cmd = Seq(java) ++ addOpens ++ Seq(
+    val cmd = Seq(java) ++ ClusterParity.AddOpens ++ Seq(
       "-Xmx4g", "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"), mainClass) ++ args
     val out = new StringBuilder
@@ -66,65 +59,28 @@ class ToolMainsSpec extends AnyFunSuite {
       "ScaleUp output tables missing")
   }
 
-  test("SkewProbe trips both defenses at reduced synthetic sizes") {
-    val dir = scratch("skewprobe")
-    // crowd 2000: uncapped m(m-1)/2 ≈ 2M candidate rows still >100×
-    // the capped star; probe 500k rows: the hot key's ~24 MB
-    // incompressible partition still crosses the 8m AQE threshold;
-    // build keys scaled down 4× with the probe so the salted variant's
-    // 16× build replication doesn't swamp the hot-key flattening —
-    // all in-probe requires stay armed, the run shrinks ~10×
-    val (exit, out) = runMain("graft.SkewProbe", Seq.empty,
-      Map("SPARK_GRAFT_MASTER" -> "local[8]",
-        "SPARK_GRAFT_SKEW_CROWD" -> "2000",
-        "SPARK_GRAFT_SKEW_ROWS" -> "500000",
-        "SPARK_GRAFT_SKEW_KEYS" -> "25000"), dir)
-    assert(exit == 0, s"SkewProbe exit $exit:\n${out.takeRight(3000)}")
-    assert(out.contains("SKEWPROBE verdict=OK"),
-      s"missing SkewProbe verdict:\n${out.takeRight(3000)}")
-    assert(new File(dir, "SKEWPROBE.json").isFile,
-      "SkewProbe artifact not written to its CWD")
-  }
-
-  test("ClusterProbe hash-parity at sf0.001 on a small local-cluster") {
-    val dir = scratch("clusterprobe")
-    val (exit, out) = runMain("graft.ClusterProbe", Seq.empty,
-      Map(
-        "SPARK_HOME" -> sys.env.getOrElse("SPARK_HOME", "/opt/spark"),
-        "SPARK_SCALA_VERSION" -> "2.13",
-        "SPARK_GRAFT_SF_DIR" -> sf0001,
-        "SPARK_GRAFT_CLUSTER" -> "local-cluster[2,2,1536]",
-        "SPARK_GRAFT_CLUSTER_EXEC_MEM" -> "1g",
-        // hash-parity only — the smoke is about the plumbing, not floors
-        "SPARK_GRAFT_CLUSTER_PASSES" -> "0"), dir)
-    assert(exit == 0, s"ClusterProbe exit $exit:\n${out.takeRight(3000)}")
-    assert(out.contains("CLUSTERPROBE verdict=ALL-IDENTICAL"),
+  test("ClusterParity: dedup family hashes identically on local[4] and local-cluster") {
+    val dir = scratch("clusterparity")
+    val (exit, out) = runMain("graft.ClusterParity",
+      Seq(sf0001, "local-cluster[2,2,1536]"),
+      Map("SPARK_HOME" -> sys.env.getOrElse("SPARK_HOME", "/opt/spark"),
+        "SPARK_SCALA_VERSION" -> "2.13"), dir)
+    assert(exit == 0, s"ClusterParity exit $exit:\n${out.takeRight(3000)}")
+    assert(out.contains("CLUSTERPARITY 12/12 identical"),
       s"missing parity verdict:\n${out.takeRight(3000)}")
-    assert(new File(dir, "CLUSTERBENCH.json").isFile,
-      "ClusterProbe pricing artifact not written to its CWD")
   }
 
-  test("SpanVerifyProbe census + sampled re-verify passes at sf0.001") {
-    val dir = scratch("spanverify")
-    val (exit, out) = runMain("graft.SpanVerifyProbe",
-      Seq(sf0001, "SPANVERIFY_SMOKE.json", "50"),
-      Map("SPARK_GRAFT_CPUS" -> "4"), dir)
-    assert(exit == 0, s"SpanVerifyProbe exit $exit:\n${out.takeRight(2000)}")
-    assert(out.contains("\"verdict\":\"PASS\""),
-      s"SpanVerifyProbe did not PASS:\n${out.takeRight(2000)}")
-  }
-
-  test("StreamBench prices the four heavy streams at sf0.001") {
-    val dir = scratch("streambench")
-    val (exit, out) = runMain("graft.StreamBench",
-      Seq(sf0001, "STREAMBENCH_SMOKE.json", "100", "300"),
-      Map("SPARK_GRAFT_CPUS" -> "4"), dir)
-    assert(exit == 0, s"StreamBench exit $exit:\n${out.takeRight(3000)}")
-    assert(out.contains("STREAMBENCH {\"probe\":\"stream_bench\""),
-      s"missing STREAMBENCH summary line:\n${out.takeRight(3000)}")
-    for (s <- Seq("dedup_minhash", "dedup_simhash", "media_dedup", "ann_serve"))
-      assert(out.contains(s""""$s":{"""),
-        s"stream $s missing from the artifact line:\n${out.takeRight(3000)}")
+  test("PlanDump writes q77's final plan and its intermediate executions at sf0.001") {
+    val dir = scratch("plandump")
+    val outDir = new File(dir, "plans")
+    val (exit, out) = runMain("graft.PlanDump",
+      Seq(outDir.getPath, "smoke", "q77_dedup_clusters"),
+      Map("SPARK_GRAFT_SF_DIR" -> sf0001, "SPARK_GRAFT_CPUS" -> "4"), dir)
+    assert(exit == 0, s"PlanDump exit $exit:\n${out.takeRight(2000)}")
+    val dump = new File(outDir, "q77_dedup_clusters_smoke.txt")
+    assert(dump.isFile, s"no plan file written:\n${out.takeRight(2000)}")
+    assert(Files.readString(dump.toPath).contains("== intermediate execution 1/"),
+      "the dump holds no intermediate execution")
   }
 
   test("GraftSession is the only place src/main builds a Spark session") {
@@ -200,13 +156,8 @@ class ToolMainsSpec extends AnyFunSuite {
     // a new knob is a new mode to test and document: adding one means
     // adding it here, in the same change
     val pinned = Set(
-      "GITHUB_API_URL", "GITHUB_TOKEN", "GRAFT_API_FIELDS_DSV2",
-      "SPARK_GRAFT_CLUSTER", "SPARK_GRAFT_CLUSTER_EXEC_MEM", "SPARK_GRAFT_CLUSTER_ONLY",
-      "SPARK_GRAFT_CLUSTER_OUT", "SPARK_GRAFT_CLUSTER_PASSES", "SPARK_GRAFT_CPUS",
-      "SPARK_GRAFT_MASTER", "SPARK_GRAFT_MEM_FRACTION", "SPARK_GRAFT_ONLY",
-      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SKEW_CROWD", "SPARK_GRAFT_SKEW_KEYS",
-      "SPARK_GRAFT_SKEW_ROWS", "SPARK_GRAFT_SPILL_ONLY", "SPARK_GRAFT_WARM_DIR",
-      "SPARK_HOME", "SPARK_MASTER")
+      "GITHUB_API_URL", "GITHUB_TOKEN", "GRAFT_API_FIELDS_DSV2", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARM_DIR", "SPARK_MASTER")
     val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
     val read = "(?:sys\\.env(?:\\.\\w+)?|System\\.getenv)\\(\\s*(\"[^\"]*\")?".r
     val sources = Files.walk(srcMain).iterator().asScala
