@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
@@ -31,7 +30,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   * Jaccard-verifies only band-collision candidates — corpus×corpus
   * pairs are never generated, and the per-new-doc best-match window
   * partitions by new_id (no global window). At 100 TB the ledger is
-  * the only thing that needs to be hot; the raw text stays cold.
+  * the only thing that needs to be hot; the raw text stays cold. The
+  * probe, its hot-band cap and [[ingest]]'s fold are [[ProbeFold]]'s;
+  * this object supplies the keys (bands of the stored `sig`) and the
+  * Jaccard verify.
   *
   * DedupIndexSpec proves the restart contract: an index built in one
   * session serves a batch in a brand-new session with ZERO corpus
@@ -55,122 +57,59 @@ object DedupIndex {
     * corpus frame. One tokenize pass (the materialized shingle sets
     * feed both columns), ONE [[StateStore.refresh]] — the refresh is
     * all-or-nothing and supersedes every delta folded before it. */
-  def build(spark: SparkSession, corpus: DataFrame, dir: String): Unit = {
-    val sets = DedupQueries.shingleSetsOf(corpus).localCheckpoint()
-    StateStore.refresh(
-      sets.join(DedupQueries.minhashFrom(sets), Seq("doc_id")),
-      indexPath(dir), bucketCols = Seq("doc_id"))
-  }
+  def build(spark: SparkSession, corpus: DataFrame, dir: String): Unit =
+    StateStore.refresh(rowsOf(corpus), indexPath(dir), bucketCols = Seq("doc_id"))
 
   /** Dedup an incoming (doc_id, text) batch against the persisted
     * index: LSH band candidates → n-gram Jaccard ≥ `minJaccard` →
     * best corpus match per new doc (highest jaccard, min-id tiebreak).
-    * Output: (new_id, dup_of, jaccard), ordered by new_id.
-    *
-    * The batch side is materialized once (localCheckpoint): its shingle
-    * sets feed both the signature/band derivation and the verify join,
-    * and the corpus side comes exclusively from the ledger. */
+    * Output: (new_id, dup_of, jaccard), ordered by new_id. The corpus
+    * side comes only from the ledger ([[ProbeFold.probe]] under
+    * [[ProbeFold.DocIdGuard]]). */
   def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
-    val batchSets = DedupQueries.shingleSetsOf(batch).localCheckpoint()
-    flagsAgainst(batchSets, load(spark, dir).rows, minJaccard, withinBatch = false)
+    val index = load(spark, dir)
+    ProbeFold.probe(index, rowsOf(batch), keysOf, ProbeFold.DocIdGuard)(
+      verified(index.rows, minJaccard)).withColumnRenamed("doc_id", "new_id")
   }
 
   /** The full incremental-ingest step a crawl pipeline runs per
     * delivery: flag the batch against the persisted index AND against
-    * itself (within-batch twins attribute to the lowest-id survivor,
-    * matching [[graft.streaming.DedupStream.processBatch]]), then FOLD
-    * the survivors' (sd, sig) rows into the ledger as one O(batch)
-    * [[StateStore.append]] under the log's newest id + 1. Returns the
-    * flags; after the call the index covers the new docs, so the next
-    * delivery's twins collide. */
+    * itself (lowest-id attribution), then FOLD the survivors' (sd, sig)
+    * rows into the ledger as one O(batch) [[StateStore.append]], so the
+    * next delivery's twins collide. [[ProbeFold]] under
+    * [[ProbeFold.DocIdGuard]]: a REDELIVERED ingest returns the same
+    * flags and leaves the ledger unchanged. */
   def ingest(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
     val index = load(spark, dir)
-    val ledger = index.rows
-    val batchSets = DedupQueries.shingleSetsOf(batch).localCheckpoint()
-    val flags = flagsAgainst(batchSets, ledger, minJaccard, withinBatch = true)
-      .localCheckpoint() // pin: the fold below must not re-run the joins
-    val survivors = batchSets
-      .join(flags.select(col("new_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      // anti-join against the ledger makes a REDELIVERED ingest
-      // idempotent: docs folded by the crashed first attempt are not
-      // appended twice (the self-pair guard in flagsAgainst keeps them
-      // from being flagged against themselves — together: same flags
-      // out, ledger unchanged)
-      .join(ledger.select("doc_id"), Seq("doc_id"), "left_anti")
-    StateStore.append(index, survivors.join(DedupQueries.minhashFrom(survivors), Seq("doc_id")),
-      index.newest + 1, bucketCols = Seq("doc_id"))
-    flags
+    ProbeFold(index, rowsOf(batch), keysOf, ProbeFold.DocIdGuard, bucketCols = Seq("doc_id"))(
+      (cand, rows) => verified(index.rows.select("doc_id", "sd")
+        .unionByName(rows.select("doc_id", "sd")), minJaccard)(cand, rows))
+      .withColumnRenamed("doc_id", "new_id")
   }
 
-  /** Shared flag pipeline: band candidates from the ledger (and, for
-    * ingest, from the batch against itself — lower id plays the corpus
-    * role), Jaccard-verified over the shingle sets, best match per new
-    * doc. */
-  private def flagsAgainst(batchSets: DataFrame, ledger: DataFrame,
-      minJaccard: Double, withinBatch: Boolean): DataFrame = {
-    val batchB = DedupQueries.bandKeys(DedupQueries.minhashFrom(batchSets))
-      .select(col("doc_id").as("new_id"), col("band"))
-    // hot-band cap on the CORPUS posting lists (the incremental
-    // analogue of candidatePairsFrom's cap): a band with m corpus
-    // members fans EVERY probing doc out m ways, so a boilerplate
-    // crowd makes each delivery O(batch × m). A band over the cap
-    // keeps only its min-id representative — each probe meets the rep
-    // (one row, still flagged and Jaccard-verified against a genuine
-    // crowd member) instead of the whole crowd, and a genuine near
-    // twin also still collides through its colder bands. The round-15
-    // drop-the-band form probed EMPTY on hot bands, silently admitting
-    // every future member of an accumulated crowd — the poisoning the
-    // round-15 advice flagged. One window pass over the ledger's
-    // (doc_id, sig)-derived bands; the sd column stays unread on this
-    // side either way (columnar). The q102 oracle mirrors the cap
-    // (ikept CTE); it never trips at fixture scale.
-    val corpusB = DedupQueries.cappedBands(
-      DedupQueries.bandKeys(ledger.select("doc_id", "sig")), // columnar: sd unread
-      DedupQueries.DefaultBandCap)
-      .select(col("doc_id").as("corpus_id"), col("band"))
-    // the self-pair guard (new_id != corpus_id) is what makes a
-    // REDELIVERED ingest safe: after a crash-after-fold retry the batch
-    // docs are already in the ledger and would otherwise all match
-    // themselves at jaccard 1.0 — the whole delivery silently dropped
-    val candCorpus = batchB.join(corpusB, Seq("band"))
-      .filter(col("new_id") =!= col("corpus_id"))
-      .select("new_id", "corpus_id")
-    // the within-batch arm gets the same cap over the BATCH band
-    // population — one delivery can carry its own boilerplate crowd.
-    // The capped (rep-keeping) side MUST play the survivor role
-    // (corpus_id, the lower id): a hot band's rep is its min id, so
-    // every other crowd member pairs (new_id > rep) and gets flagged,
-    // collapsing the crowd to one survivor with linear fan-out —
-    // capping the new_id side instead would emit rep-only rows whose
-    // corpus_id < new_id filter never matches
-    val batchSelfB = DedupQueries.cappedBands(
-      batchB.select(col("new_id").as("doc_id"), col("band")),
-      DedupQueries.DefaultBandCap)
-    val cand = (if (!withinBatch) candCorpus else candCorpus.unionByName(
-      batchB
-        .join(batchSelfB.select(col("doc_id").as("corpus_id"), col("band")), Seq("band"))
-        .filter(col("corpus_id") < col("new_id"))
-        .select("new_id", "corpus_id"))).distinct()
-    // verify side of the candidates: corpus shingles from the ledger,
-    // plus (for ingest) the batch's own sets for within-batch pairs
-    val verifySets =
-      if (withinBatch) ledger.select(col("doc_id"), col("sd"))
-        .unionByName(batchSets.select("doc_id", "sd"))
-      else ledger.select(col("doc_id"), col("sd"))
+  /** (doc_id, text) docs as ledger rows: the shingle sets (tokenized
+    * once) and their MinHash signatures. */
+  private def rowsOf(docs: DataFrame): DataFrame = {
+    val sets = DedupQueries.shingleSetsOf(docs).localCheckpoint()
+    sets.join(DedupQueries.minhashFrom(sets), Seq("doc_id"))
+  }
+
+  /** Band keys from `sig` alone: `sd` stays unread on the band side.
+    * The q102 oracle mirrors the hot-band cap (ikept CTE). */
+  private val keysOf = (rows: DataFrame) => DedupQueries.bandKeys(rows.select("doc_id", "sig"))
+
+  /** The Jaccard verify of each candidate's batch set against the
+    * survivor's from `sets`, then the best match per batch doc. */
+  private def verified(sets: DataFrame, minJaccard: Double)(
+      cand: DataFrame, rows: DataFrame): DataFrame = {
     val inter = size(array_intersect(col("sa"), col("sb")))
-    cand
-      .join(batchSets.select(col("doc_id").as("new_id"), col("sd").as("sa")), Seq("new_id"))
-      .join(verifySets.select(col("doc_id").as("corpus_id"), col("sd").as("sb")), Seq("corpus_id"))
-      .withColumn("jaccard",
-        inter.cast("double") / (size(col("sa")) + size(col("sb")) - inter))
+    ProbeFold.bestMatch(cand.select("doc_id", "dup_of").distinct()
+      .join(rows.select(col("doc_id"), col("sd").as("sa")), Seq("doc_id"))
+      .join(sets.select(col("doc_id").as("dup_of"), col("sd").as("sb")), Seq("dup_of"))
+      .withColumn("jaccard", inter.cast("double") / (size(col("sa")) + size(col("sb")) - inter))
       .filter(col("jaccard") >= minJaccard)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("new_id")
-          .orderBy(col("jaccard").desc, col("corpus_id").asc)))
-      .filter(col("rn") === 1)
-      .select(col("new_id"), col("corpus_id").as("dup_of"), col("jaccard"))
-      .orderBy("new_id")
+      .select("doc_id", "dup_of", "jaccard"), col("jaccard").desc)
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -58,7 +57,10 @@ object MediaDedupIndex {
           ("audio", MultimodalQueries.wavFingerprintBlocks(p))
       Row(r.getLong(0), modality, b(0), b(1), b(2), b(3))
     })
-    spark.createDataFrame(rdd, indexSchema)
+    // every decoded field is set: declared non-nullable, no inferred
+    // null guard tells the two sides of a within-batch probe apart, so
+    // they share one shuffle
+    spark.createDataFrame(rdd, StructType(indexSchema.map(_.copy(nullable = false))))
   }
 
   /** Build (or atomically refresh) the ledger from a media corpus. */
@@ -66,31 +68,34 @@ object MediaDedupIndex {
     StateStore.save(fingerprints(spark, corpus), indexPath(dir),
       bucketCols = Seq("doc_id"))
 
+  /** Pigeonhole candidate keys of fingerprint rows: one row per 16-bit
+    * block, `(doc_id, band, h0..h3)` with the block's `(modality, k,
+    * bv)` packed into `band`, so two items are candidates iff they share
+    * a block at the same position within one modality. */
+  private[graft] def blockKeys(rows: DataFrame): DataFrame =
+    rows.selectExpr("doc_id", "modality", "h0", "h1", "h2", "h3",
+        "posexplode(array(h0, h1, h2, h3)) AS (k, bv)")
+      .selectExpr("doc_id", "struct(modality, k, bv) AS band", "h0", "h1", "h2", "h3")
+
+  /** The exact Hamming gate over [[ProbeFold.pairs]] candidate rows of
+    * [[blockKeys]]: `h0..h3` against the survivor's `dup_h0..dup_h3`,
+    * kept at ≤ `maxHamming` as (doc_id, modality, dup_of, hamming). */
+  private[graft] def verified(cand: DataFrame, maxHamming: Int): DataFrame =
+    cand.selectExpr("doc_id", "band.modality", "dup_of", (0 until 4)
+        .map(i => s"bit_count(h$i ^ dup_h$i)").mkString("CAST(", " + ", " AS INT) AS hamming"))
+      .filter(col("hamming") <= maxHamming)
+
   /** Dedup an incoming (doc_id, payload) media batch against the
     * persisted ledger: decode the batch only, pigeonhole block
-    * candidates within modality, exact Hamming ≤ `maxHamming` verify
+    * candidates within modality ([[blockKeys]], uncapped: q137's oracle
+    * is the exact pair set), exact Hamming ≤ `maxHamming` verify
     * inline, best corpus match per new item (lowest hamming, min-id
     * tiebreak). Output: (new_id, modality, dup_of, hamming). */
   def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String,
       maxHamming: Int = 3): DataFrame = {
     val ledger = StateStore.load(spark, indexPath(dir), indexSchema)
     val bf = fingerprints(spark, batch).localCheckpoint()
-    val bSides = bf.select(col("modality"), col("doc_id").as("new_id"),
-      col("h0").as("a0"), col("h1").as("a1"), col("h2").as("a2"), col("h3").as("a3"),
-      posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("k", "bv")))
-    val cSides = ledger.select(col("modality"), col("doc_id").as("dup_of"),
-      col("h0").as("b0"), col("h1").as("b1"), col("h2").as("b2"), col("h3").as("b3"),
-      posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("k", "bv")))
-    val w = Window.partitionBy(col("new_id"))
-      .orderBy(col("hamming").asc, col("dup_of").asc)
-    bSides.join(cSides, Seq("modality", "k", "bv"))
-      .withColumn("hamming", expr(
-        "CAST(bit_count(a0 ^ b0) + bit_count(a1 ^ b1) + bit_count(a2 ^ b2) + bit_count(a3 ^ b3) AS INT)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("new_id", "modality", "dup_of", "hamming").distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("new_id", "modality", "dup_of", "hamming")
-      .orderBy("new_id")
+    ProbeFold.bestMatch(verified(ProbeFold.pairs(blockKeys(bf), blockKeys(ledger)), maxHamming)
+      .distinct(), col("hamming").asc).withColumnRenamed("doc_id", "new_id")
   }
 }

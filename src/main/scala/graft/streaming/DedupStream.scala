@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.DedupQueries
+import graft.operators.{DedupQueries, ProbeFold}
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,18 +77,10 @@ object DedupStream {
     * convention; an in-stream distinct would need state). */
   def flagQuotesAgainstCorpus(stream: DataFrame, corpusBands: DataFrame,
       corpusSets: DataFrame, minContainment: Double = 0.8): DataFrame =
-    DedupQueries.rowBandsWithSets(stream)
-      .join(corpusBands.select(col("doc_id").as("quoted_from"), col("band")),
-        Seq("band"))
-      .filter(col("doc_id") =!= col("quoted_from"))
-      .join(corpusSets.select(col("doc_id").as("quoted_from"),
-        col("sd").as("corpus_sd")), Seq("quoted_from"))
-      .withColumn("containment",
-        size(array_intersect(col("sd"), col("corpus_sd"))).cast("double") /
-          size(col("sd")))
-      .filter(col("containment") >= minContainment)
+    quotePairs(stream, corpusBands, corpusSets)
+      .filter(col("c_in") >= minContainment)
       .select(col("doc_id"), col("quoted_from"),
-        round(col("containment"), 4).as("containment_r"))
+        round(col("c_in"), 4).as("containment_r"))
 
   /** The ADMISSION-POLICY twin of q202's containment keep policy —
     * [[flagQuotesAgainstCorpus]] upgraded from review feed to
@@ -107,16 +99,7 @@ object DedupStream {
     * batch policy rows on the planted quote corpus. */
   def admitQuotesAgainstCorpus(stream: DataFrame, corpusBands: DataFrame,
       corpusSets: DataFrame, threshold: Double = 0.8): DataFrame =
-    DedupQueries.rowBandsWithSets(stream)
-      .join(corpusBands.select(col("doc_id").as("quoted_from"), col("band")),
-        Seq("band"))
-      .filter(col("doc_id") =!= col("quoted_from"))
-      .join(corpusSets.select(col("doc_id").as("quoted_from"),
-        col("sd").as("corpus_sd")), Seq("quoted_from"))
-      .withColumn("inter",
-        size(array_intersect(col("sd"), col("corpus_sd"))).cast("long"))
-      .withColumn("c_in", col("inter").cast("double") / size(col("sd")))
-      .withColumn("c_out", col("inter").cast("double") / size(col("corpus_sd")))
+    quotePairs(stream, corpusBands, corpusSets)
       .filter(greatest(col("c_in"), col("c_out")) >= threshold)
       .withColumn("victim",
         when(col("c_in") >= threshold && col("c_out") >= threshold,
@@ -128,6 +111,25 @@ object DedupStream {
         round(col("c_out"), 4).as("c_out_r"),
         col("victim"),
         (col("victim") === col("doc_id")).as("drop_arriving"))
+
+  /** The quote twins' shared probe: per (arriving doc, corpus doc) band
+    * collision, `(doc_id, quoted_from, c_in, c_out)` — the exact
+    * containment of the arriving doc in the corpus doc (`c_in`) and
+    * the reverse (`c_out`), the corpus `sd` fetched by the equi join
+    * and the intersection computed once per row. */
+  private def quotePairs(stream: DataFrame, corpusBands: DataFrame,
+      corpusSets: DataFrame): DataFrame =
+    DedupQueries.rowBandsWithSets(stream)
+      .join(corpusBands.select(col("doc_id").as("quoted_from"), col("band")),
+        Seq("band"))
+      .filter(col("doc_id") =!= col("quoted_from"))
+      .join(corpusSets.select(col("doc_id").as("quoted_from"),
+        col("sd").as("corpus_sd")), Seq("quoted_from"))
+      .withColumn("inter",
+        size(array_intersect(col("sd"), col("corpus_sd"))).cast("double"))
+      .select(col("doc_id"), col("quoted_from"),
+        (col("inter") / size(col("sd"))).as("c_in"),
+        (col("inter") / size(col("corpus_sd"))).as("c_out"))
 
   // ---- self-maintaining index: within-stream twins ----------------
 
@@ -148,7 +150,9 @@ object DedupStream {
     * arriving docs against the persisted probe index AND against each
     * other, then fold the survivors' bands into the index — so a twin
     * arriving in a LATER micro-batch collides with a doc this one
-    * admitted (the gap a static corpus index leaves open).
+    * admitted (the gap a static corpus index leaves open). The steps,
+    * the hot-band cap included, are [[ProbeFold]]'s; the keys are the
+    * per-row [[DedupQueries.rowBands]], the verify is none.
     *
     * Returns the flag rows (doc_id, dup_of, band): band collisions
     * against earlier-batch survivors, plus within-batch collisions
@@ -156,11 +160,11 @@ object DedupStream {
     * replay, no arrival-order dependence inside a batch).
     *
     * EXACTLY-ONCE under foreachBatch's at-least-once replay, without a
-    * side channel: rows folded by batch N carry `added_batch = N`, and
-    * both the probe and the fold ignore ledger rows with
-    * `added_batch >= batchId`. A replayed batch therefore probes the
-    * identical pre-fold index (same flags out) and re-derives the
-    * identical fold (no double-add, no lost rows).
+    * side channel ([[ProbeFold.BatchStamp]]): rows folded by batch N
+    * carry `added_batch = N`, and both the probe and the fold ignore
+    * ledger rows stamped `batchId` or later, so a replayed batch
+    * probes the identical pre-fold index and re-derives the identical
+    * fold.
     *
     * Scale: the stream side hashes only its own micro-batch, and the
     * index is a [[StateStore.loadLog log]]: each batch appends only its
@@ -170,42 +174,10 @@ object DedupStream {
     * newest fold — a restart with a fresh checkpoint — fails loud
     * instead of wiping the index. */
   def processBatch(spark: SparkSession, batchDocs: DataFrame,
-      indexPath: String, batchId: Long): DataFrame = {
-    val index = StateStore.loadLog(spark, indexPath, bandsSchema)
-    val ledger = index.rows.filter(col("added_batch") < batchId)
-    val batchBands = DedupQueries.rowBands(batchDocs).localCheckpoint()
-    // hot-band cap, the same family as the batch chain
-    // (candidatePairsFrom / DedupIndex.flagsAgainst): a ledger band
-    // with m members fans every probing doc out m ways, and a
-    // boilerplate crowd inside one micro-batch self-joins m² — both
-    // arms reduce a hot band to its min-id REPRESENTATIVE row on the
-    // survivor (dup_of) side of the join, so an over-cap crowd still
-    // flags (against the rep, linear fan-out) instead of probing
-    // empty. The round-15 drop-the-band form made an over-cap
-    // micro-batch crowd fold WHOLE into the ledger and then hid the
-    // poisoned band from every future probe — unbounded duplicate
-    // admission (the round-15 advice's high finding). Replay-exact:
-    // the cap is a pure function of the same stamp-filtered ledger the
-    // probe reads, so a replayed batch computes the identical kept set.
-    val cappedLedger = DedupQueries.cappedBands(
-      ledger.select(col("doc_id"), col("band")), DedupQueries.DefaultBandCap)
-    val corpusFlags = batchBands
-      .join(cappedLedger.select(col("doc_id").as("dup_of"), col("band")), Seq("band"))
-      .select(col("doc_id"), col("dup_of"), col("band"))
-    // rep side = dup_of: a hot band's rep is its min id, so every
-    // other member pairs (dup_of < doc_id) and is flagged — the crowd
-    // collapses to ONE survivor whose bands alone fold into the ledger
-    val cappedBatch = DedupQueries.cappedBands(batchBands, DedupQueries.DefaultBandCap)
-    val withinBatch = batchBands
-      .join(cappedBatch.select(col("doc_id").as("dup_of"), col("band")), Seq("band"))
-      .filter(col("dup_of") < col("doc_id"))
-      .select(col("doc_id"), col("dup_of"), col("band"))
-    val flags = corpusFlags.unionByName(withinBatch).localCheckpoint()
-    val survivorBands = batchBands
-      .join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    StateStore.append(index, survivorBands, batchId, bucketCols = Seq("band"))
-    flags
-  }
+      indexPath: String, batchId: Long): DataFrame =
+    ProbeFold(StateStore.loadLog(spark, indexPath, bandsSchema),
+      DedupQueries.rowBands(batchDocs), _.select("doc_id", "band"),
+      ProbeFold.BatchStamp(batchId), Seq("band"))((cand, _) => cand.select("doc_id", "dup_of", "band"))
 
   /** Streaming wiring: readStream → foreachBatch([[processBatch]]) →
     * caller's sink. The sink receives (flags, batchId) and must be

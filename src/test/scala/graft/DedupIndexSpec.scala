@@ -122,6 +122,25 @@ class DedupIndexSpec extends SparkSpecBase {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("ingest stays within its Spark job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-jobs").toString
+    try {
+      val p = s"$dir/index"
+      import spark.implicits._
+      val docs = originals.orderBy("doc_id").limit(40).collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+      DedupIndex.build(spark, docs.take(30).toSeq.toDF("doc_id", "text"), p)
+      val (id, text) = docs(3)
+      val delivery = (docs.slice(30, 40).toSeq :+
+        (id + Ids.VariantOffset, text.substring(text.indexOf(' ') + 1).trim))
+        .toDF("doc_id", "text")
+      // 20 jobs, the same on every run; a change may lower the budget,
+      // never raise it
+      val jobs = jobsIn(DedupIndex.ingest(spark, delivery, p))
+      assert(jobs <= 20, s"ingest ran $jobs Spark jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("build is an atomic refresh: a new corpus generation replaces the old in place") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-refresh").toString
     try {

@@ -409,6 +409,23 @@ class DedupStreamSpec extends SparkSpecBase {
     }
   }
 
+  test("a micro-batch against a non-empty index stays within its Spark job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-jobs").toString
+    try {
+      val (orig, vars) = twinDocs(30)
+      val path = s"$dir/bands"
+      DedupStream.processBatch(spark, toDf(orig), path, 0L).count()
+      val batch = toDf(vars)
+      // 10 jobs, the same on every run; a change may lower the budget,
+      // never raise it
+      val jobs = jobsIn(DedupStream.processBatch(spark, batch, path, 1L))
+      assert(jobs <= 10, s"processBatch ran $jobs Spark jobs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
   test("base+delta folds: O(batch) deltas absorb into base at the compaction " +
       "cadence, and stale deltas from a crashed compaction are ignored") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-compact").toString

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ids, MultimodalQueries}
+import graft.operators.{DedupQueries, Ids, MultimodalQueries}
 import graft.streaming.MediaDedupStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -102,6 +102,53 @@ class MediaDedupStreamSpec extends SparkSpecBase {
       }
       assert(e.getMessage.contains("fresh"), e.getMessage)
       assert(MediaDedupStream.loadLedger(spark, dir).collect().map(_.toString).toSet == before)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
+  test("an over-cap identical media crowd collapses to one survivor with linear flags") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-media-crowd").toString
+    try {
+      // one micro-batch of identical frames (a run of blank frames, say):
+      // every block key is hot, so the survivor side keeps only the
+      // min-id representative and each other member flags against it
+      // once per block — 4·(n−1) rows, not the 4·n(n−1)/2 of a full
+      // self-join
+      val n = DedupQueries.DefaultBandCap + 1
+      val frame = MultimodalQueries.bmpBytes(12, 12, 7L)
+      val crowd = (100L until 100L + n).map(i => (i, frame)).toDF("doc_id", "payload")
+      val f0 = MediaDedupStream.processBatch(spark, crowd, dir, batchId = 0L).collect()
+      assert(f0.length <= 4 * (n - 1), s"${f0.length} flag rows for a crowd of $n")
+      assert(f0.map(_.getLong(0)).toSet == (101L until 100L + n).toSet,
+        "every crowd member but the min id must be flagged")
+      assert(f0.forall(_.getLong(2) == 100L), "every flag must point at the min id")
+      // exactly one survivor folds…
+      assert(MediaDedupStream.loadLedger(spark, dir).select("doc_id")
+        .collect().map(_.getLong(0)).toSeq == Seq(100L))
+      // …and a later batch's identical frame flags against it
+      val f1 = MediaDedupStream.processBatch(spark,
+        Seq((900000L, frame)).toDF("doc_id", "payload"), dir, batchId = 1L).collect()
+      assert(f1.nonEmpty && f1.forall(r => r.getLong(0) == 900000L && r.getLong(2) == 100L),
+        f1.mkString(", "))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
+  test("a media micro-batch against a non-empty ledger stays within its Spark job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-media-jobs").toString
+    try {
+      val originals = media.filter(col("doc_id") < Ids.VariantOffset)
+      val twins = media.filter(col("doc_id") >= Ids.VariantOffset).localCheckpoint()
+      MediaDedupStream.processBatch(spark, originals, dir, batchId = 0L).count()
+      // 11 jobs, the same on every run; a change may lower the budget,
+      // never raise it
+      val jobs = jobsIn(MediaDedupStream.processBatch(spark, twins, dir, batchId = 1L))
+      assert(jobs <= 11, s"processBatch ran $jobs Spark jobs")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       SparkEntry.releaseCaches(spark)

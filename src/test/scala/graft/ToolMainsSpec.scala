@@ -113,6 +113,21 @@ class ToolMainsSpec extends AnyFunSuite {
       s"Hadoop FileSystem renames/deletes outside StateStore: ${movers.mkString(", ")}")
   }
 
+  test("ProbeFold is the only dedup fold that caps hot keys or filters on the ledger stamp") {
+    // the cap-and-representative rule and the replay guard each live
+    // once; DedupQueries, which defines the cap for its batch LSH
+    // chain, is exempt
+    val graft = new File(sys.props.getOrElse("user.dir", "."), "src/main/scala/graft").toPath
+    val folds = "cappedBands\\s*\\(|col\\(\\s*(?:StateStore\\.Stamp|\"added_batch\")\\s*\\)".r
+    val hits = Seq("streaming", "operators")
+      .flatMap(d => Files.walk(graft.resolve(d)).iterator().asScala)
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("DedupQueries.scala"))
+      .filter(p => folds.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => graft.relativize(p).toString).sorted
+    assert(hits === Seq("operators/ProbeFold.scala"),
+      s"hot-key caps or stamp filters outside ProbeFold: ${hits.mkString(", ")}")
+  }
+
   test("Bench times a filtered battery and its family subtotals sum to its total") {
     val dir = scratch("bench")
     val (exit, out) = runMain("graft.Bench", Seq.empty,
