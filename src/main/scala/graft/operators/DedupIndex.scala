@@ -63,14 +63,16 @@ object DedupIndex {
   /** Dedup an incoming (doc_id, text) batch against the persisted
     * index: LSH band candidates → n-gram Jaccard ≥ `minJaccard` →
     * best corpus match per new doc (highest jaccard, min-id tiebreak).
-    * Output: (new_id, dup_of, jaccard), ordered by new_id. The corpus
-    * side comes only from the ledger ([[ProbeFold.probe]] under
-    * [[ProbeFold.DocIdGuard]]). */
+    * Output: (new_id, dup_of, jaccard), ordered by new_id. The batch's
+    * shingle sets are pinned once and feed both its signatures and the
+    * verify; the corpus side comes only from the ledger
+    * ([[ProbeFold.probe]] under [[ProbeFold.DocIdGuard]]). */
   def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
     val index = load(spark, dir)
-    ProbeFold.probe(index, rowsOf(batch), keysOf, ProbeFold.DocIdGuard)(
-      verified(index.rows, minJaccard)).withColumnRenamed("doc_id", "new_id")
+    ProbeFold.probe(index, DedupQueries.shingleSetsOf(batch).localCheckpoint(), keysOf,
+      ProbeFold.DocIdGuard, capHotKeys = true)(verified(index.rows, minJaccard))
+      .withColumnRenamed("doc_id", "new_id")
   }
 
   /** The full incremental-ingest step a crawl pipeline runs per
@@ -83,33 +85,34 @@ object DedupIndex {
   def ingest(spark: SparkSession, batch: DataFrame, dir: String,
       minJaccard: Double = 0.5): DataFrame = {
     val index = load(spark, dir)
-    ProbeFold(index, rowsOf(batch), keysOf, ProbeFold.DocIdGuard, bucketCols = Seq("doc_id"))(
-      (cand, rows) => verified(index.rows.select("doc_id", "sd")
+    // pinned: the flags and the fold both read the rows' signatures
+    ProbeFold(index, rowsOf(batch).localCheckpoint(), keysOf, ProbeFold.DocIdGuard, capHotKeys = true,
+      Seq("doc_id"))((cand, rows) => verified(index.rows.select("doc_id", "sd")
         .unionByName(rows.select("doc_id", "sd")), minJaccard)(cand, rows))
       .withColumnRenamed("doc_id", "new_id")
   }
 
   /** (doc_id, text) docs as ledger rows: the shingle sets (tokenized
-    * once) and their MinHash signatures. */
+    * once and pinned) and their MinHash signatures. */
   private def rowsOf(docs: DataFrame): DataFrame = {
     val sets = DedupQueries.shingleSetsOf(docs).localCheckpoint()
     sets.join(DedupQueries.minhashFrom(sets), Seq("doc_id"))
   }
 
-  /** Band keys from `sig` alone: `sd` stays unread on the band side.
+  /** Band keys of ledger rows from `sig` alone (`sd` stays unread on
+    * the band side), or of bare shingle sets through their signatures.
     * The q102 oracle mirrors the hot-band cap (ikept CTE). */
-  private val keysOf = (rows: DataFrame) => DedupQueries.bandKeys(rows.select("doc_id", "sig"))
+  private val keysOf = (rows: DataFrame) => DedupQueries.bandKeys(
+    if (rows.columns.contains("sig")) rows.select("doc_id", "sig") else DedupQueries.minhashFrom(rows))
 
   /** The Jaccard verify of each candidate's batch set against the
     * survivor's from `sets`, then the best match per batch doc. */
-  private def verified(sets: DataFrame, minJaccard: Double)(
-      cand: DataFrame, rows: DataFrame): DataFrame = {
+  private def verified(sets: DataFrame, minJaccard: Double)(cand: DataFrame, rows: DataFrame): DataFrame = {
     val inter = size(array_intersect(col("sa"), col("sb")))
     ProbeFold.bestMatch(cand.select("doc_id", "dup_of").distinct()
       .join(rows.select(col("doc_id"), col("sd").as("sa")), Seq("doc_id"))
       .join(sets.select(col("doc_id").as("dup_of"), col("sd").as("sb")), Seq("dup_of"))
       .withColumn("jaccard", inter.cast("double") / (size(col("sa")) + size(col("sb")) - inter))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_id", "dup_of", "jaccard"), col("jaccard").desc)
+      .filter(col("jaccard") >= minJaccard).select("doc_id", "dup_of", "jaccard"), col("jaccard").desc)
   }
 }

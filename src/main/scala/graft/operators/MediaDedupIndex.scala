@@ -57,10 +57,7 @@ object MediaDedupIndex {
           ("audio", MultimodalQueries.wavFingerprintBlocks(p))
       Row(r.getLong(0), modality, b(0), b(1), b(2), b(3))
     })
-    // every decoded field is set: declared non-nullable, no inferred
-    // null guard tells the two sides of a within-batch probe apart, so
-    // they share one shuffle
-    spark.createDataFrame(rdd, StructType(indexSchema.map(_.copy(nullable = false))))
+    spark.createDataFrame(rdd, indexSchema)
   }
 
   /** Build (or atomically refresh) the ledger from a media corpus. */
@@ -73,8 +70,7 @@ object MediaDedupIndex {
     * bv)` packed into `band`, so two items are candidates iff they share
     * a block at the same position within one modality. */
   private[graft] def blockKeys(rows: DataFrame): DataFrame =
-    rows.selectExpr("doc_id", "modality", "h0", "h1", "h2", "h3",
-        "posexplode(array(h0, h1, h2, h3)) AS (k, bv)")
+    rows.selectExpr("*", "posexplode(array(h0, h1, h2, h3)) AS (k, bv)")
       .selectExpr("doc_id", "struct(modality, k, bv) AS band", "h0", "h1", "h2", "h3")
 
   /** The exact Hamming gate over [[ProbeFold.pairs]] candidate rows of

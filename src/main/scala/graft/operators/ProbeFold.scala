@@ -10,30 +10,32 @@ import org.apache.spark.sql.functions._
   * (DedupStream and MediaDedupStream `processBatch`, [[DedupIndex]]
   * `ingest`, and `dedupBatch` probe-only) — the db.json incremental
   * re-run (reference etl.js:14-19) for a hash-keyed ledger: flag a
-  * batch against the ledger and within itself, then fold the
-  * survivors' rows in, so the next batch's twins collide with them.
+  * batch against the ledger and within itself (the lower id survives),
+  * then fold the survivors' rows in, so the next batch's twins collide.
   *
-  * A caller supplies the batch in its ledger's row shape (pinned once
-  * here), `keysOf` deriving `(doc_id, band, carried…)` keys from such
-  * rows — the same function on both sides, so batch and ledger hash
-  * identically — and a `verify` of the candidate rows given the pinned
-  * batch. A candidate's survivor side is renamed: `doc_id` → `dup_of`,
-  * carried `c` → `dup_c`.
+  * A caller supplies the batch pinned, in its ledger's row shape (for
+  * [[probe]], any shape `keysOf` and `verify` read); `keysOf` deriving
+  * `(doc_id, band, carried…)` keys from such rows, the same function on
+  * both sides; and a `verify` of the candidate rows, whose survivor
+  * side is renamed `doc_id` → `dup_of`, carried `c` → `dup_c`.
   *
-  * Hot keys: a key with m survivor-side members fans every prober out
-  * m ways, and a crowd inside one batch self-joins m². So on the
-  * survivor side of both probes a key over [[DedupQueries.DefaultBandCap]]
-  * members keeps only its min-id representative
-  * ([[DedupQueries.cappedBands]]): an over-cap crowd still flags,
-  * against the rep with linear fan-out, and a near twin still collides
-  * through its colder keys. Within a batch the lower id is the
-  * survivor, so every other member pairs with the rep (`dup_of <
-  * doc_id`) and the crowd folds ONE survivor; capping the prober side
-  * instead would emit rep-only rows that order never matches. The
-  * round-15 drop-the-key form probed EMPTY on hot keys: the crowd
-  * folded whole and its poisoned key hid from every later probe. The
-  * cap is a function of the ledger the [[IdPolicy]] lets the probe
-  * read, so a replay keeps the identical set.
+  * Which survivor-side keys the probes keep:
+  *  - `capHotKeys`, for band keys: a key with m members fans every
+  *    prober out m ways, and a crowd inside one batch self-joins m².
+  *    A key over [[DedupQueries.DefaultBandCap]] members keeps only its
+  *    min-id representative ([[DedupQueries.cappedBands]]): an over-cap
+  *    crowd still flags, against the rep with linear fan-out, and folds
+  *    ONE survivor; a near twin of a non-rep member still collides
+  *    through its colder bands. Capping the prober side instead would
+  *    emit rep-only rows the id order never matches; dropping the key
+  *    (round 15) let the crowd fold whole and hid it from every later
+  *    probe. The cap is over the ledger the [[IdPolicy]] lets the probe
+  *    read, so a replay keeps the same set.
+  *  - not `capHotKeys`, for a complete candidate search (the media
+  *    pigeonhole: Hamming ≤ 3 over 4 blocks ⟹ one equal block, which
+  *    may be a hot one such as a flat image quarter): every key is
+  *    kept, and only batch rows equal but for `doc_id` collapse to their
+  *    min id — the same flagged ids, with linear fan-out.
   */
 object ProbeFold {
 
@@ -52,30 +54,28 @@ object ProbeFold {
     * + 1, so a redelivery after a crash-after-fold changes nothing. */
   case object DocIdGuard extends IdPolicy
 
-  /** Flags of `batch` against `log` and within itself, verified and
-    * pinned; the unflagged batch rows are then appended to `log`. */
-  def apply(log: StateStore.Log, batch: DataFrame, keysOf: DataFrame => DataFrame, ids: IdPolicy,
-      bucketCols: Seq[String])(verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val rows = batch.localCheckpoint()
+  /** Flags of `rows` against `log` and within itself, verified and
+    * pinned; the unflagged rows are then appended to `log`. */
+  def apply(log: StateStore.Log, rows: DataFrame, keysOf: DataFrame => DataFrame, ids: IdPolicy,
+      capHotKeys: Boolean, bucketCols: Seq[String])(verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val keys = keysOf(rows)
-    val within = pairs(keys, cappedBands(keys, DefaultBandCap)).filter(col("dup_of") < col("doc_id"))
-    val flags = verify(vsLedger(log, keys, keysOf, ids).unionByName(within), rows).localCheckpoint()
-    val survivors = rows.join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+    val within = pairs(keys, if (capHotKeys) cappedBands(keys, DefaultBandCap) else keysOf(rows
+      .groupBy(rows.columns.filter(_ != "doc_id").map(col): _*).agg(min("doc_id").as("doc_id"))))
+      .filter(col("dup_of") < col("doc_id"))
+    val flags = verify(vsLedger(log, keys, keysOf, ids, capHotKeys).unionByName(within), rows).localCheckpoint()
+    val unflagged = rows.join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     ids match {
-      case BatchStamp(batchId) => StateStore.append(log, survivors, batchId, bucketCols)
-      case DocIdGuard => StateStore.append(log,
-        survivors.join(log.rows.select("doc_id"), Seq("doc_id"), "left_anti"),
-        log.newest + 1, bucketCols)
+      case BatchStamp(batchId) => StateStore.append(log, unflagged, batchId, bucketCols)
+      case DocIdGuard => StateStore.append(log, unflagged.join(log.rows.select("doc_id"), Seq("doc_id"),
+        "left_anti"), log.newest + 1, bucketCols)
     }
     flags
   }
 
   /** [[apply]]'s ledger probe alone: no within-batch arm, no fold. */
-  def probe(log: StateStore.Log, batch: DataFrame, keysOf: DataFrame => DataFrame,
-      ids: IdPolicy)(verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val rows = batch.localCheckpoint()
-    verify(vsLedger(log, keysOf(rows), keysOf, ids), rows)
-  }
+  def probe(log: StateStore.Log, rows: DataFrame, keysOf: DataFrame => DataFrame, ids: IdPolicy,
+      capHotKeys: Boolean)(verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    verify(vsLedger(log, keysOf(rows), keysOf, ids, capHotKeys), rows)
 
   /** Candidate rows of `keys` probing `survivorKeys` on the band, the
     * survivor side renamed: `doc_id` → `dup_of`, carried `c` → `dup_c`. */
@@ -89,11 +89,13 @@ object ProbeFold {
     flags.withColumn("rn", row_number().over(Window.partitionBy("doc_id")
       .orderBy(order, col("dup_of").asc))).filter(col("rn") === 1).drop("rn").orderBy("doc_id")
 
-  private def vsLedger(log: StateStore.Log, keys: DataFrame,
-      keysOf: DataFrame => DataFrame, ids: IdPolicy): DataFrame = ids match {
-    case BatchStamp(batchId) => pairs(keys,
-      cappedBands(keysOf(log.rows.filter(col(StateStore.Stamp) < batchId)), DefaultBandCap))
-    case DocIdGuard => pairs(keys, cappedBands(keysOf(log.rows), DefaultBandCap))
-      .filter(col("doc_id") =!= col("dup_of"))
+  private def vsLedger(log: StateStore.Log, keys: DataFrame, keysOf: DataFrame => DataFrame,
+      ids: IdPolicy, capHotKeys: Boolean): DataFrame = {
+    val ledger = keysOf(ids match {
+      case BatchStamp(batchId) => log.rows.filter(col(StateStore.Stamp) < batchId)
+      case DocIdGuard => log.rows
+    })
+    val cand = pairs(keys, if (capHotKeys) cappedBands(ledger, DefaultBandCap) else ledger)
+    if (ids == DocIdGuard) cand.filter(col("doc_id") =!= col("dup_of")) else cand
   }
 }

@@ -176,8 +176,8 @@ object DedupStream {
   def processBatch(spark: SparkSession, batchDocs: DataFrame,
       indexPath: String, batchId: Long): DataFrame =
     ProbeFold(StateStore.loadLog(spark, indexPath, bandsSchema),
-      DedupQueries.rowBands(batchDocs), _.select("doc_id", "band"),
-      ProbeFold.BatchStamp(batchId), Seq("band"))((cand, _) => cand.select("doc_id", "dup_of", "band"))
+      DedupQueries.rowBands(batchDocs).localCheckpoint(), _.select("doc_id", "band"),
+      ProbeFold.BatchStamp(batchId), capHotKeys = true, Seq("band"))((c, _) => c.select("doc_id", "dup_of", "band"))
 
   /** Streaming wiring: readStream → foreachBatch([[processBatch]]) →
     * caller's sink. The sink receives (flags, batchId) and must be

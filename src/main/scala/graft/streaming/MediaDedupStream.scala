@@ -19,8 +19,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * under `foreachBatch` — the documented Structured Streaming seam for
   * batch-only transforms — rather than as a stream-static join.
   *
-  * The probe, the hot-key cap and the fold are [[ProbeFold]]'s, the
-  * same step as [[DedupStream.processBatch]]'s. EXACTLY-ONCE under
+  * The probe and the fold are [[ProbeFold]]'s, the same step as
+  * [[DedupStream.processBatch]]'s without the hot-key cap (it would
+  * break the pigeonhole's completeness): the block probe keeps every key,
+  * and only identical fingerprints in a batch (a run of blank frames)
+  * collapse to their min id. EXACTLY-ONCE under
   * foreachBatch's at-least-once replay by its [[ProbeFold.BatchStamp]]
   * guard: ledger rows folded by batch N carry `added_batch = N`; both
   * the probe and the re-fold ignore rows with `added_batch >= batchId`,
@@ -43,17 +46,18 @@ object MediaDedupStream {
   /** One micro-batch: flag arriving media against the pre-batch ledger
     * and within the batch (lowest-id attribution — deterministic under
     * replay, no arrival-order dependence), fold survivors; the steps
-    * and the hot-key cap are [[ProbeFold]]'s, the keys are
-    * [[MediaDedupIndex.blockKeys]] and the verify is the exact Hamming
-    * gate, inline on the carried hashes. Returns the flag rows (doc_id,
+    * are [[ProbeFold]]'s, the keys are [[MediaDedupIndex.blockKeys]]
+    * and the verify is the exact Hamming gate, inline on the carried
+    * hashes. Returns the flag rows (doc_id,
     * modality, dup_of, hamming); a pair may repeat once per colliding
     * block, consumers dedup as their sink requires (the [[DedupStream]]
     * convention). */
   def processBatch(spark: SparkSession, batchMedia: DataFrame, dir: String,
       batchId: Long, maxHamming: Int = 3): DataFrame =
     ProbeFold(StateStore.loadLog(spark, ledgerPath(dir), ledgerSchema),
-      MediaDedupIndex.fingerprints(spark, batchMedia), MediaDedupIndex.blockKeys,
-      ProbeFold.BatchStamp(batchId), Seq("doc_id"))((cand, _) => MediaDedupIndex.verified(cand, maxHamming))
+      MediaDedupIndex.fingerprints(spark, batchMedia).localCheckpoint(), MediaDedupIndex.blockKeys,
+      ProbeFold.BatchStamp(batchId), capHotKeys = false, Seq("doc_id"))(
+      (cand, _) => MediaDedupIndex.verified(cand, maxHamming))
 
   /** Streaming wiring: foreachBatch drives [[processBatch]] per
     * micro-batch and appends the flags to an in-memory/parquet sink

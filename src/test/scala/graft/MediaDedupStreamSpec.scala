@@ -113,10 +113,9 @@ class MediaDedupStreamSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-media-crowd").toString
     try {
       // one micro-batch of identical frames (a run of blank frames, say):
-      // every block key is hot, so the survivor side keeps only the
-      // min-id representative and each other member flags against it
-      // once per block — 4·(n−1) rows, not the 4·n(n−1)/2 of a full
-      // self-join
+      // identical fingerprints collapse to their min id on the survivor
+      // side, so each other member flags against it once per block —
+      // 4·(n−1) rows, not the 4·n(n−1)/2 of a full self-join
       val n = DedupQueries.DefaultBandCap + 1
       val frame = MultimodalQueries.bmpBytes(12, 12, 7L)
       val crowd = (100L until 100L + n).map(i => (i, frame)).toDF("doc_id", "payload")
@@ -137,6 +136,60 @@ class MediaDedupStreamSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       SparkEntry.releaseCaches(spark)
     }
+  }
+
+  test("a near twin whose only equal block is a crowded flat one is flagged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-media-flat").toString
+    try {
+      // over DefaultBandCap ledger images share a flat top quarter
+      // (block 0 = 0: no luma rise) and differ elsewhere; a probe at
+      // Hamming 3 from a non-minimum member, one bit off in each other
+      // block, shares only the crowded key with it — the pigeonhole
+      // guarantees that one block, so the probe must keep it whole
+      val n = DedupQueries.DefaultBandCap + 1
+      val rnd = new scala.util.Random(11L)
+      val members = Iterator.continually(Seq(0) ++ Seq.fill(3)(rnd.nextInt(1 << 16)))
+        .scanLeft(Vector.empty[Seq[Int]]) { (acc, m) =>
+          if (acc.exists(hamming(_, m) <= 3)) acc else acc :+ m
+        }
+        .dropWhile(_.size < n).next()
+      val crowd = members.zipWithIndex.map { case (m, i) => (1000L + i, dhashBmp(m)) }
+      assert(crowd.forall { case (i, p) =>
+        MultimodalQueries.bmpDHashBlocks(p).toSeq == members((i - 1000L).toInt) })
+      val f0 = MediaDedupStream.processBatch(spark, crowd.toDF("doc_id", "payload"), dir,
+        batchId = 0L).collect()
+      assert(f0.isEmpty, f0.mkString(", "))
+      assert(MediaDedupStream.loadLedger(spark, dir).count() == n)
+      val target = members(40)
+      val probe = Seq(0) ++ target.tail.zipWithIndex.map { case (b, k) => b ^ (1 << (3 * k + 1)) }
+      assert(hamming(probe, target) == 3)
+      val f1 = MediaDedupStream.processBatch(spark,
+        Seq((900000L, dhashBmp(probe))).toDF("doc_id", "payload"), dir, batchId = 1L)
+        .collect().map(r => (r.getLong(0), r.getLong(2), r.getInt(3))).toSet
+      assert(f1.contains((900000L, 1040L, 3)), f1.mkString(", "))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
+  private def hamming(a: Seq[Int], b: Seq[Int]): Int =
+    a.zip(b).map { case (x, y) => Integer.bitCount(x ^ y) }.sum
+
+  /** A 9×8 grey BMP whose dHash is exactly `blocks`: bit j·8+i is set
+    * iff pixel i+1 of row j is brighter than pixel i. */
+  private def dhashBmp(blocks: Seq[Int]): Array[Byte] = {
+    val p = MultimodalQueries.bmpBytes(9, 8, 0L) // rows of 28 bytes from offset 54
+    for (j <- 0 until 8) {
+      var v = 100
+      for (i <- 0 until 9) {
+        val k = j * 8 + i - 1
+        if (i > 0 && (blocks(k / 16) >> (k % 16) & 1) == 1) v += 1
+        (0 until 3).foreach(c => p(54 + j * 28 + 3 * i + c) = v.toByte)
+      }
+    }
+    p
   }
 
   test("a media micro-batch against a non-empty ledger stays within its Spark job budget") {
