@@ -7,15 +7,15 @@ import graft.sinks.{JdkTransport, RequestBuilders}
 import graft.sources.{ApiSource, DimFiles}
 import graft.state.StateStore
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** The runnable entry point — the reference's `bin/etl` + dotenv flow
   * (bin/etl:1-24, example.env, lib/gh.js:48-190 mustInit): assemble an
   * [[EtlMain.EtlConfig]] from environment variables and the
   * hand-maintained dim files, validate the remote project the way
   * mustInit does (board-list columns exist as Status options; every
-  * configured field name resolves to a field id), then run the
-  * migration through a real HTTP transport.
+  * configured field name resolves to a field id), reading its field
+  * dimension once, then run the migration through a real HTTP
+  * transport.
   *
   * Config surface (example.env):
   *   GITHUB_ORG / GITHUB_REPO / GITHUB_TOKEN / GITHUB_PROJECT_NAME
@@ -68,17 +68,27 @@ object EtlCli {
   final class MustInitError(val messages: Seq[String])
     extends RuntimeException(messages.mkString("\n"))
 
-  /** mustInit (gh.js:48-190) as a pure resolution step. Returns the
-    * fully-resolved config; throws [[MustInitError]] with the
-    * reference's remediation report when the project is missing, a
-    * board-list status is not a Status column, or a configured field
-    * name does not exist on the project. */
+  /** The reference's remediation for a project that does not exist
+    * (utils/init.js:18-21): beta Projects cannot be created through
+    * this API path, so the user is sent to create it by hand. */
+  def missingProjectMessage(org: String, projectName: String): String =
+    s"'$projectName' does not exist and cannot be created automatically " +
+      s"via the API. Please go create it at: " +
+      s"https://github.com/orgs/$org/projects?type=beta"
+
+  /** mustInit (gh.js:48-190) as a pure resolution step, and the run's
+    * only read of the project-field dimension. Returns the
+    * fully-resolved config (field names to ids, and each single-select
+    * field's option names to ids for [[RequestBuilders.setFieldValue]]);
+    * throws [[MustInitError]] with the reference's remediation report
+    * when the project is missing, a board-list status is not a Status
+    * column, or a configured field name does not exist on the
+    * project. */
   def resolveConfig(
       spark: SparkSession,
       env: Map[String, String],
       transport: Transport,
-      secondaryAdminFieldId: String,
-      fields0: Option[org.apache.spark.sql.DataFrame] = None): EtlConfig = {
+      secondaryAdminFieldId: String): EtlConfig = {
     // required-env lookups go through the same remediation report as the
     // field-name checks — a missing var must not surface as a bare
     // NoSuchElementException (gh.js:92-115 reports every missing env)
@@ -90,17 +100,13 @@ object EtlCli {
     val org = env("GITHUB_ORG")
     val projectName = env("GITHUB_PROJECT_NAME")
     val project = RequestBuilders.getProjectByName(transport, org, projectName)
-      .getOrElse(throw new MustInitError(Seq(
-        // utils/init.js:18-21 remediation (projects cannot be created
-        // for the beta Projects UI via this API path)
-        s"'$projectName' does not exist and cannot be created " +
-          s"automatically via the API. Please go create it at: " +
-          s"https://github.com/orgs/$org/projects?type=beta")))
+      .getOrElse(throw new MustInitError(Seq(missingProjectMessage(org, projectName))))
 
-    val fields = fields0.getOrElse(ApiSource.fetchTable(spark, transport,
-      "/project/fields", ApiSource.fieldSchema))
+    val fields = ApiSource.fetchTable(spark, transport,
+      "/project/fields", ApiSource.fieldSchema)
     val byName: Map[String, String] = fields.select("name", "id").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
+    val optionIds = RequestBuilders.optionIds(ApiSource.fieldOptions(fields))
 
     // board-list columns must exist among the literal "Status" field's
     // options (gh.js:68-90 — the reference hardcodes the field name
@@ -108,9 +114,8 @@ object EtlCli {
     // CARD_STATUS field)
     val listStatusMap = parseBoardLists(env("GITHUB_PROJECT_BOARD_LISTS"))
     val malformedPairs = malformedBoardLists(env("GITHUB_PROJECT_BOARD_LISTS"))
-    val statusOptions = ApiSource.fieldOptions(fields)
-      .filter(col("field_name") === "Status")
-      .select("option_name").collect().map(_.getString(0)).toSet
+    val statusOptions = byName.get("Status").flatMap(optionIds.get)
+      .fold(Set.empty[String])(_.keySet)
     val unlisted = listStatusMap.values.toSeq.distinct
       .filterNot(statusOptions.contains)
 
@@ -157,39 +162,19 @@ object EtlCli {
       projectNodeId = project.id,
       listStatusMap = listStatusMap,
       secondaryAdminFieldId = secondaryAdminFieldId,
-      fieldIds = named.map { case (_, key, name) => key -> byName(name) }.toMap)
+      fieldIds = named.map { case (_, key, name) => key -> byName(name) }.toMap,
+      optionIds = optionIds)
   }
 
-  /** The project-fields dim read as the DSv2 `graft-api` source:
-    * pages fetched on EXECUTORS as real input partitions (vs the
-    * driver-side one-shot `ApiSource.fetchTable`) — the right shape
-    * once the dim endpoint is big enough to page. The stub/real server
-    * contract is the DSv2 one: `?page=N` 0-based, empty array past the
-    * end. Wired into the full migration via [[run]]'s `apiFields`. */
-  def dsv2Fields(
-      spark: SparkSession,
-      endpoint: String,
-      headers: Map[String, String] = Map.empty,
-      partitions: Int = 2): org.apache.spark.sql.DataFrame = {
-    val r = spark.read.format("graft-api")
-      .schema(ApiSource.fieldSchema)
-      .option("endpoint", endpoint)
-      .option("urlTemplate", "/project/fields?page={page}")
-      .option("partitions", partitions.toString)
-    headers.foldLeft(r) { case (b, (k, v)) => b.option(s"header.$k", v) }.load()
-  }
-
-  /** Assemble config from env + dim files and run the migration.
-    * `apiFields` (e.g. [[dsv2Fields]]) replaces BOTH field-dim reads —
-    * mustInit's name→id resolution here and the id validation inside
-    * [[EtlMain.run]] — with the executor-side DSv2 scan. */
+  /** Assemble config from env + dim files and run the migration. The
+    * field dimension is read once, by [[resolveConfig]]; the migration
+    * writes through the field and option ids it resolved. */
   def run(
       spark: SparkSession,
       env: Map[String, String],
       transport: Transport,
       boardPath: String,
-      trelloFieldsPath: Option[String] = None,
-      apiFields: Option[org.apache.spark.sql.DataFrame] = None): EtlResult = {
+      trelloFieldsPath: Option[String] = None): EtlResult = {
     // trello-fields.json supplies the board-side custom-field ids
     // (lib/transform.js:10, README "trello-fields.json") — only
     // `secondaryAdmin` feeds the migration (fallback-owner extraction)
@@ -197,7 +182,7 @@ object EtlCli {
       .map(p => DimFiles.asMap(DimFiles.trelloFields(spark, p)))
       .flatMap(_.get("secondaryAdmin"))
       .getOrElse("")
-    val config = resolveConfig(spark, env, transport, secondaryAdmin, apiFields)
+    val config = resolveConfig(spark, env, transport, secondaryAdmin)
     // durable ledgers — the reference persists db.json automatically
     // between runs (etl.js:14-19); with GRAFT_STATE_DIR set the CLI
     // does the same: load before, save after, so a re-run sends only
@@ -211,8 +196,7 @@ object EtlCli {
           issueLedger0 =
             Some(StateStore.load(spark, issuePath, EtlMain.issueLedgerSchema)),
           fieldLedger0 =
-            Some(StateStore.load(spark, fieldPath, EtlMain.fieldLedgerSchema)),
-          fields0 = apiFields)
+            Some(StateStore.load(spark, fieldPath, EtlMain.fieldLedgerSchema)))
         StateStore.save(result.issueLedger, issuePath,
           bucketCols = Seq("entity_kind", "entity_id"))
         StateStore.save(result.fieldLedger, fieldPath,
@@ -221,9 +205,18 @@ object EtlCli {
           issueLedger = StateStore.load(spark, issuePath, EtlMain.issueLedgerSchema),
           fieldLedger = StateStore.load(spark, fieldPath, EtlMain.fieldLedgerSchema))
       case None =>
-        EtlMain.run(spark, boardPath, config, transport, fields0 = apiFields)
+        EtlMain.run(spark, boardPath, config, transport)
     }
   }
+
+  /** The GitHub API transport of both CLI mains: `GITHUB_API_URL`
+    * (default the public API) with the reference's headers
+    * (gh.js:25-28). */
+  def githubTransport(): JdkTransport = new JdkTransport(
+    sys.env.getOrElse("GITHUB_API_URL", "https://api.github.com"),
+    Map(
+      "accept" -> "application/vnd.github.v3+json",
+      "Authorization" -> s"token ${sys.env.getOrElse("GITHUB_TOKEN", "")}"))
 
   /** bin/etl: `etl [board.json [trello-fields.json]]` against the real
     * GitHub API (headers per gh.js:25-28). */
@@ -233,22 +226,9 @@ object EtlCli {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     try {
-      val apiUrl = sys.env.getOrElse("GITHUB_API_URL", "https://api.github.com")
-      val headers = Map(
-        "accept" -> "application/vnd.github.v3+json",
-        "Authorization" -> s"token ${sys.env.getOrElse("GITHUB_TOKEN", "")}")
-      val transport = new JdkTransport(apiUrl, headers)
-      // GRAFT_API_FIELDS_DSV2=1 routes the field-dim reads through the
-      // partition-per-page DSv2 scan (the server must answer the
-      // ?page=N contract); default stays the driver-side fetch
-      val fieldsFrame =
-        if (sys.env.get("GRAFT_API_FIELDS_DSV2").exists(_.nonEmpty))
-          Some(dsv2Fields(spark, apiUrl, headers))
-        else None
-      val result = run(spark, sys.env.toMap, transport,
+      val result = run(spark, sys.env.toMap, githubTransport(),
         boardPath = args.lift(0).getOrElse("./board.json"),
-        trelloFieldsPath = args.lift(1),
-        apiFields = fieldsFrame)
+        trelloFieldsPath = args.lift(1))
       println(s"sent=${result.report.sent} retried=${result.report.retried} " +
         s"failed=${result.report.failed}")
     } catch {

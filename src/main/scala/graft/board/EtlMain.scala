@@ -2,7 +2,6 @@ package graft.board
 
 import graft.sinks.HttpSink.{RateLimitedWriter, RetryPolicy, SinkReport, Transport}
 import graft.sinks.{HttpSink, RequestBuilders}
-import graft.sources.{ApiSource, ConfigValidation}
 import graft.state.StateStore
 import graft.transforms.TrelloTransforms
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -10,10 +9,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The end-to-end migration pipeline — the reference's `main(board)`
-  * (etl.js:363-417) composed from the engine's verified parts:
+  * (etl.js:363-417) composed from the engine's verified parts. It
+  * starts from a config that [[EtlCli.resolveConfig]] has already
+  * validated against the project (mustInit, gh.js:48-190), field and
+  * option ids included, so it reads nothing from the API itself:
   *
-  *   mustInit (field validation, gh.js:48-190)
-  *   → normalize + derive (BoardPipeline ← transform.js:223-305)
+  *   normalize + derive (BoardPipeline ← transform.js:223-305)
   *   → issue creates, cards then items (etl.js:41-45, 173-199)
   *   → item title-drift updates (etl.js:199-218)
   *   → item closes (etl.js:219-226)
@@ -41,7 +42,7 @@ import org.apache.spark.sql.types._
   * board-sized frame; empty ledgers are empty local relations that
   * Catalyst folds out at plan time; and title drift and closes read
   * only the pre-run ledger, so on a cold run they launch no job at all.
-  * A cold migration of the 4-issue fixture board runs 31 jobs. Request
+  * A cold migration of the 4-issue fixture board runs 22 jobs. Request
   * order inside a phase is deterministic: entity kind (every card
   * before every item), entity id, then field. Across phases, what a
   * request needs was created by an earlier phase: the project add
@@ -80,6 +81,7 @@ object EtlMain {
       listStatusMap: Map[String, String],
       secondaryAdminFieldId: String,
       fieldIds: Map[String, String],
+      optionIds: Map[String, Map[String, String]], // field id → option name → id
       policy: RetryPolicy = RetryPolicy()) // etl.js:6 SLEEP=3000 pacing
 
   final case class EtlResult(
@@ -133,8 +135,7 @@ object EtlMain {
       transport: Transport,
       issueLedger0: Option[DataFrame] = None,
       fieldLedger0: Option[DataFrame] = None,
-      sleeper: Long => Unit = Thread.sleep,
-      fields0: Option[DataFrame] = None): EtlResult = {
+      sleeper: Long => Unit = Thread.sleep): EtlResult = {
     import spark.implicits._
     val writer = new RateLimitedWriter(transport, config.policy, sleeper)
     var totalSent = 0; var totalRetried = 0; var totalFailed = 0
@@ -146,19 +147,6 @@ object EtlMain {
       totalSent += r.sent; totalRetried += r.retried; totalFailed += r.failed
       acked
     }
-
-    // ---- mustInit (S3/J10): configured field ids must exist remotely.
-    //      `fields0` lets the caller supply the dim through the DSv2
-    //      `graft-api` source (partition-per-page executor-side scan —
-    //      EtlCli wires it when the endpoint is HTTP); the default
-    //      stays the driver-side one-shot fetch, right for a
-    //      page-capped dim read over an opaque Transport.
-    val fields = fields0.getOrElse(ApiSource.fetchTable(spark, transport,
-      "/project/fields", ApiSource.fieldSchema))
-    ConfigValidation.requireAllPresent(
-      config.fieldIds.values.toSeq.toDF("id"), fields.select("id"), "id",
-      "project field")
-    val options = RequestBuilders.optionIds(ApiSource.fieldOptions(fields))
 
     // ---- normalize + derive
     val board = BoardPipeline.readBoard(spark, boardPath)
@@ -244,7 +232,8 @@ object EtlMain {
       val withNode = changes
         .join(broadcast(ledger.select(col("entity_kind"), col("entity_id"),
           col("project_item_id").as("item_node_id"))), Seq("entity_id"))
-      val reqs = RequestBuilders.setFieldValue(withNode, options, config.projectNodeId)
+      val reqs = RequestBuilders.setFieldValue(withNode, config.optionIds,
+        config.projectNodeId)
       val resps = send(reqs, EntityKey :+ "field_id")
       // record ONLY the writes the API acknowledged (2xx): a failed or
       // join-dropped row must stay out of the ledger so a resume

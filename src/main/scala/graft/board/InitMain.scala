@@ -2,7 +2,7 @@ package graft.board
 
 import graft.GraftSession
 import graft.sinks.HttpSink.Transport
-import graft.sinks.{JdkTransport, RequestBuilders}
+import graft.sinks.RequestBuilders
 import graft.sinks.RequestBuilders.ProjectInfo
 import org.apache.spark.sql.SparkSession
 
@@ -64,22 +64,14 @@ object InitMain {
     val repoJson = RequestBuilders.getOrCreateRepo(transport, org, repoName)
     RequestBuilders.getProjectByName(transport, org, projectName) match {
       case Some(project) => Ready(repoJson, project)
-      case None => MissingProject(
-        s"'$projectName' does not exist and cannot be created automatically " +
-          s"via the API. Please go create it at: " +
-          s"https://github.com/orgs/$org/projects?type=beta")
+      case None => MissingProject(EtlCli.missingProjectMessage(org, projectName))
     }
   }
 
   def main(args: Array[String]): Unit = {
-    val transport = new JdkTransport(
-      sys.env.getOrElse("GITHUB_API_URL", "https://api.github.com"),
-      Map(
-        "accept" -> "application/vnd.github.v3+json",
-        "Authorization" -> s"token ${sys.env.getOrElse("GITHUB_TOKEN", "")}"))
     val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .getOrCreate()
-    try run(spark, sys.env.toMap, transport) match {
+    try run(spark, sys.env.toMap, EtlCli.githubTransport()) match {
       case Ready(_, project) =>
         println(s"Project Node ID: ${project.id}")
       case MissingProject(message) =>

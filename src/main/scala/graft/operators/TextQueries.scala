@@ -1127,9 +1127,9 @@ object TextQueries {
           .select(col("doc_id"), round(col("entropy"), 6).as("rent"))
           .localCheckpoint()
         val r1 = GlobalRank.withRowIndex(sc,
-          Seq(col("rscore").desc, col("doc_id").asc), "rk1", inputPinned = true)
+          Seq(col("rscore").desc, col("doc_id").asc), "rk1")
         val r2 = GlobalRank.withRowIndex(en,
-          Seq(col("rent").desc, col("doc_id").asc), "rk2", inputPinned = true)
+          Seq(col("rent").desc, col("doc_id").asc), "rk2")
         val nn = sc.agg(count(lit(1)).as("n"))
         r1.select("doc_id", "rk1")
           .join(r2.select("doc_id", "rk2"), Seq("doc_id"))

@@ -13,11 +13,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 form of the paginated API source (S7-S10): the
-  * idiomatic promotion of [[ApiSource.fetchAll]]'s driver-side page
-  * walk once a paginated endpoint is big enough to matter — pages are
-  * fetched ON EXECUTORS, planned as real input partitions, instead of
-  * a driver loop followed by `createDataFrame`.
+/** DataSource V2 form of the paginated API source (S7-S10), the
+  * engine's one reader for an endpoint that pages: pages are fetched
+  * ON EXECUTORS, planned as real input partitions, instead of a driver
+  * loop followed by `createDataFrame`. The project-field dimension
+  * mustInit reads is a few dozen rows, so [[graft.board.EtlCli]] reads
+  * it with the driver-side [[ApiSource.fetchTable]]; this source is
+  * for reads that outgrow one request.
   *
   * {{{
   * spark.read.format("graft-api")

@@ -13,11 +13,12 @@ import org.apache.spark.sql.types._
   *
   * Dimensions fetched this way are inherently small (page-capped APIs);
   * the 100 TB axis is never an API — that's what the parquet/stream
-  * sources are for. What matters at scale is (a) pagination is explicit
-  * — `fetchAll` walks pages until exhaustion rather than silently
-  * truncating at 100 like the reference (gh.js:271,409; SURVEY §7.3
-  * hard part), and (b) the parsed dimension immediately becomes a
-  * broadcastable DataFrame instead of driver-side mutable state.
+  * sources are for, and an endpoint that pages is read by the
+  * partition-per-page DSv2 source ([[ApiDataSource]]), which walks
+  * pages until exhaustion rather than silently truncating at 100 like
+  * the reference (gh.js:271,409; SURVEY §7.3 hard part). The parsed
+  * dimension immediately becomes a broadcastable DataFrame instead of
+  * driver-side mutable state.
   */
 object ApiSource {
 
@@ -33,35 +34,18 @@ object ApiSource {
       StructField("id", StringType),
       StructField("name", StringType)))))))
 
-  /** Fetch one endpoint and parse its JSON array body into rows. */
+  /** Fetch one endpoint and parse its JSON array body into rows. A
+    * non-2xx answer fails with its status and body: an error page
+    * parsed as data would read as a dimension with nothing in it. */
   def fetchTable(
       spark: SparkSession,
       transport: Transport,
       url: String,
       schema: StructType): DataFrame = {
-    val body = transport.send(HttpRequest("GET", url, "")).body
-    parseJsonArray(spark, body, schema)
-  }
-
-  /** Page through `urlForPage` until a page returns fewer than
-    * `pageSize` rows — explicit pagination, no silent caps. */
-  def fetchAll(
-      spark: SparkSession,
-      transport: Transport,
-      urlForPage: Int => String,
-      schema: StructType,
-      pageSize: Int): DataFrame = {
-    val pages = Iterator.from(0)
-      .map(p => parseJsonArray(spark,
-        transport.send(HttpRequest("GET", urlForPage(p), "")).body, schema))
-      .map(df => (df, df.count()))
-      .takeWhile { case (_, n) => n > 0 }
-      .map(_._1)
-      .toSeq
-    val all = pages.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    all
+    val resp = transport.send(HttpRequest("GET", url, ""))
+    require(resp.status >= 200 && resp.status < 300,
+      s"GET $url failed: ${resp.status} ${resp.body}")
+    parseJsonArray(spark, resp.body, schema)
   }
 
   /** One JSON array string → DataFrame rows under an explicit schema. */
@@ -73,7 +57,8 @@ object ApiSource {
   }
 
   /** Field dimension with `settings.options` exploded — feeds the J11
-    * option-id lookup ([[ConfigValidation.resolveOptionId]]). */
+    * option-id lookup (`RequestBuilders.optionIds`, then
+    * `RequestBuilders.setFieldValue`). */
   def fieldOptions(fields: DataFrame): DataFrame =
     fields
       .withColumn("parsed", from_json(col("settings"), optionSchema))

@@ -294,6 +294,7 @@ object EventsStreaming {
       numBuckets: Int = 16): Unit = {
     import graft.state.StateStore
     import org.apache.spark.sql.functions.{broadcast, col, hash, lit, max, pmod}
+    val statePath = new org.apache.hadoop.fs.Path(stateDir)
     val q = runningCounts(spark, events).toDF()
       .writeStream
       .outputMode("append")
@@ -302,9 +303,12 @@ object EventsStreaming {
           .groupBy("user_id")
           .agg(max("n_events").as("n_events"), max("value_sum").as("value_sum"))
           .withColumn("bucket", pmod(hash(col("user_id")), lit(numBuckets)))
+        // only an absent state directory is empty state: an unreadable
+        // one must fail the batch, not be rewritten from it alone
         val current =
-          try spark.read.parquet(stateDir)
-          catch { case _: Throwable => incoming.limit(0) }
+          if (statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(statePath)) spark.read.parquet(stateDir)
+          else incoming.limit(0)
         // merge only the touched buckets; localCheckpoint materializes
         // them so the dynamic overwrite below never reads its own output
         val touched = incoming.select("bucket").distinct()
@@ -312,13 +316,14 @@ object EventsStreaming {
           .join(broadcast(touched), Seq("bucket"), "left_semi")
           .localCheckpoint(true)
         val merged = StateStore.merge(currentTouched, incoming, Seq("bucket", "user_id"))
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(stateDir)
+        // dynamic for this write only: the session's setting is the
+        // caller's, and every other partitioned overwrite reads it
+        merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(stateDir)
         ()
       }
       .start()
-    q.processAllAvailable()
-    q.stop()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Drive any of the above synchronously against a memory sink; used

@@ -1,10 +1,11 @@
 package graft
 
 import graft.sinks.HttpSink.{HttpRequest, HttpResponse, Transport}
-import graft.sources.{ApiSource, ConfigValidation}
+import graft.sinks.RequestBuilders
+import graft.sources.ApiSource
 
-/** API dimension source: JSON parse, explicit pagination, nested
-  * settings → option dim → J11 lookup, end to end on a mock transport. */
+/** API dimension source: JSON parse, nested settings → option dim →
+  * J11 lookup, end to end on a mock transport. */
 class ApiSourceSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -12,15 +13,13 @@ class ApiSourceSpec extends SparkSpecBase {
     """[{"id":"f1","name":"Status","settings":"{\"options\":[{\"id\":\"o1\",\"name\":\"Pending\"},{\"id\":\"o2\",\"name\":\"Done\"}]}"},
        {"id":"f2","name":"Owner","settings":null}]"""
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private object MockApi extends Transport {
     var calls = 0
     def send(req: HttpRequest): HttpResponse = {
       calls += 1
       if (req.url.startsWith("/fields")) HttpResponse(200, fieldsJson)
-      else if (req.url == "/items?page=0")
-        HttpResponse(200, """[{"id":"a","name":"one","settings":null},{"id":"b","name":"two","settings":null}]""")
-      else if (req.url == "/items?page=1")
-        HttpResponse(200, """[{"id":"c","name":"three","settings":null}]""")
       else HttpResponse(200, "[]")
     }
   }
@@ -29,13 +28,6 @@ class ApiSourceSpec extends SparkSpecBase {
     val fields = ApiSource.fetchTable(spark, MockApi, "/fields", ApiSource.fieldSchema)
     assert(fields.count() == 2)
     assert(fields.filter($"name" === "Status").count() == 1)
-  }
-
-  test("fetchAll pages until exhaustion — no silent 100-row caps") {
-    val all = ApiSource.fetchAll(spark, MockApi,
-      p => s"/items?page=$p", ApiSource.fieldSchema, pageSize = 2)
-    assert(all.select("id").collect().map(_.getString(0)).sorted.toSeq
-      == Seq("a", "b", "c"))
   }
 
   test("fieldOptions explodes settings JSON into the option dimension") {
@@ -48,10 +40,14 @@ class ApiSourceSpec extends SparkSpecBase {
 
   test("fetched options drive the J11 single-select lookup end to end") {
     val fields = ApiSource.fetchTable(spark, MockApi, "/fields", ApiSource.fieldSchema)
-    val opts = ApiSource.fieldOptions(fields).select("option_name", "option_id")
-    val resolved = ConfigValidation.resolveOptionId(
-      Seq("Done", "Pending").toDF("status"), "status", opts)
-    assert(resolved.orderBy("status").collect().map(_.getAs[String]("option_id")).toSeq
-      == Seq("o2", "o1"))
+    val options = RequestBuilders.optionIds(ApiSource.fieldOptions(fields))
+    assert(options == Map("f1" -> Map("Pending" -> "o1", "Done" -> "o2")))
+    val writes = Seq(("item1", "f1", "Done"), ("item2", "f1", "Pending"), ("item3", "f2", "alice"))
+      .toDF("item_node_id", "field_id", "value")
+    val values = RequestBuilders.setFieldValue(writes, options, "PROJ")
+      .orderBy("item_node_id").select("body").collect()
+      .map(r => mapper.readTree(r.getString(0)).at("/variables/value").asText()).toSeq
+    // single-select names become option ids; a free-form field passes through
+    assert(values == Seq("o2", "o1", "alice"))
   }
 }

@@ -72,10 +72,6 @@ class EtlCliSpec extends SparkSpecBase {
           HttpResponse(200,
             s"""{"data":{"organization":{"projectsNext":{"nodes":[$nodes]}}}}""")
         case ("GET", "/project/fields") => HttpResponse(200, fieldsJson)
-        // the DSv2 paged contract (?page=N 0-based, empty past the end)
-        case ("GET", url) if url.startsWith("/project/fields?page=") =>
-          val page = url.substring("/project/fields?page=".length).toInt
-          HttpResponse(200, if (page == 0) fieldsJson else "[]")
         case ("GET", "/repos/org1/repo1") =>
           if (repoExists) HttpResponse(200, """{"name":"repo1","full_name":"org1/repo1"}""")
           else HttpResponse(404, """{"message":"Not Found"}""")
@@ -114,6 +110,26 @@ class EtlCliSpec extends SparkSpecBase {
     assert(cfg.fieldIds(graft.board.EtlMain.Fields.Dash) == "F_DASH")
     assert(cfg.fieldIds(graft.board.EtlMain.Fields.CardStatus) == "F_STATUS")
     assert(cfg.fieldIds.size == EtlCli.FieldEnvNames.size)
+    // the single-select options the field writes translate through
+    assert(cfg.optionIds == Map("F_STATUS" -> Map("Pending" -> "opt_pending",
+      "Considering" -> "opt_considering", "Completed" -> "opt_completed")))
+  }
+
+  test("an error answer on the field dimension fails resolveConfig with its status") {
+    // a 401 page parsed as data would read as a project with no fields
+    // and report every configured name as missing, hiding the 401
+    val gh = new FakeGithub {
+      override def send(req: HttpRequest): HttpResponse =
+        if (req.url == "/project/fields") {
+          log += req
+          HttpResponse(401, """{"message":"Bad credentials"}""")
+        } else super.send(req)
+    }
+    val ex = intercept[IllegalArgumentException] {
+      EtlCli.resolveConfig(spark, env, gh, "cf1")
+    }
+    assert(ex.getMessage.contains("401") && ex.getMessage.contains("Bad credentials"),
+      ex.getMessage)
   }
 
   test("project lookup requires EXACT title match (gh.js:290-297)") {
@@ -214,12 +230,11 @@ class EtlCliSpec extends SparkSpecBase {
     }
   }
 
-  test("DSv2 graft-api field source drives the full migration over live HTTP") {
+  test("the CLI migrates over live HTTP through JdkTransport, reading the " +
+      "field dimension once per run") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    // the scripted backend served over a REAL socket: the DSv2 field
-    // scan (executor-side page fetches) and the mutation transport both
-    // hit the same live server, so this is the end-to-end CLI flow with
-    // `spark.read.format("graft-api")` as the dim source
+    // the scripted backend served over a REAL socket: config
+    // resolution and the mutations both go through one JdkTransport
     val gh = new FakeGithub
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
@@ -228,8 +243,7 @@ class EtlCliSpec extends SparkSpecBase {
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
         val url = ex.getRequestURI.getPath +
           Option(ex.getRequestURI.getQuery).map("?" + _).getOrElse("")
-        // page fetches arrive concurrently from executor threads; the
-        // scripted backend mutates counters, so serialize at the door
+        // the scripted backend mutates counters: serialize at the door
         val resp = gh.synchronized {
           gh.send(HttpRequest(ex.getRequestMethod, url, body))
         }
@@ -241,18 +255,11 @@ class EtlCliSpec extends SparkSpecBase {
     })
     server.start()
     try {
-      val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val transport = new graft.sinks.JdkTransport(endpoint)
-      val fieldsFrame = EtlCli.dsv2Fields(spark, endpoint, partitions = 2)
-      // partition-per-page planning: the scan is real input partitions,
-      // not a driver loop
-      assert(fieldsFrame.rdd.getNumPartitions == 2)
-      assert(fieldsFrame.queryExecution.executedPlan.toString.contains("BatchScan"))
-
-      val result = EtlCli.run(spark, env, transport, boardPath,
-        apiFields = Some(fieldsFrame))
-      // same migration as the Transport-only run: 4 creates, 30 field
-      // sets, resolved remote ids in payloads
+      val transport = new graft.sinks.JdkTransport(
+        s"http://127.0.0.1:${server.getAddress.getPort}")
+      val result = EtlCli.run(spark, env, transport, boardPath)
+      // same migration as the scripted-Transport run: 4 creates, 30
+      // field sets, resolved remote ids in payloads
       val creates = gh.log.filter(r =>
         r.method == "POST" && r.url == "/repos/org1/repo1/issues")
       assert(creates.size == 4)
@@ -261,11 +268,10 @@ class EtlCliSpec extends SparkSpecBase {
       assert(sets.exists(_.body.contains(""""fieldId":"F_DASH"""")))
       assert(result.report.failed == 0)
       assert(result.issueLedger.count() == 4)
-      // the dim reads went through the paged DSv2 contract — and the
-      // driver-side one-shot fetch never fired (BOTH field reads were
-      // replaced, resolveConfig's and EtlMain.run's)
-      assert(gh.log.exists(r => r.url == "/project/fields?page=0"))
-      assert(!gh.log.exists(r => r.url == "/project/fields"))
+      // mustInit's one read: the migration takes its field and option
+      // ids from the resolved config
+      assert(gh.log.count(r => r.method == "GET" && r.url == "/project/fields") == 1)
+      assert(gh.log.forall(r => r.method != "GET" || r.url == "/project/fields"))
     } finally server.stop(0)
   }
 

@@ -25,24 +25,16 @@ class EtlMainSpec extends SparkSpecBase {
     Fields.TaskParent -> "F_PARENT", Fields.TaskParentLink -> "F_PARENTLINK",
     Fields.Dash -> "F_DASH", Fields.TaskAssignee -> "F_ASSIGNEE")
 
-  /** GitHub-shaped scripted backend: serves the field dim, mints issue
-    * numbers/node ids, answers both GraphQL mutations. */
+  /** GitHub-shaped scripted backend: mints issue numbers/node ids and
+    * answers both GraphQL mutations. It serves no read: the config
+    * arrives resolved, field and option ids included. */
   private class FakeGithub extends Transport {
     val log = mutable.Buffer.empty[HttpRequest]
     private var issueSeq = 0
     private var itemSeq = 0
-    private val fieldsJson = {
-      val opts = """{\"options\":[{\"id\":\"opt_pending\",\"name\":\"Pending\"},{\"id\":\"opt_done\",\"name\":\"Completed\"}]}"""
-      val rows = fieldIds.values.toSeq.sorted.map { id =>
-        if (id == "F_STATUS") s"""{"id":"$id","name":"$id","settings":"$opts"}"""
-        else s"""{"id":"$id","name":"$id","settings":null}"""
-      }
-      rows.mkString("[", ",", "]")
-    }
     def send(req: HttpRequest): HttpResponse = {
       log += req
       (req.method, req.url) match {
-        case ("GET", "/project/fields") => HttpResponse(200, fieldsJson)
         case ("POST", "/repos/org1/repo1/issues") =>
           issueSeq += 1
           val title = mapper.readTree(req.body).at("/title").asText()
@@ -68,7 +60,8 @@ class EtlMainSpec extends SparkSpecBase {
     owner = "org1", repo = "repo1", projectNodeId = "PROJ1",
     listStatusMap = Map("Concepts" -> "Pending", "Production" -> "Completed"),
     secondaryAdminFieldId = "cf1",
-    fieldIds = fieldIds)
+    fieldIds = fieldIds,
+    optionIds = Map("F_STATUS" -> Map("Pending" -> "opt_pending", "Completed" -> "opt_done")))
 
   private lazy val boardPath = getClass.getResource("/board.json").getPath
 
@@ -76,6 +69,8 @@ class EtlMainSpec extends SparkSpecBase {
     val gh = new FakeGithub
     val result = EtlMain.run(spark, boardPath, config, gh, sleeper = _ => ())
 
+    // the config arrives resolved: the migration reads nothing
+    assert(!gh.log.exists(_.method == "GET"))
     val mutations = gh.log.filterNot(r => r.method == "GET")
     // 1 card create + 3 item creates (i1, i2, i4; i3 is complete and
     // never imported, c2 closed, c3 unmapped — exactly the reference's
@@ -425,7 +420,7 @@ class EtlMainSpec extends SparkSpecBase {
 
   /** Spark jobs of one cold migration of the fixture board: a ratchet,
     * lower it when a change saves jobs. */
-  private val ColdMigrationJobs = 25
+  private val ColdMigrationJobs = 22
 
   test("a cold migration stays within its Spark job budget, and its " +
       "title-drift and close phases launch no job") {
@@ -458,18 +453,5 @@ class EtlMainSpec extends SparkSpecBase {
     assert(lastCreate < firstAdd)
     assert(gh.jobsAt(firstAdd) - gh.jobsAt(lastCreate) == 1,
       s"${gh.jobsAt(firstAdd) - gh.jobsAt(lastCreate)} jobs between the creates and the adds")
-  }
-
-  test("missing configured field fails mustInit (gh.js:144-176 gate)") {
-    val gh = new FakeGithub {
-      override def send(req: HttpRequest): HttpResponse =
-        if (req.url == "/project/fields")
-          HttpResponse(200, """[{"id":"F_ID","name":"F_ID","settings":null}]""")
-        else super.send(req)
-    }
-    val ex = intercept[IllegalStateException] {
-      EtlMain.run(spark, boardPath, config, gh, sleeper = _ => ())
-    }
-    assert(ex.getMessage.contains("project field"))
   }
 }

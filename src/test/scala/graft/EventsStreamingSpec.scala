@@ -173,6 +173,45 @@ class EventsStreamingSpec extends SparkSpecBase {
       .filter(col("n_events") =!= col("n")).count() == 0)
   }
 
+  test("upsertRunningState overwrites partitions dynamically for its own " +
+      "writes only: the session's setting is unchanged") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_state").toString + "/state"
+    spark.conf.set(key, "static")
+    EventsStreaming.upsertRunningState(spark, EventsStreaming.readEvents(spark, path), stateDir)
+    // a second run touching one bucket only leaves the other buckets
+    // in place: the write overwrote its partitions, not the table
+    EventsStreaming.upsertRunningState(spark, EventsStreaming.readEvents(spark, path)
+      .filter(pmod(hash(col("user_id")), lit(16)) === 0), stateDir)
+    assert(spark.conf.get(key) == "static")
+    val batch = Tables.events(spark, "/root/testdata/sf0.001")
+      .groupBy("user_id").agg(count(lit(1)).as("n"))
+    val state = spark.read.parquet(stateDir)
+    assert(state.select("bucket").distinct().count() > 1)
+    assert(state.count() == batch.count())
+    assert(state.join(batch, Seq("user_id"))
+      .filter(col("n_events") =!= col("n")).count() == 0)
+  }
+
+  test("upsertRunningState fails a batch whose state it cannot read") {
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_state").toString + "/state"
+    EventsStreaming.upsertRunningState(spark, EventsStreaming.readEvents(spark, path), stateDir)
+    // every part file unreadable: only an ABSENT state directory may
+    // read as empty state, or the next batch silently rewrites the
+    // buckets it touches from its own rows alone
+    val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(stateDir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      java.nio.file.Files.write(p, "not parquet".getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventsStreaming.upsertRunningState(spark, EventsStreaming.readEvents(spark, path), stateDir)
+    }
+  }
+
   test("streaming reader is encoding-adaptive: int64-nanos fixture " +
       "streams identically to the micro-TIMESTAMP fixture") {
     // stage a nanos-encoded twin of the same events (the shape the

@@ -36,7 +36,7 @@ object GlobalRankProps extends Properties("global-rank") {
       got == expected
     }
 
-  property("inputPinned skips the defensive checkpoint but ranks identically") =
+  property("a checkpointed input is detected and ranks identically") =
     forAll(caseGen) { case (keys, k) =>
       import spark.implicits._
       val df = keys.zipWithIndex.map { case (key, id) => (id.toLong, key) }
@@ -44,12 +44,15 @@ object GlobalRankProps extends Properties("global-rank") {
       val order = Seq(col("key").asc, col("id").asc)
       val pinned = df.localCheckpoint() // caller-managed pin
       try {
-        val viaPinned = GlobalRank.ntileByRange(pinned, k, order, "bucket",
-          inputPinned = true)
+        val viaPinned = GlobalRank.ntileByRange(pinned, k, order, "bucket")
           .select("id", "bucket").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
         val viaDefault = GlobalRank.ntileByRange(df, k, order, "bucket")
           .select("id", "bucket").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-        viaPinned == viaDefault
+        // a local relation and an unpersisted RDD scan still get the
+        // defensive pin
+        val unpersisted = spark.createDataFrame(df.rdd, df.schema)
+        viaPinned == viaDefault && GlobalRank.pinnedRdd(pinned).isDefined &&
+          GlobalRank.pinnedRdd(df).isEmpty && GlobalRank.pinnedRdd(unpersisted).isEmpty
       } finally SparkEntry.releaseCaches(spark) // drop the per-iteration pin
     }
 

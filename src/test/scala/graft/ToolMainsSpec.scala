@@ -134,6 +134,32 @@ class ToolMainsSpec extends AnyFunSuite {
       s"hot-key caps or stamp filters outside ProbeFold: ${hits.mkString(", ")}")
   }
 
+  test("src/main reads the project-field dimension in one place: EtlCli.resolveConfig") {
+    // mustInit reads the dimension once and hands the resolved field
+    // and option ids to the migration; a second read is a second
+    // request per run and a second copy of the validation
+    val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
+    val comment = "^\\s*(?:\\*|/\\*|//)".r
+    val definition = "^\\s*(?:private\\S*\\s+)?def\\s+(\\w+)".r.unanchored
+    val reads = Files.walk(srcMain).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices
+          .filter(i => lines(i).contains("/project/fields") &&
+            comment.findFirstIn(lines(i)).isEmpty)
+          .map { i =>
+            // the def the line sits in: the nearest one above it
+            val enclosing = (i to 0 by -1).map(lines).collectFirst {
+              case definition(name) => name
+            }
+            s"${srcMain.relativize(p)}:${enclosing.getOrElse("?")}"
+          }
+      }
+    assert(reads === Seq("scala/graft/board/EtlCli.scala:resolveConfig"),
+      s"/project/fields named in: ${reads.sorted.mkString(", ")}")
+  }
+
   test("Bench times a filtered battery and its family subtotals sum to its total") {
     val dir = scratch("bench")
     val (exit, out) = runMain("graft.Bench", Seq.empty,
@@ -177,7 +203,7 @@ class ToolMainsSpec extends AnyFunSuite {
     // a new knob is a new mode to test and document: adding one means
     // adding it here, in the same change
     val pinned = Set(
-      "GITHUB_API_URL", "GITHUB_TOKEN", "GRAFT_API_FIELDS_DSV2", "SPARK_GRAFT_CPUS",
+      "GITHUB_API_URL", "GITHUB_TOKEN", "SPARK_GRAFT_CPUS",
       "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARM_DIR", "SPARK_MASTER")
     val srcMain = new File(sys.props.getOrElse("user.dir", "."), "src/main").toPath
     val read = "(?:sys\\.env(?:\\.\\w+)?|System\\.getenv)\\(\\s*(\"[^\"]*\")?".r
