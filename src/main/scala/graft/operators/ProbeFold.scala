@@ -46,7 +46,10 @@ object ProbeFold {
   /** A stream's micro-batch: ledger rows stamped `batchId` or later
     * are ignored and the survivors fold under `batchId`, so a replay
     * (foreachBatch is at-least-once) emits the same flags and rewrites
-    * the same delta. */
+    * the same delta. The stamp filter applies only on a replay (the log
+    * already folded `batchId`): below it no row carries such a stamp,
+    * and a steady batch's plan then holds no batch-id literal for
+    * codegen to compile anew. */
   final case class BatchStamp(batchId: Long) extends IdPolicy
 
   /** A redeliverable batch: the whole ledger bar each doc's own rows is
@@ -63,7 +66,8 @@ object ProbeFold {
       .groupBy(rows.columns.filter(_ != "doc_id").map(col): _*).agg(min("doc_id").as("doc_id"))))
       .filter(col("dup_of") < col("doc_id"))
     val flags = verify(vsLedger(log, keys, keysOf, ids, capHotKeys).unionByName(within), rows).localCheckpoint()
-    val unflagged = rows.join(flags.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+    // a flag set is bounded by its batch: broadcast it, duplicates and all
+    val unflagged = rows.join(broadcast(flags.select("doc_id")), Seq("doc_id"), "left_anti")
     ids match {
       case BatchStamp(batchId) => StateStore.append(log, unflagged, batchId, bucketCols)
       case DocIdGuard => StateStore.append(log, unflagged.join(log.rows.select("doc_id"), Seq("doc_id"),
@@ -92,8 +96,8 @@ object ProbeFold {
   private def vsLedger(log: StateStore.Log, keys: DataFrame, keysOf: DataFrame => DataFrame,
       ids: IdPolicy, capHotKeys: Boolean): DataFrame = {
     val ledger = keysOf(ids match {
-      case BatchStamp(batchId) => log.rows.filter(col(StateStore.Stamp) < batchId)
-      case DocIdGuard => log.rows
+      case BatchStamp(batchId) if log.newest >= batchId => log.rows.filter(col(StateStore.Stamp) < batchId)
+      case _ => log.rows
     })
     val cand = pairs(keys, if (capHotKeys) cappedBands(ledger, DefaultBandCap) else ledger)
     if (ids == DocIdGuard) cand.filter(col("doc_id") =!= col("dup_of")) else cand

@@ -1,9 +1,12 @@
 package graft.state
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** MERGE-style keyed state — the Spark-native replacement for the
   * reference's dom-storage/json-storage KV ledger (etl.js:14-19).
@@ -120,10 +123,12 @@ object StateStore {
   // ---------------------------------------------------------------
   // append-only ledgers ("logs"): a directory of `base/` plus one
   // `delta-<12-digit id>/` per append, each its own [[save]]
-  // generation, so an append writes O(delta) bytes. Loads read base
-  // plus only the deltas whose id EXCEEDS base's newest stamp, so a
-  // compaction cut between its base commit and its sweep leaves stale
-  // deltas that every load ignores (and deletes).
+  // generation, so an append writes O(delta) bytes, unshuffled (only
+  // base is bucketed, at compaction). Loads read base plus only the
+  // deltas whose id EXCEEDS base's newest stamp, which base's parquet
+  // footers record, as ONE scan whose plan keeps its shape however
+  // many deltas are live; a compaction cut between its base commit and
+  // its sweep leaves stale deltas that every load ignores (and deletes).
   // ---------------------------------------------------------------
 
   /** The stamp column of a log row: the id of the append that folded
@@ -184,30 +189,60 @@ object StateStore {
 
   /** Load a log written by [[append]], [[compact]] or [[refresh]] (or
     * a flat ledger [[save]]d at `path`, which moves into `base/`); an
-    * absent path is an empty log. One aggregation over base finds its
-    * newest stamp; the deltas' ids come from their names, since delta
-    * rows carry `Stamp == their directory id` by construction. Deltas
-    * at or below base's newest stamp are already in base: they are
-    * ignored and deleted. */
+    * absent path is an empty log. Base's newest stamp comes from its
+    * parquet footers ([[footerNewest]], no Spark job); the deltas' ids
+    * come from their names, since delta rows carry `Stamp == their
+    * directory id` by construction. Deltas at or below base's newest
+    * stamp are already in base: they are ignored and deleted. Base and
+    * the live deltas are read as one scan, so the plan, and the code
+    * whole-stage codegen generates for it, is the same whether 0 or 7
+    * deltas are live. */
   def loadLog(spark: SparkSession, path: String, schema: StructType): Log = {
     settle(spark, path)
     val full = if (schema.fieldNames.contains(Stamp)) schema else schema.add(Stamp, LongType)
-    val base = load(spark, basePath(path), full)
-    val baseNewest = base.agg(max(Stamp)).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
     val dir = new Path(path)
     val fs = fsOf(spark, dir)
+    val base = new Path(basePath(path))
+    if (recover(fs, base)) spark.catalog.refreshByPath(base.toString)
+    val hasBase = fs.exists(base)
+    val baseNewest = if (hasBase) footerNewest(spark, fs, base) else -1L
     val (stale, live) = deltaIds(fs, dir).partition(_ <= baseNewest)
     stale.foreach(id => fs.delete(new Path(deltaPath(path, id)), true))
-    val rows = live.map(id => load(spark, deltaPath(path, id), full))
-      .foldLeft(base)(_ unionByName _)
+    val paths = (if (hasBase) Seq(base.toString) else Nil) ++ live.map(deltaPath(path, _))
+    val rows = if (paths.isEmpty) load(spark, base.toString, full)
+      else spark.read.schema(full).parquet(paths: _*)
     Log(path, rows, math.max(baseNewest, live.lastOption.getOrElse(-1L)))
   }
 
+  /** The largest [[Stamp]] in the min/max statistics of `base`'s
+    * parquet footers, -1 when no row group holds a stamp (a file with
+    * no row groups, a flat ledger saved without the column). Spark's
+    * parquet writer records them for every INT64 column chunk; a chunk
+    * written without them falls back to one aggregation job. */
+  private def footerNewest(spark: SparkSession, fs: FileSystem, base: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stats = fs.listStatus(base).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == Stamp).map(_.getStatistics))
+        finally reader.close()
+      }
+    if (stats.exists(_.isEmpty))
+      spark.read.schema(s"$Stamp BIGINT").parquet(base.toString).agg(max(Stamp)).head() match {
+        case r if r.isNullAt(0) => -1L
+        case r => r.getLong(0)
+      }
+    else stats.filter(_.hasNonNullValue).map(_.genericGetMax match {
+      case n: java.lang.Number => n.longValue
+    }).foldLeft(-1L)(math.max)
+  }
+
   /** Fold `delta`, stamped `id`, into `log` as its own `delta-<id>`
-    * generation; every [[CompactEvery]] deltas the log is [[compact]]ed.
+    * generation, written as `delta` is partitioned (a batch-sized
+    * write gains nothing from a shuffle); every [[CompactEvery]] deltas
+    * the log is [[compact]]ed, which buckets base by `bucketCols`.
     * A stream fold appends under its batch id: an id EQUAL to the
     * newest fold is a replay and overwrites its own delta with the same
     * rows, an id BELOW it (a stream restarted with a fresh checkpoint
@@ -220,26 +255,28 @@ object StateStore {
         s"but this append is at $id — restarted with a fresh checkpoint? " +
         "Reuse the original checkpoint or rebuild the ledger.")
     val spark = delta.sparkSession
-    save(delta.withColumn(Stamp, lit(id)), deltaPath(log.path, id), bucketCols)
+    save(delta.withColumn(Stamp, lit(id)), deltaPath(log.path, id))
     if (deltaIds(fsOf(spark, new Path(log.path)), new Path(log.path)).size >= CompactEvery)
       compact(spark, log.path, log.rows.schema, bucketCols)
   }
 
-  /** Fold a log's deltas into base (the amortized O(ledger) write),
-    * then sweep the absorbed deltas. The sweep set is the delta ids
-    * snapshotted before the fold, not a stamp comparison, which would
-    * never sweep an EMPTY delta (an append with no rows) and let
-    * trailing empties trip a compaction on every append. Safe at any
-    * moment: a crash after the base commit leaves deltas whose rows
-    * base already holds, which loads ignore by stamp. */
+  /** Fold a log's deltas into base (the amortized O(ledger) write,
+    * bucketed by `bucketCols`), then sweep the absorbed deltas. The
+    * sweep set is the delta ids snapshotted before the fold, not a
+    * stamp comparison, which would never sweep an EMPTY delta (an
+    * append with no rows) and let trailing empties trip a compaction on
+    * every append. The loaded log is saved unpinned: [[save]] writes
+    * the whole new base into its `.tmp-*` generation before it touches
+    * the base the scan reads. Safe at any moment: a crash after the
+    * base commit leaves deltas whose rows base already holds, which
+    * loads ignore by stamp. */
   def compact(spark: SparkSession, path: String, schema: StructType,
       bucketCols: Seq[String] = Nil): Unit = {
     val dir = new Path(path)
     val fs = fsOf(spark, dir)
     val ids = deltaIds(fs, dir) // snapshot BEFORE the fold
     if (ids.isEmpty) return
-    val all = loadLog(spark, path, schema).rows.localCheckpoint()
-    save(all, basePath(path), bucketCols)
+    save(loadLog(spark, path, schema).rows, basePath(path), bucketCols)
     ids.foreach(id => fs.delete(new Path(deltaPath(path, id)), true))
   }
 

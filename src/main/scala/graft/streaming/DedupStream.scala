@@ -21,10 +21,14 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * when not).
   *
   * Scale: the stream side only ever hashes its own micro-batch; the
-  * corpus index is loaded once per batch from its (checkpointed /
-  * parquet) form. This is the ingest-time flavor of q102's
-  * batch flow — flag an arriving doc the moment a band collides, defer
-  * the exact Jaccard verify to the batch pass if needed.
+  * static corpus index is re-planned per batch from its (checkpointed /
+  * parquet) form, and the self-maintaining index of [[processBatch]]
+  * is read per batch as one scan of its log's base and live deltas,
+  * whose plan keeps its shape as the log grows: a steady batch
+  * compiles only its delta's stamp literal anew. This is the
+  * ingest-time flavor of q102's batch flow — flag an arriving doc the
+  * moment a band collides, defer the exact Jaccard verify to the
+  * batch pass if needed.
   */
 object DedupStream {
 
@@ -161,10 +165,10 @@ object DedupStream {
     *
     * EXACTLY-ONCE under foreachBatch's at-least-once replay, without a
     * side channel ([[ProbeFold.BatchStamp]]): rows folded by batch N
-    * carry `added_batch = N`, and both the probe and the fold ignore
-    * ledger rows stamped `batchId` or later, so a replayed batch
-    * probes the identical pre-fold index and re-derives the identical
-    * fold.
+    * carry `added_batch = N`, and on a replay both the probe and the
+    * fold ignore ledger rows stamped `batchId` or later, so a replayed
+    * batch probes the identical pre-fold index and re-derives the
+    * identical fold.
     *
     * Scale: the stream side hashes only its own micro-batch, and the
     * index is a [[StateStore.loadLog log]]: each batch appends only its

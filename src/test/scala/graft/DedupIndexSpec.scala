@@ -134,10 +134,10 @@ class DedupIndexSpec extends SparkSpecBase {
       val delivery = (docs.slice(30, 40).toSeq :+
         (id + Ids.VariantOffset, text.substring(text.indexOf(' ') + 1).trim))
         .toDF("doc_id", "text")
-      // 20 jobs, the same on every run; a change may lower the budget,
+      // 16 jobs, the same on every run; a change may lower the budget,
       // never raise it
       val jobs = jobsIn(DedupIndex.ingest(spark, delivery, p))
-      assert(jobs <= 20, s"ingest ran $jobs Spark jobs")
+      assert(jobs <= 16, s"ingest ran $jobs Spark jobs")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -334,6 +334,41 @@ class DedupStreamSpec extends SparkSpecBase {
     }
   }
 
+  test("replaying the batch whose append compacted the index re-emits identical flags " +
+      "and leaves the index identical (its rows are then in base, stamped its id)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-replay-compact").toString
+    try {
+      val (orig, vars) = twinDocs(40)
+      val path = s"$dir/bands"
+      val batches = orig.grouped(5).toSeq
+      assert(batches.size == StateStore.CompactEvery)
+      batches.init.zipWithIndex.foreach { case (g, i) =>
+        DedupStream.processBatch(spark, toDf(g), path, i.toLong).count()
+      }
+      // the last batch: fresh docs that survive plus twins of batch 0's
+      val last = toDf(batches.last ++ vars.filter(_._1 - Ids.VariantOffset <= batches.head.last._1))
+      val lastId = StateStore.CompactEvery - 1L
+      def deltaDirs() = new java.io.File(path).listFiles()
+        .map(_.getName).filter(_.matches("^delta-\\d{12}$")).toSeq
+      def ledgerRows() = DedupStream.loadIndex(spark, path)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+      def flagsOf(f: DataFrame) = f.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+      val flagsA = flagsOf(DedupStream.processBatch(spark, last, path, lastId))
+      val ledgerA = ledgerRows()
+      // the append compacted: every row, this batch's survivors too, is in base
+      assert(deltaDirs().isEmpty, deltaDirs().mkString(","))
+      assert(ledgerA.exists(_._3 == lastId) && ledgerA.map(_._3).max == lastId)
+      assert(flagsA.exists { case (v, o, _) => o == v - Ids.VariantOffset })
+      // the replay must not probe the survivors it folded itself
+      val flagsB = flagsOf(DedupStream.processBatch(spark, last, path, lastId))
+      assert(flagsB == flagsA)
+      assert(ledgerRows() == ledgerA)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
   test("a fresh-checkpoint restart against an accumulated index fails loud, not wipes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-guard").toString
     try {
@@ -416,10 +451,38 @@ class DedupStreamSpec extends SparkSpecBase {
       val path = s"$dir/bands"
       DedupStream.processBatch(spark, toDf(orig), path, 0L).count()
       val batch = toDf(vars)
-      // 10 jobs, the same on every run; a change may lower the budget,
+      // 7 jobs, the same on every run; a change may lower the budget,
       // never raise it
       val jobs = jobsIn(DedupStream.processBatch(spark, batch, path, 1L))
-      assert(jobs <= 10, s"processBatch ran $jobs Spark jobs")
+      assert(jobs <= 7, s"processBatch ran $jobs Spark jobs")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      SparkEntry.releaseCaches(spark)
+    }
+  }
+
+  test("a steady micro-batch compiles (almost) no new code: the log scan keeps its plan " +
+      "shape and no replay filter carries the batch id") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream-codegen").toString
+    try {
+      val (orig, _) = twinDocs(40)
+      val path = s"$dir/bands"
+      val batches = orig.grouped(10).toSeq
+      def compiledBy(i: Int) = {
+        val before = METRIC_COMPILATION_TIME.getCount
+        DedupStream.processBatch(spark, toDf(batches(i)), path, i.toLong).collect()
+        METRIC_COMPILATION_TIME.getCount - before
+      }
+      // warm-up: the empty log's plan, then the first file scan's
+      compiledBy(0)
+      compiledBy(1)
+      // 2 compilations, the delta write's stamp literal; the fewer of two
+      // steady folds, since adaptive execution now and then re-plans a
+      // stage into a variant the codegen cache lacks (8-10 classes).
+      // A change may lower the budget, never raise it
+      val compiled = Seq(2, 3).map(compiledBy).min
+      assert(compiled <= 2, s"a steady processBatch compiled $compiled classes")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       SparkEntry.releaseCaches(spark)

@@ -208,6 +208,32 @@ object StateStoreProps extends Properties("state-store-durability") {
       } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
 
+  property("a compaction cut at every step of its base swap, saving the unpinned log " +
+      "over the base it scans, loads every committed row exactly once") =
+    org.scalacheck.Prop.secure(swapCuts.zipWithIndex.forall { case (crash, gen) =>
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft-ssp-compact").toString
+      val path = s"$dir/log"
+      try {
+        // a base of ids 0..2 plus deltas 1..5, every third one empty
+        StateStore.refresh(appendRows(2).toDF("v"), path)
+        (1L to 5L).foreach(id =>
+          StateStore.append(StateStore.loadLog(spark, path, logSchema), appendRows(id).toDF("v"), id))
+        val committed = appendRows(2) ++ (1L to 5L).flatMap(appendRows)
+        crash match {
+          case Clean => StateStore.compact(spark, path, logSchema)
+          case _ => cutSwap(s"$path/base", gen, crash,
+            d => StateStore.loadLog(spark, path, logSchema).rows.write.parquet(d))
+        }
+        val log = StateStore.loadLog(spark, path, logSchema)
+        val names = new java.io.File(path).listFiles().map(_.getName).toSeq
+        // a committed base covers every delta: the load swept them all
+        log.rows.collect().map(_.getLong(0)).sorted.toSeq == committed.sorted && log.newest == 5L &&
+          names.exists(_.startsWith("delta-")) == (crash == BeforeWrite) &&
+          !names.exists(n => n.contains(".tmp-") || n.contains(".old-"))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    })
+
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(10)
 }

@@ -255,4 +255,51 @@ class StateStoreSpec extends SparkSpecBase {
         Seq("e1", "e2"))
     }
   }
+
+  test("loadLog reads base and every live delta as one file scan: one relation " +
+      "with 0, 1 and 7 live deltas, none for an empty log") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    withLedgerDir { dir =>
+      val schema = StructType(Seq(StructField("entity_id", StringType)))
+      val path = s"$dir/log"
+      def scans(log: StateStore.Log) =
+        log.rows.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r }.size
+      assert(scans(StateStore.loadLog(spark, path, schema)) == 0)
+      StateStore.refresh(Seq("b1", "b2").toDF("entity_id"), path)
+      (0 to 7).foreach { id =>
+        val log = StateStore.loadLog(spark, path, schema)
+        assert(log.newest == id.toLong)
+        if (Set(0, 1, 7)(id)) assert(scans(log) == 1, s"$id live deltas:\n${log.rows.queryExecution.optimizedPlan}")
+        assert(log.rows.count() == 2 + 3 * id)
+        if (id < 7) StateStore.append(log, Seq("x", "y", "z").map(v => s"$v${id + 1}").toDF("entity_id"), id + 1L)
+      }
+    }
+  }
+
+  test("loadLog finds base's newest stamp in its parquet footers, without a Spark job") {
+    withLedgerDir { dir =>
+      val schema = StructType(Seq(StructField("entity_id", StringType)))
+      def newestOf(path: String) = {
+        var log: StateStore.Log = null
+        assert(jobsIn { log = StateStore.loadLog(spark, path, schema) } == 0)
+        log.newest
+      }
+      // a compacted base holds stamps 0..3 over several files
+      val path = s"$dir/log"
+      (0L to 3L).foreach(id => StateStore.append(StateStore.loadLog(spark, path, schema),
+        Seq(s"e$id", s"f$id").toDF("entity_id"), id))
+      StateStore.compact(spark, path, schema, Seq("entity_id"))
+      assert(!new java.io.File(f"$path/delta-${3L}%012d").exists())
+      assert(newestOf(path) == 3L)
+      // a base of files with no row groups holds no stamp
+      val empty = s"$dir/empty"
+      StateStore.refresh(Seq.empty[String].toDF("entity_id"), empty)
+      assert(newestOf(empty) == -1L)
+      // a flat ledger saved without the stamp column holds none either
+      val flat = s"$dir/flat"
+      StateStore.save(Seq("a", "b").toDF("entity_id"), flat)
+      assert(newestOf(flat) == -1L)
+      assert(StateStore.loadLog(spark, flat, schema).rows.count() == 2)
+    }
+  }
 }
