@@ -323,11 +323,10 @@ object DedupQueries {
 
   // -- q113 simhash-pair geometry: 64 signature bits carved from the
   //    first 16 hex chars of each token's md5 (4 bits per char), carried
-  //    as 4 × 16-bit block ints. HammingMax = SimhashBlocks - 1 is the
-  //    pigeonhole-complete regime: every qualifying pair shares a block.
+  //    as 4 × 16-bit block ints h0..h3, [[ProbeFold]]'s Hamming block
+  //    probe shape.
   private[graft] val SimhashBits = 64
   private[graft] val SimhashBlocks = 4
-  private[graft] val SimhashHammingMax = SimhashBlocks - 1
 
   /** Hex chars whose nibble has bit `j` set — ONE definition feeding
     * both the Spark when() chains and the oracle's CASE lists, so the
@@ -348,24 +347,15 @@ object DedupQueries {
     (half, (8 - charInHalf) * 4 + i % 4)
   }
 
-  /** sim0..sim3 INT block columns folded from per-bit sign columns
+  /** h0..h3 INT block columns folded from per-bit sign columns
     * b0..b63 — shared by both signature formulations. */
   private def simhashBlockCols: Seq[org.apache.spark.sql.Column] =
     (0 until SimhashBlocks).map { k =>
       (0 until 16).map(p => when(col(s"b${16 * k + p}") > 0, lit(1 << p)).otherwise(lit(0)))
-        .reduce(_ + _).cast("int").as(s"sim$k")
+        .reduce(_ + _).cast("int").as(s"h$k")
     }
 
-  /** Explode a (doc_id, sim0..sim3) signature frame into block-key rows
-    * `(doc_id, sim0..sim3, bk)` — the signature rides the exploded rows
-    * so the Hamming verify never joins back to the index. */
-  private[graft] def withBlockKeys(sims: DataFrame): DataFrame =
-    sims.select(col("doc_id") +:
-      (0 until SimhashBlocks).map(k => col(s"sim$k")) :+
-      explode(array((0 until SimhashBlocks).map(k =>
-        concat(lit(s"$k:"), col(s"sim$k"))): _*)).as("bk"): _*)
-
-  /** (doc_id, sim0..sim3) 64-bit simhash signature frame: one
+  /** (doc_id, h0..h3) 64-bit simhash signature frame: one
     * token-explode aggregation (64 sums fused in one partial-agg pass),
     * then each 16-bit block folded into an INT.
     *
@@ -394,7 +384,7 @@ object DedupQueries {
       .select(col("doc_id") +: simhashBlockCols: _*)
   }
 
-  /** Per-row SimHash block keys for any (doc_id, text) frame — the SAME
+  /** Per-row SimHash signatures (doc_id, h0..h3) of any (doc_id, text) frame — the SAME
     * 64-bit signature family as [[simhashBlockFrame]] (identical
     * [[simhashBitPos]] bit table, identical block fold), but expressed
     * as stateless per-row columns: the token digests become in-row
@@ -413,7 +403,7 @@ object DedupQueries {
       expr(s"aggregate(${half}s, 0L, (a, x) -> a + cast((x >> $pos) & 1L as int) * 2 - 1)")
         .as(s"b$i")
     }
-    val sigs = docs
+    docs
       .withColumn("hs", expr("transform(split(trim(text), '\\\\s+'), t -> md5(t))"))
       .withColumn("us",
         expr("transform(hs, h -> cast(conv(substring(h, 1, 8), 16, 10) as bigint))"))
@@ -421,7 +411,6 @@ object DedupQueries {
         expr("transform(hs, h -> cast(conv(substring(h, 9, 8), 16, 10) as bigint))"))
       .select(col("doc_id") +: bitCols: _*)
       .select(col("doc_id") +: simhashBlockCols: _*)
-    withBlockKeys(sigs)
   }
 
   /** [[oracleBandsCte]] parameterized over the corpus SELECT — one
@@ -1109,26 +1098,12 @@ object DedupQueries {
     //      and identical everywhere.
     QueryDef(
       "q113_simhash_hamming_pairs",
-      (s, d) => {
-        // The signature rides ALONG the exploded block rows (4 extra
-        // ints ≈ the block key's own width), so the verify runs inline
-        // on the join output — no join-back to the signature index, and
-        // the dedup DISTINCT only sees hamming-qualified pairs instead
-        // of every block collision (~1% of collisions at sf0.1).
-        val sims = simhashBlockFrame(variantCorpus(s, d)).localCheckpoint()
-        val blocks = withBlockKeys(sims)
-        def side(tag: String) = blocks.select(col("bk") +:
-          (col("doc_id").as(s"doc_$tag") +:
-            (0 until SimhashBlocks).map(k => col(s"sim$k").as(s"${tag}_sim$k"))): _*)
-        side("a").join(side("b"), Seq("bk"))
-          .filter(col("doc_a") < col("doc_b"))
-          .withColumn("hamming", expr((0 until SimhashBlocks)
-            .map(k => s"bit_count(a_sim$k ^ b_sim$k)").mkString(" + ")).cast("int"))
-          .filter(col("hamming") <= SimhashHammingMax)
-          .select("doc_a", "doc_b", "hamming")
-          .distinct()
-          .orderBy("doc_a", "doc_b")
-      },
+      // The signature rides ALONG the block rows ([[ProbeFold.blockKeys]],
+      // 4 extra ints ≈ the block key's own width), so the verify runs
+      // inline on the join output — no join-back to the signature index,
+      // and the dedup DISTINCT only sees hamming-qualified pairs instead
+      // of every block collision (~1% of collisions at sf0.1).
+      (s, d) => ProbeFold.hammingPairs(simhashBlockFrame(variantCorpus(s, d)).localCheckpoint()),
       Some {
         val sums = (0 until SimhashBits).map(i =>
           s"sum(CASE WHEN substr(h, ${i / 4 + 1}, 1) IN (${
@@ -1154,9 +1129,9 @@ object DedupQueries {
         ham AS (SELECT doc_a, doc_b, CAST($ham AS INT) AS hamming
           FROM cand JOIN sim sa ON doc_a = sa.doc_id JOIN sim sb ON doc_b = sb.doc_id)
         SELECT doc_a, doc_b, hamming FROM ham
-        WHERE hamming <= $SimhashHammingMax ORDER BY doc_a, doc_b"""
+        WHERE hamming <= ${ProbeFold.HammingMax} ORDER BY doc_a, doc_b"""
       },
-      doc = "complete simhash Hamming<=3 pair mining: pigeonhole block equi-joins + exact bit_count(xor) verify"),
+      doc = "complete simhash Hamming<=3 pair mining: pigeonhole block equi-joins + exact xor popcount verify"),
 
     // ---- SimHash: 16-bit signature from per-token md5 nibble high-bits
     QueryDef(

@@ -15,21 +15,24 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * One ledger row is (doc_id, modality, h0..h3): 8 hash bytes + a tag
   * per item, whatever the payload size — the ledger for a billion-item
   * media corpus is gigabytes where the corpus is petabytes, which is
-  * the entire economics of fingerprint dedup. Writes go through
-  * [[StateStore]]'s crash-atomic generation protocol, same as the text
-  * index (tmp write → `_SUCCESS` → rename swap): a torn refresh can
-  * never mix generations.
+  * the entire economics of fingerprint dedup. The ledger is a
+  * [[StateStore.loadLog log]] like [[DedupIndex]]'s, rebuilt by one
+  * crash-atomic [[StateStore.refresh]] (a torn refresh can never mix
+  * generations). It stays apart from [[graft.streaming.MediaDedupStream]]'s
+  * `media_stream_index`: a refreshed base is stamped 0, which a
+  * stream's batch 0 would read as its own replay and ignore.
   *
   * Matching is modality-KEYED: image dHashes and audio energy contours
   * live in the same 64-bit space, so a cross-modality block collision
-  * is meaningless noise — the join key (modality, block_idx, block)
-  * excludes it structurally instead of filtering it after the fact.
+  * is meaningless noise — the block key carries `modality`
+  * ([[ProbeFold.blockKeys]]) and excludes it structurally instead of
+  * filtering it after the fact.
   *
   * Scale: batch decode is a narrow map (pixels/samples die there, 8
-  * bytes/item shuffle); candidates come from the q113/q127 pigeonhole
-  * (Hamming ≤ 3 over 4 × 16-bit blocks ⟹ ≥ 1 equal block — provably
-  * complete); the best-match window partitions by new_id (per-item
-  * groups, never global). Corpus payloads are NEVER re-decoded.
+  * bytes/item shuffle); candidates come from [[ProbeFold]]'s Hamming
+  * block probe (provably complete, so no key is capped); the best-match
+  * window partitions by new_id (per-item groups, never global). Corpus
+  * payloads are NEVER re-decoded.
   */
 object MediaDedupIndex {
 
@@ -62,36 +65,23 @@ object MediaDedupIndex {
 
   /** Build (or atomically refresh) the ledger from a media corpus. */
   def build(spark: SparkSession, corpus: DataFrame, dir: String): Unit =
-    StateStore.save(fingerprints(spark, corpus), indexPath(dir),
-      bucketCols = Seq("doc_id"))
+    StateStore.refresh(fingerprints(spark, corpus), indexPath(dir), Seq("doc_id"))
 
-  /** Pigeonhole candidate keys of fingerprint rows: one row per 16-bit
-    * block, `(doc_id, band, h0..h3)` with the block's `(modality, k,
-    * bv)` packed into `band`, so two items are candidates iff they share
-    * a block at the same position within one modality. */
-  private[graft] def blockKeys(rows: DataFrame): DataFrame =
-    rows.selectExpr("*", "posexplode(array(h0, h1, h2, h3)) AS (k, bv)")
-      .selectExpr("doc_id", "struct(modality, k, bv) AS band", "h0", "h1", "h2", "h3")
-
-  /** The exact Hamming gate over [[ProbeFold.pairs]] candidate rows of
-    * [[blockKeys]]: `h0..h3` against the survivor's `dup_h0..dup_h3`,
-    * kept at ≤ `maxHamming` as (doc_id, modality, dup_of, hamming). */
-  private[graft] def verified(cand: DataFrame, maxHamming: Int): DataFrame =
-    cand.selectExpr("doc_id", "band.modality", "dup_of", (0 until 4)
-        .map(i => s"bit_count(h$i ^ dup_h$i)").mkString("CAST(", " + ", " AS INT) AS hamming"))
-      .filter(col("hamming") <= maxHamming)
+  /** The media probe's keys — fingerprint blocks within modality — and
+    * its verify, the exact Hamming gate as (doc_id, modality, dup_of,
+    * hamming); [[graft.streaming.MediaDedupStream]] probes the same. */
+  private[graft] val keysOf: DataFrame => DataFrame = ProbeFold.blockKeys("modality")
+  private[graft] def verify(cand: DataFrame, rows: DataFrame): DataFrame =
+    ProbeFold.withinHamming(cand, col("doc_id"), col("band.modality"), col("dup_of"))
 
   /** Dedup an incoming (doc_id, payload) media batch against the
-    * persisted ledger: decode the batch only, pigeonhole block
-    * candidates within modality ([[blockKeys]], uncapped: q137's oracle
-    * is the exact pair set), exact Hamming ≤ `maxHamming` verify
-    * inline, best corpus match per new item (lowest hamming, min-id
+    * persisted ledger: decode the batch only, [[ProbeFold.probe]] the
+    * ledger under [[ProbeFold.DocIdGuard]] (a doc never matches its own
+    * ledger rows) with every key kept (q137's oracle is the exact pair
+    * set), best corpus match per new item (lowest hamming, min-id
     * tiebreak). Output: (new_id, modality, dup_of, hamming). */
-  def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String,
-      maxHamming: Int = 3): DataFrame = {
-    val ledger = StateStore.load(spark, indexPath(dir), indexSchema)
-    val bf = fingerprints(spark, batch).localCheckpoint()
-    ProbeFold.bestMatch(verified(ProbeFold.pairs(blockKeys(bf), blockKeys(ledger)), maxHamming)
-      .distinct(), col("hamming").asc).withColumnRenamed("doc_id", "new_id")
-  }
+  def dedupBatch(spark: SparkSession, batch: DataFrame, dir: String): DataFrame =
+    ProbeFold.bestMatch(ProbeFold.probe(StateStore.loadLog(spark, indexPath(dir), indexSchema),
+      fingerprints(spark, batch).localCheckpoint(), keysOf, ProbeFold.DocIdGuard, capHotKeys = false)(verify),
+      col("hamming").asc).withColumnRenamed("doc_id", "new_id")
 }

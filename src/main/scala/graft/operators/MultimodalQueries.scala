@@ -435,23 +435,6 @@ object MultimodalQueries {
     spark.createDataFrame(rdd, schema)
   }
 
-  private val dhashSchema = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("h0", IntegerType, nullable = false),
-    StructField("h1", IntegerType, nullable = false),
-    StructField("h2", IntegerType, nullable = false),
-    StructField("h3", IntegerType, nullable = false)))
-
-  /** Per-partition decode→hash: payload bytes in, 4 block ints out —
-    * the narrow map where pixels die; only 8 bytes/image shuffle. */
-  def dhashFrame(spark: SparkSession, corpus: DataFrame): DataFrame = {
-    val rdd = corpus.select("doc_id", "payload").rdd.mapPartitions(_.map { r =>
-      val b = bmpDHashBlocks(r.getAs[Array[Byte]]("payload"))
-      Row(r.getLong(0), b(0), b(1), b(2), b(3))
-    })
-    spark.createDataFrame(rdd, dhashSchema)
-  }
-
   // ---------------------------------------------------------------
   // audio fingerprinting: energy-contour hash over PCM (q131)
   // ---------------------------------------------------------------
@@ -517,38 +500,6 @@ object MultimodalQueries {
       Seq(Row(id, orig), Row(id + Ids.VariantOffset, twin))
     })
     spark.createDataFrame(rdd, schema)
-  }
-
-  /** Per-partition decode→fingerprint: PCM bytes in, 4 block ints out —
-    * samples die in the map; only 8 bytes/clip shuffle. */
-  def audioFingerprintFrame(spark: SparkSession, corpus: DataFrame): DataFrame = {
-    val rdd = corpus.select("doc_id", "payload").rdd.mapPartitions(_.map { r =>
-      val b = wavFingerprintBlocks(r.getAs[Array[Byte]]("payload"))
-      Row(r.getLong(0), b(0), b(1), b(2), b(3))
-    })
-    spark.createDataFrame(rdd, dhashSchema)
-  }
-
-  /** Pigeonhole near-dup pair mining over 4 × 16-bit hash blocks
-    * (q113's argument: Hamming ≤ 3 over 4 blocks ⟹ ≥ 1 block equal,
-    * so block-value equi self-joins are provably complete — never
-    * all-pairs). Exact bit_count verify inline on the ride-along
-    * signature; shared by q127 (image dHash) and q131 (audio
-    * energy contour). */
-  private[operators] def blockHammingPairs(hashed: DataFrame, maxHamming: Int): DataFrame = {
-    val sides = hashed.select(col("doc_id"), col("h0"), col("h1"), col("h2"), col("h3"),
-      posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("k", "bv")))
-    val a = sides.select(col("k"), col("bv"), col("doc_id").as("doc_a"),
-      col("h0").as("a0"), col("h1").as("a1"), col("h2").as("a2"), col("h3").as("a3"))
-    val b = sides.select(col("k"), col("bv"), col("doc_id").as("doc_b"),
-      col("h0").as("b0"), col("h1").as("b1"), col("h2").as("b2"), col("h3").as("b3"))
-    a.join(b, Seq("k", "bv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr(
-        "CAST(bit_count(a0 ^ b0) + bit_count(a1 ^ b1) + bit_count(a2 ^ b2) + bit_count(a3 ^ b3) AS INT)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming").distinct()
-      .orderBy("doc_a", "doc_b")
   }
 
   // ---------------------------------------------------------------
@@ -968,10 +919,11 @@ object MultimodalQueries {
 
     // ---- perceptual-hash image dedup: q101's real BMP decode meets
     //      q113's pigeonhole pair mining. dHash blocks from DECODED
-    //      pixel bytes; candidates from block-value equi self-joins
-    //      (hamming ≤ 3 over 4 blocks ⟹ ≥ 1 equal block — provably
-    //      complete, never all-pairs); exact bit_count verify inline
-    //      on the ride-along signature (no join-back). The oracle
+    //      pixel bytes (MediaDedupIndex.fingerprints, the media
+    //      tier's one decoder); candidates and the exact Hamming
+    //      verify are ProbeFold.hammingPairs' block self-join keyed
+    //      within modality — provably complete, never all-pairs, the
+    //      verify inline on the ride-along signature. The oracle
     //      recomputes the hash from the synthesis formula and may use
     //      all-pairs (oracle-side only): pigeonhole completeness means
     //      the result sets are identical.
@@ -981,24 +933,23 @@ object MultimodalQueries {
     //      more/permuted blocks — same plan shape, q113's remedy.
     QueryDef(
       "q127_image_phash_dedup",
-      (s, d) => blockHammingPairs(
-        dhashFrame(s,
-          imageCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), 3),
+      (s, d) => ProbeFold.hammingPairs(MediaDedupIndex.fingerprints(s,
+        imageCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), "modality"),
       Some(q127OracleSql),
       doc = "perceptual-hash image dedup: grid dHash over decoded BMP pixels, pigeonhole block join, exact Hamming ≤ 3 pairs"),
 
     // ---- audio fingerprint dedup: the WAV twin of q127. PCM samples
     //      decode to a 64-bit energy-contour fingerprint per clip
-    //      (exact-integer window energies, sign-of-derivative bits);
-    //      near-dup pairs via the same pigeonhole block join.
+    //      (exact-integer window energies, sign-of-derivative bits),
+    //      decoded by the same MediaDedupIndex.fingerprints; near-dup
+    //      pairs via the same ProbeFold.hammingPairs block join.
     //      Scale: samples die in the decode map — 8 bytes/clip
     //      shuffle; candidates are block-value equi-joins, provably
     //      complete for Hamming ≤ 3, never all-pairs.
     QueryDef(
       "q131_audio_fingerprint_dedup",
-      (s, d) => blockHammingPairs(
-        audioFingerprintFrame(s,
-          audioCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), 3),
+      (s, d) => ProbeFold.hammingPairs(MediaDedupIndex.fingerprints(s,
+        audioCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), "modality"),
       Some(q131OracleSql),
       doc = "audio fingerprint dedup: 65-window PCM energy contour → 64-bit fingerprint, pigeonhole block join, exact Hamming ≤ 3 pairs"),
 
@@ -1029,12 +980,10 @@ object MultimodalQueries {
     QueryDef(
       "q136_media_dedup_clusters",
       (s, d) => {
-        val img = blockHammingPairs(dhashFrame(s,
-          imageCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), 3)
-          .select("doc_a", "doc_b")
-        val aud = blockHammingPairs(audioFingerprintFrame(s,
-          audioCorpusWithTwins(Tables.documents(s, d))).localCheckpoint(), 3)
-          .select("doc_a", "doc_b")
+        def pairsOf(media: DataFrame) = ProbeFold.hammingPairs(
+          MediaDedupIndex.fingerprints(s, media).localCheckpoint(), "modality").select("doc_a", "doc_b")
+        val img = pairsOf(imageCorpusWithTwins(Tables.documents(s, d)))
+        val aud = pairsOf(audioCorpusWithTwins(Tables.documents(s, d)))
         val vid = videoMatchPairs(s, d)
           .filter(col("n_matched") * 2 >= col("n_frames_a") + col("n_frames_b"))
           .select("doc_a", "doc_b")

@@ -31,13 +31,27 @@ import org.apache.spark.sql.functions._
   *    (round 15) let the crowd fold whole and hid it from every later
   *    probe. The cap is over the ledger the [[IdPolicy]] lets the probe
   *    read, so a replay keeps the same set.
-  *  - not `capHotKeys`, for a complete candidate search (the media
-  *    pigeonhole: Hamming ≤ 3 over 4 blocks ⟹ one equal block, which
-  *    may be a hot one such as a flat image quarter): every key is
-  *    kept, and only batch rows equal but for `doc_id` collapse to their
-  *    min id — the same flagged ids, with linear fan-out.
+  *  - not `capHotKeys`, for a complete candidate search (the Hamming
+  *    block probe below, whose one equal block may be a hot one such as
+  *    a flat image quarter): every key is kept, and only batch rows
+  *    equal but for `doc_id` collapse to their min id — the same
+  *    flagged ids, with linear fan-out.
+  *
+  * The Hamming block probe, every 64-bit near-duplicate search's keys
+  * and verify (simhash q113 and its stream twin, image q127, audio
+  * q131, q136, the media index and stream): a signature is 4 × 16-bit
+  * blocks `h0..h3`, and two signatures within [[HammingMax]] = blocks −
+  * 1 bits agree on at least one whole block (Manku/Charikar
+  * pigeonhole), so [[blockKeys]]' equi-join on one block is a complete
+  * candidate set and [[withinHamming]] the exact verify. A larger bound
+  * would make the block join silently incomplete, so there is none.
   */
 object ProbeFold {
+
+  /** A signature's 16-bit block columns, and the widest Hamming
+    * distance the one-block join finds every pair within: blocks − 1. */
+  private val BlockCols = (0 until 4).map(i => s"h$i")
+  val HammingMax: Int = BlockCols.size - 1
 
   /** What the probe may read of the ledger and under which id the
     * survivors fold. */
@@ -86,6 +100,31 @@ object ProbeFold {
   private[graft] def pairs(keys: DataFrame, survivorKeys: DataFrame): DataFrame =
     keys.join(survivorKeys.toDF(survivorKeys.columns.toSeq.map(c =>
       if (c == "band") c else if (c == "doc_id") "dup_of" else s"dup_$c"): _*), Seq("band"))
+
+  /** Pigeonhole keys of signature rows `(doc_id, h0..h3, tags…)`: one
+    * row per block, `(doc_id, band, h0..h3)` with `band = struct(tags…,
+    * k, bv)`, block `k` of value `bv`, so two rows are candidates iff
+    * they share a block at the same position (within equal tags — the
+    * media `modality`). Any other column (a ledger stamp) stays out. */
+  private[graft] def blockKeys(tags: String*)(rows: DataFrame): DataFrame =
+    rows.selectExpr("*", s"posexplode(array(${BlockCols.mkString(", ")})) AS (k, bv)")
+      .selectExpr("doc_id" +: s"struct(${(tags :+ "k" :+ "bv").mkString(", ")}) AS band" +: BlockCols: _*)
+
+  /** The exact Hamming gate over [[pairs]] rows of [[blockKeys]]: `keep`
+    * and `hamming`, the bits `h0..h3` differ from the survivor's
+    * `dup_h0..dup_h3` in, kept at ≤ [[HammingMax]]. */
+  private[graft] def withinHamming(cand: DataFrame, keep: Column*): DataFrame =
+    cand.select(keep :+ expr(BlockCols.map(h => s"bit_count($h ^ dup_$h)")
+        .mkString("CAST(", " + ", " AS INT)")).as("hamming"): _*)
+      .filter(col("hamming") <= HammingMax)
+
+  /** Every pair of signature rows within [[HammingMax]], once each as
+    * `(doc_a < doc_b, hamming)`, ordered: the block self-join. */
+  private[graft] def hammingPairs(sigs: DataFrame, tags: String*): DataFrame = {
+    val keys = blockKeys(tags: _*)(sigs)
+    withinHamming(pairs(keys, keys).filter(col("doc_id") < col("dup_of")),
+      col("doc_id").as("doc_a"), col("dup_of").as("doc_b")).distinct().orderBy("doc_a", "doc_b")
+  }
 
   /** The best flag per batch doc — first by `order`, then the lowest
     * `dup_of` — ordered by doc_id: the index lookups' match rule. */

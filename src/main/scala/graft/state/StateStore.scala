@@ -84,10 +84,9 @@ object StateStore {
     * metadata, so a reload still reports unknown partitioning to
     * Spark; full join co-partitioning would need `bucketBy` +
     * `saveAsTable`. What this buys is write parallelism and a stable
-    * key→file layout, not a shuffle-free reload join.) With
-    * `numBuckets = 0` AQE sizes the bucket count to the data (a small
-    * ledger collapses to one file, a 100×-scale one fans out); a
-    * positive `numBuckets` pins the count.
+    * key→file layout, not a shuffle-free reload join.) AQE sizes the
+    * bucket count to the data (a small ledger collapses to one file, a
+    * 100×-scale one fans out).
     *
     * Because the temp write completes before `path` is touched, saving
     * a frame that was itself LOADED from `path` is safe
@@ -96,10 +95,9 @@ object StateStore {
     * which rolls the newest committed generation back in — readers see
     * the old ledger or the new one, never a half-written directory and
     * never a silently-empty one. */
-  def save(ledger: DataFrame, path: String, bucketCols: Seq[String] = Nil,
-      numBuckets: Int = 0): Unit =
+  def save(ledger: DataFrame, path: String, bucketCols: Seq[String] = Nil): Unit =
     swapIn(ledger.sparkSession, path) { (_, tmp) =>
-      bucketed(ledger, bucketCols, numBuckets).write.mode("overwrite").parquet(tmp.toString)
+      bucketed(ledger, bucketCols).write.mode("overwrite").parquet(tmp.toString)
     }
 
   /** Load a ledger saved by [[save]]; an absent path is an empty
@@ -289,7 +287,7 @@ object StateStore {
     val spark = rows.sparkSession
     settle(spark, path)
     swapIn(spark, path) { (fs, tmp) =>
-      bucketed(rows.withColumn(Stamp, lit(0L)), bucketCols, 0)
+      bucketed(rows.withColumn(Stamp, lit(0L)), bucketCols)
         .write.parquet(basePath(tmp.toString))
       fs.create(new Path(tmp, "_SUCCESS")).close()
     }
@@ -298,10 +296,8 @@ object StateStore {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def bucketed(df: DataFrame, bucketCols: Seq[String], numBuckets: Int): DataFrame =
-    if (bucketCols.nonEmpty && numBuckets > 0) df.repartition(numBuckets, bucketCols.map(col): _*)
-    else if (bucketCols.nonEmpty) df.repartition(bucketCols.map(col): _*)
-    else df
+  private def bucketed(df: DataFrame, bucketCols: Seq[String]): DataFrame =
+    if (bucketCols.nonEmpty) df.repartition(bucketCols.map(col): _*) else df
 
   /** The generation swap behind [[save]] and [[refresh]]: recover any
     * interrupted swap, `write` the new generation into a fresh `.tmp-*`

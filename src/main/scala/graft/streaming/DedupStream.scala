@@ -37,33 +37,25 @@ object DedupStream {
     * sink requires (a streaming `distinct` would need state; the raw
     * collision stream is the stateless, replay-safe form). */
   def flagAgainstCorpus(stream: DataFrame, corpusBands: DataFrame): DataFrame =
-    DedupQueries.rowBands(stream)
-      .join(corpusBands.select(col("doc_id").as("dup_of"), col("band")), Seq("band"))
-      .select(col("doc_id"), col("dup_of"), col("band"))
+    ProbeFold.pairs(DedupQueries.rowBands(stream), corpusBands.select("doc_id", "band"))
+      .select("doc_id", "dup_of", "band")
 
-  /** The SIMHASH twin of [[flagAgainstCorpus]] — q113's pigeonhole
-    * block family at ingest time: arriving docs derive per-row block
-    * signatures ([[DedupQueries.rowBlocks]], bit-for-bit the batch
+  /** The SIMHASH twin of [[flagAgainstCorpus]] — q113's Hamming block
+    * probe at ingest time: arriving docs derive per-row signatures
+    * ([[DedupQueries.rowBlocks]], bit-for-bit the batch
     * [[DedupQueries.simhashBlockFrame]] family), probe the static
-    * corpus block index on the block key, and the exact
-    * bit_count(xor) Hamming verify runs INLINE on the join output
+    * corpus signatures `(doc_id, h0..h3)` on [[ProbeFold.blockKeys]],
+    * and the exact Hamming verify runs INLINE on the join output
     * (signatures ride both sides — no state, no join-back, no
     * watermark), so a flag is emitted exactly for Hamming ≤
-    * [[DedupQueries.SimhashHammingMax]] pairs. Keeps BOTH near-dup
-    * detectors (MinHash bands + SimHash blocks) on one hash family
-    * across ingest and backfill. Output may repeat a pair once per
-    * colliding block; consumers dedup as their sink requires (the
-    * [[flagAgainstCorpus]] convention). */
-  def flagSimhashAgainstCorpus(stream: DataFrame, corpusBlocks: DataFrame): DataFrame = {
-    val k = DedupQueries.SimhashBlocks
-    DedupQueries.rowBlocks(stream)
-      .join(corpusBlocks.select(col("bk") +: (col("doc_id").as("dup_of") +:
-        (0 until k).map(j => col(s"sim$j").as(s"c_sim$j"))): _*), Seq("bk"))
-      .withColumn("hamming", expr((0 until k)
-        .map(j => s"bit_count(sim$j ^ c_sim$j)").mkString(" + ")).cast("int"))
-      .filter(col("hamming") <= DedupQueries.SimhashHammingMax)
-      .select(col("doc_id"), col("dup_of"), col("hamming"))
-  }
+    * [[ProbeFold.HammingMax]] pairs. Keeps BOTH near-dup detectors
+    * (MinHash bands + SimHash blocks) on one hash family across ingest
+    * and backfill. Output `(doc_id, dup_of, hamming)` may repeat a pair
+    * once per colliding block; consumers dedup as their sink requires
+    * (the [[flagAgainstCorpus]] convention). */
+  def flagSimhashAgainstCorpus(stream: DataFrame, corpusSigs: DataFrame): DataFrame =
+    ProbeFold.withinHamming(ProbeFold.pairs(ProbeFold.blockKeys()(DedupQueries.rowBlocks(stream)),
+      ProbeFold.blockKeys()(corpusSigs)), col("doc_id"), col("dup_of"))
 
   /** The CONTAINMENT twin of [[flagAgainstCorpus]] — q197's asymmetric
     * quote detection at ingest time: an arriving doc probes the static
@@ -123,9 +115,8 @@ object DedupStream {
     * and the intersection computed once per row. */
   private def quotePairs(stream: DataFrame, corpusBands: DataFrame,
       corpusSets: DataFrame): DataFrame =
-    DedupQueries.rowBandsWithSets(stream)
-      .join(corpusBands.select(col("doc_id").as("quoted_from"), col("band")),
-        Seq("band"))
+    ProbeFold.pairs(DedupQueries.rowBandsWithSets(stream), corpusBands.select("doc_id", "band"))
+      .withColumnRenamed("dup_of", "quoted_from")
       .filter(col("doc_id") =!= col("quoted_from"))
       .join(corpusSets.select(col("doc_id").as("quoted_from"),
         col("sd").as("corpus_sd")), Seq("quoted_from"))

@@ -274,6 +274,9 @@ object EventsStreaming {
         .parquet(path))
   }
 
+  /** Hash buckets of [[upsertRunningState]]'s state table. */
+  private[graft] val StateBuckets = 16
+
   /** Streaming upsert into the MERGE state table via foreachBatch —
     * the streaming form of the reference's KV writes (S6): each
     * micro-batch's per-user aggregates become a change set merged into
@@ -282,16 +285,12 @@ object EventsStreaming {
     * MERGE code runs unchanged inside the stream.
     *
     * 100 TB shape (SURVEY §4): the state table is hash-partitioned on
-    * the key into `numBuckets` directories, and each micro-batch
+    * the key into [[StateBuckets]] directories, and each micro-batch
     * rewrites ONLY the partitions containing changed keys (dynamic
     * partition overwrite) — never the whole table, never through one
     * task. Work per batch is O(touched partitions), independent of
-    * total state size; `numBuckets` scales with key cardinality. */
-  def upsertRunningState(
-      spark: SparkSession,
-      events: DataFrame,
-      stateDir: String,
-      numBuckets: Int = 16): Unit = {
+    * total state size; the bucket count scales with key cardinality. */
+  def upsertRunningState(spark: SparkSession, events: DataFrame, stateDir: String): Unit = {
     import graft.state.StateStore
     import org.apache.spark.sql.functions.{broadcast, col, hash, lit, max, pmod}
     val statePath = new org.apache.hadoop.fs.Path(stateDir)
@@ -302,7 +301,7 @@ object EventsStreaming {
         val incoming = batch
           .groupBy("user_id")
           .agg(max("n_events").as("n_events"), max("value_sum").as("value_sum"))
-          .withColumn("bucket", pmod(hash(col("user_id")), lit(numBuckets)))
+          .withColumn("bucket", pmod(hash(col("user_id")), lit(StateBuckets)))
         // only an absent state directory is empty state: an unreadable
         // one must fail the batch, not be rewritten from it alone
         val current =

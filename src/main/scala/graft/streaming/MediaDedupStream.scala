@@ -46,18 +46,15 @@ object MediaDedupStream {
   /** One micro-batch: flag arriving media against the pre-batch ledger
     * and within the batch (lowest-id attribution — deterministic under
     * replay, no arrival-order dependence), fold survivors; the steps
-    * are [[ProbeFold]]'s, the keys are [[MediaDedupIndex.blockKeys]]
-    * and the verify is the exact Hamming gate, inline on the carried
-    * hashes. Returns the flag rows (doc_id,
-    * modality, dup_of, hamming); a pair may repeat once per colliding
-    * block, consumers dedup as their sink requires (the [[DedupStream]]
-    * convention). */
-  def processBatch(spark: SparkSession, batchMedia: DataFrame, dir: String,
-      batchId: Long, maxHamming: Int = 3): DataFrame =
+    * are [[ProbeFold]]'s, the keys and the exact Hamming verify
+    * [[MediaDedupIndex]]'s, inline on the carried hashes. Returns the
+    * flag rows (doc_id, modality, dup_of, hamming); a pair may repeat
+    * once per colliding block, consumers dedup as their sink requires
+    * (the [[DedupStream]] convention). */
+  def processBatch(spark: SparkSession, batchMedia: DataFrame, dir: String, batchId: Long): DataFrame =
     ProbeFold(StateStore.loadLog(spark, ledgerPath(dir), ledgerSchema),
-      MediaDedupIndex.fingerprints(spark, batchMedia).localCheckpoint(), MediaDedupIndex.blockKeys,
-      ProbeFold.BatchStamp(batchId), capHotKeys = false, Seq("doc_id"))(
-      (cand, _) => MediaDedupIndex.verified(cand, maxHamming))
+      MediaDedupIndex.fingerprints(spark, batchMedia).localCheckpoint(), MediaDedupIndex.keysOf,
+      ProbeFold.BatchStamp(batchId), capHotKeys = false, Seq("doc_id"))(MediaDedupIndex.verify)
 
   /** Streaming wiring: foreachBatch drives [[processBatch]] per
     * micro-batch and appends the flags to an in-memory/parquet sink

@@ -182,7 +182,7 @@ class EventsStreamingSpec extends SparkSpecBase {
     // a second run touching one bucket only leaves the other buckets
     // in place: the write overwrote its partitions, not the table
     EventsStreaming.upsertRunningState(spark, EventsStreaming.readEvents(spark, path)
-      .filter(pmod(hash(col("user_id")), lit(16)) === 0), stateDir)
+      .filter(pmod(hash(col("user_id")), lit(EventsStreaming.StateBuckets)) === 0), stateDir)
     assert(spark.conf.get(key) == "static")
     val batch = Tables.events(spark, "/root/testdata/sf0.001")
       .groupBy("user_id").agg(count(lit(1)).as("n"))

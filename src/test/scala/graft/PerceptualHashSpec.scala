@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ids, MultimodalQueries}
+import graft.operators.{Ids, MediaDedupIndex, MultimodalQueries}
 import org.apache.spark.sql.functions._
 
 /** Ground-truth pins for q127's perceptual-hash dedup — the planted
@@ -37,7 +37,7 @@ class PerceptualHashSpec extends SparkSpecBase {
   test("pigeonhole candidates are complete: the block join equals " +
       "all-pairs hamming <= 3 on the same hashes") {
     try {
-      val hashed = MultimodalQueries.dhashFrame(spark,
+      val hashed = MediaDedupIndex.fingerprints(spark,
         MultimodalQueries.imageCorpusWithTwins(Tables.documents(spark, sf)))
         .localCheckpoint()
       val a = hashed.select(col("doc_id").as("doc_a"), col("h0").as("a0"),

@@ -281,10 +281,11 @@ class PlanAuditSpec extends SparkSpecBase {
       "key, signatures ride the block rows (no join-back), verify " +
       "precedes the distinct") {
     val plan = executed("q113_simhash_hamming_pairs")
-    // one equi self-join on bk — never a cartesian over signatures
+    // one equi self-join on the block key ProbeFold.blockKeys builds —
+    // never a cartesian over signatures
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(plan.contains("bk#"), plan)
+    assert(plan.contains("band#"), plan)
     // exactly ONE join: the hamming verify reads the block-row payload
     // instead of joining back to the signature index twice
     val joins = "Join".r.findAllIn(plan).size

@@ -86,15 +86,19 @@ class StateStoreSpec extends SparkSpecBase {
 
   test("save is a parallel multi-file write when bucketed by key " +
       "(the dir-level rename swap supplies atomicity, not a single file)") {
-    withLedgerDir { dir =>
+    // AQE would coalesce a 200-row ledger into one bucket; without it
+    // the key repartition writes one file per shuffle partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try withLedgerDir { dir =>
       val path = s"$dir/ledger"
-      StateStore.save(bigLedger, path, bucketCols = Seq("kind", "id"),
-        numBuckets = 4)
+      StateStore.save(bigLedger, path, bucketCols = Seq("kind", "id"))
       assert(partFiles(path).size > 1,
         s"expected a multi-file ledger, got ${partFiles(path).map(_.getName)}")
       assert(idsAt(path) == bigLedger.select("id")
         .collect().map(_.getString(0)).sorted.toSeq)
-    }
+    } finally spark.conf.set(coalesce, was)
   }
 
   test("load recovers a crash between stage-out and commit: committed " +

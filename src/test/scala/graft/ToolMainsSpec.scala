@@ -134,6 +134,22 @@ class ToolMainsSpec extends AnyFunSuite {
       s"hot-key caps or stamp filters outside ProbeFold: ${hits.mkString(", ")}")
   }
 
+  test("ProbeFold is the only place the operators build a Hamming gate") {
+    // the block keying and the bit_count verify of every 64-bit
+    // near-duplicate search live once; a DuckDB oracle's
+    // `bit_count(xor(` is SQL text, not a Spark expression, and is exempt
+    val graft = new File(sys.props.getOrElse("user.dir", "."), "src/main/scala/graft").toPath
+    val gate = "bit_count\\((?!xor\\()".r
+    val comment = "^\\s*(?:\\*|/\\*|//)".r
+    val hits = Seq("streaming", "operators")
+      .flatMap(d => Files.walk(graft.resolve(d)).iterator().asScala)
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("ProbeFold.scala"))
+      .filter(p => Files.readAllLines(p).asScala
+        .exists(l => comment.findFirstIn(l).isEmpty && gate.findFirstIn(l).isDefined))
+      .map(p => graft.relativize(p).toString).sorted
+    assert(hits.isEmpty, s"Hamming gates outside ProbeFold: ${hits.mkString(", ")}")
+  }
+
   test("src/main reads the project-field dimension in one place: EtlCli.resolveConfig") {
     // mustInit reads the dimension once and hands the resolved field
     // and option ids to the migration; a second read is a second
